@@ -23,8 +23,8 @@ object Bench {
     // (VERDICT r11 #2 — reporting availableProcessors false-trips its
     // cpus-ignored heuristic).
     val cores = sys.env.get("SPARK_GRAFT_CPUS")
-      .flatMap(s => scala.util.Try(s.toInt).toOption).getOrElse(32)
-    val defaultCores = cores == 32
+      .flatMap(s => scala.util.Try(s.toInt).toOption).getOrElse(Sessions.DefaultCpus)
+    val defaultCores = cores == Sessions.DefaultCpus
     def loadNow: Double = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage // -1 if unsupported
     val loadAtStart = loadNow
@@ -190,20 +190,20 @@ object Bench {
     val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.4f" }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
+    val failed = results.filter(_._2 < 0)
+    // The stdout protocol line stays compact, so it survives a 2,000-char
+    // log tail; the per-query map goes only to BENCH_RESULT_<sf>.json.
     val resultLine =
-      f"""{"metric":"total","value":$total%.4f,"unit":"sec","queries":$qs,"sf":"$sfDir","load":$loadAtStart%.2f,"cores":$cores,"contended":$contended}"""
-    // Persist the protocol line to a file: the driver's log-tail capture
-    // lost the stdout line in sbt noise two rounds running (BENCH_r03/r04
-    // "parsed": null) — a file copy makes the bench total always recoverable.
+      f"""{"metric":"total","value":$total%.4f,"unit":"sec","n":${results.size},"sf":"$sfDir","cores":$cores,"load":$loadAtStart%.2f,"contended":$contended,"failed":${failed.size}}"""
     // Full-suite runs only, so a filtered dev loop never clobbers it with a
-    // partial total. Non-default core counts (the driver's scaling run) get
-    // their own file so the 32-core snapshot is never overwritten.
+    // partial total. Non-default core counts (scaling runs) get
+    // their own file so the default-core snapshot is never overwritten.
     if (args.isEmpty)
       java.nio.file.Files.write(
         java.nio.file.Paths.get(
           s"BENCH_RESULT_${new java.io.File(sfDir).getName}" +
             (if (defaultCores) "" else s"_c$cores") + ".json"),
-        (resultLine + "\n").getBytes("UTF-8"))
+        (resultLine.stripSuffix("}") + s""","queries":$qs}""" + "\n").getBytes("UTF-8"))
 
     // Flag >50% slowdowns that SURVIVED the re-run (would have caught the
     // round-3 q44 UDF regression). Warnings to stderr — the stdout JSON
@@ -225,7 +225,6 @@ object Bench {
             f"$v%.2f s (x${v / floors(name)}%.1f across rounds; " +
             "median tripwire can't see slow drift — check the plan)")
       }
-    val failed = results.filter(_._2 < 0)
     failed.foreach { case (name, _) =>
       System.err.println(s"[bench] FAILED $name (-1)")
     }
@@ -242,7 +241,7 @@ object Bench {
       // faster 8-core times into BENCH_FLOORS and mixed core counts into the
       // medians (VERDICT r11 #3) — every later 32-core run then false-flags.
       System.err.println(
-        s"[bench] SPARK_GRAFT_CPUS=$cores != 32: medians/floors NOT merged " +
+        s"[bench] SPARK_GRAFT_CPUS=$cores != ${Sessions.DefaultCpus}: medians/floors NOT merged " +
           "(low-core scaling run; baselines are 32-core only)")
     else {
       // What merges into the history: normally the original median — but a
@@ -276,23 +275,14 @@ object Bench {
       java.nio.file.Files.write(floorPath, floorsJson.getBytes("UTF-8"))
     }
     spark.stop()
-    // Close-out hygiene (three rounds of review findings): the bench's own
-    // artifacts (medians/floors/result) and any driver-written round
-    // artifacts lying around untracked get committed here, best-effort, so
-    // `git status` is clean at review time. Full-suite runs only; opt out
-    // with SPARK_GRAFT_NO_AUTOCOMMIT=1.
-    if (args.isEmpty && !sys.env.get("SPARK_GRAFT_NO_AUTOCOMMIT").contains("1")) {
-      // BASELINE.md's side-by-side section is a pure function of the
-      // medians + oracle artifacts (VERDICT r10: a hand-typed mid-round
-      // snapshot survived into the published table) — regenerate it from
-      // the just-merged close-out state before committing, best-effort.
-      if (sfDir.endsWith("sf0.1")) try {
-        new ProcessBuilder("python3", "tools/baseline_sidebyside.py")
-          .inheritIO().start().waitFor()
-        ()
-      } catch { case _: Throwable => () }
-      commitArtifacts()
-    }
+    // BASELINE.md's side-by-side section is a pure function of the
+    // medians + oracle artifacts: regenerate it from the just-merged state
+    // on full sf0.1 runs, best-effort.
+    if (args.isEmpty && sfDir.endsWith("sf0.1")) try {
+      new ProcessBuilder("python3", "tools/baseline_sidebyside.py")
+        .inheritIO().start().waitFor()
+      ()
+    } catch { case _: Throwable => () }
     // The protocol line is printed LAST, after every tripwire warning and
     // all close-out chatter: the driver captures a bounded log TAIL, and
     // printing the JSON before the warnings pushed it out of that window
@@ -302,31 +292,4 @@ object Bench {
         (regressions.nonEmpty || failed.nonEmpty))
       sys.exit(1)
   }
-
-  /** Best-effort `git add <round artifacts> && git commit`: swallows every
-    * failure (no repo, nothing staged, git missing) — benchmarking must
-    * never fail on hygiene. */
-  private def commitArtifacts(): Unit = try {
-    if (!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(".git"))) return
-    val globs = scala.Seq("BENCH_*.json", "CORRECTNESS_*.json", "SCALE_*.json",
-      "STREAMSCALE_*.json", "LEAKCHECK.json", "COPYCHECK.json", "BASELINE*.md")
-    val cwd = java.nio.file.Paths.get(".")
-    val files = globs.flatMap { g =>
-      val m = java.nio.file.FileSystems.getDefault.getPathMatcher("glob:" + g)
-      val s = java.nio.file.Files.list(cwd)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.filter(p => m.matches(p.getFileName)).map(_.toString).toList
-      } finally s.close()
-    }
-    if (files.isEmpty) return
-    def git(cmd: String*): Int =
-      new ProcessBuilder(("git" +: cmd): _*).inheritIO().start().waitFor()
-    git(("add" +: files): _*)
-    // only commit when something is actually staged
-    if (git("diff", "--cached", "--quiet") != 0) {
-      git("commit", "-q", "-m", "bench close-out: stage round artifacts (auto)")
-      ()
-    }
-  } catch { case _: Throwable => () }
 }

@@ -11,6 +11,10 @@ import org.apache.spark.sql.SparkSession
   *   exactly to an instant — see [[Tables]]).
   */
 object Sessions {
+  /** Session parallelism when SPARK_GRAFT_CPUS is unset: local[32] with
+    * shuffle.partitions=32 (not Spark's 200). */
+  val DefaultCpus = 32
+
   def builder(cpus: String): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cpus]")
@@ -38,8 +42,7 @@ object Sessions {
       .config("spark.ui.enabled", "false")
 
   def get(): SparkSession = {
-    // driver contract: local[32] with shuffle.partitions=32 (not 200)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", DefaultCpus.toString)
     val spark = builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -147,17 +147,11 @@ object BatchOps {
   }
 
   /** `group_by` (`lib/processor/group_by.go:34-36`): split the stream into
-    * predicate groups, run per-group processors, re-merge. */
+    * predicate groups, run per-group processors, re-merge. The first
+    * matching group wins; unmatched rows drop. Routed by [[Router]]. */
   final case class GroupBy(groups: scala.Seq[(String, scala.Seq[Processor])]) extends Processor {
-    def apply(df: DataFrame): DataFrame = {
-      val conds = groups.map { case (check, _) => Blobl.envelopeExpr(df, check) }
-      // first matching predicate wins (reference semantics); unmatched drop
-      val outputs = groups.zipWithIndex.map { case ((_, procs), i) =>
-        val notEarlier = conds.take(i).foldLeft(lit(true))((a, c) => a && !coalesce(c, lit(false)))
-        Pipeline(procs)(df.filter(notEarlier && coalesce(conds(i), lit(false))))
-      }
-      outputs.reduce(_.unionByName(_))
-    }
+    def apply(df: DataFrame): DataFrame =
+      Router(df, groups.map { case (check, procs) => Blobl.envelopeExpr(df, check) -> Pipeline(procs) })
   }
 
   /** `archive` (`lib/processor/archive.go:241-251`): batch → single part.

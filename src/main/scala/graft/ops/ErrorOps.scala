@@ -48,39 +48,36 @@ object ErrorOps {
   }
 
   /** `try` (`lib/processor/try.go`): children run only on non-errored rows;
-    * errored rows pass through untouched. Implemented as split → transform →
-    * union, exact for row-wise children. */
+    * errored rows pass through untouched. Routed by [[Router]] on the flag,
+    * exact for row-wise children; the two arms' doc types unify. */
   final case class TryProc(children: scala.Seq[Processor]) extends Processor {
-    def apply(df: DataFrame): DataFrame = {
-      val ok = df.filter(col(Envelope.Error).isNull)
-      val err = df.filter(col(Envelope.Error).isNotNull)
-      Pipeline(children)(ok).unionByName(err, allowMissingColumns = false)
-    }
+    def apply(df: DataFrame): DataFrame =
+      Router(df, scala.Seq(Envelope.ok -> Pipeline(children), lit(true) -> Noop))
   }
 
-  /** try+catch fused: ok rows run `tryProcs`, errored rows run `catchProcs`
-    * and get their flag cleared. Use when the two arms produce the SAME doc
-    * schema (required for the union); the common Benthos idiom
-    * `try: [...]` followed by `catch: [...]` compiles to this. */
+  /** `try` directly followed by `catch`, as the Benthos pipeline runs them:
+    * rows already errored run `catchProcs`; ok rows run `tryProcs`, and the
+    * rows it flags then run `catchProcs`. Caught rows get their flag
+    * cleared. One router on the incoming flag, so each row's doc type is
+    * that of the arms it went through. `Config` compiles the adjacent pair
+    * to this. */
   final case class TryCatch(tryProcs: scala.Seq[Processor], catchProcs: scala.Seq[Processor])
       extends Processor {
-    def apply(df: DataFrame): DataFrame = {
-      val ok = Pipeline(tryProcs)(df.filter(col(Envelope.Error).isNull))
-      val repaired = Pipeline(catchProcs)(df.filter(col(Envelope.Error).isNotNull))
-        .withColumn(Envelope.Error, lit(null).cast("string"))
-      ok.unionByName(repaired)
-    }
+    def apply(df: DataFrame): DataFrame = Router(df, scala.Seq(
+      Envelope.ok -> Pipeline(tryProcs :+ CatchProc(catchProcs)),
+      lit(true) -> Pipeline(catchProcs :+ ClearError)))
   }
 
   /** `catch` (`lib/processor/catch.go`): children run ONLY on errored rows;
-    * the flag is cleared afterwards. */
+    * the flag is cleared afterwards. Routed by [[Router]] on the flag. */
   final case class CatchProc(children: scala.Seq[Processor]) extends Processor {
-    def apply(df: DataFrame): DataFrame = {
-      val ok = df.filter(col(Envelope.Error).isNull)
-      val err = df.filter(col(Envelope.Error).isNotNull)
-      val repaired = Pipeline(children)(err)
-        .withColumn(Envelope.Error, lit(null).cast("string"))
-      ok.unionByName(repaired)
-    }
+    def apply(df: DataFrame): DataFrame =
+      Router(df, scala.Seq(Envelope.ok -> Noop, lit(true) -> Pipeline(children :+ ClearError)))
+  }
+
+  /** Clears the `_error` flag. */
+  case object ClearError extends Processor {
+    def apply(df: DataFrame): DataFrame =
+      df.withColumn(Envelope.Error, lit(null).cast("string"))
   }
 }

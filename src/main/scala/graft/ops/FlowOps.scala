@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.blobl.{Mapping => Blobl}
 import graft.model.Envelope._
@@ -8,21 +8,15 @@ import graft.model.Envelope._
 /** Flow-control / composition operators (SURVEY §2.1 flow table). */
 object FlowOps {
 
-  /** `switch` (`lib/processor/switch.go`): case list with optional
-    * fall-through. Each case = filtered sub-pipeline; results union. A case
-    * with check None is a default (matches everything unmatched). */
+  /** `switch` (`lib/processor/switch.go`): case list, first matching case
+    * wins, rows matching no case drop. A case with check None is a default
+    * (matches everything unmatched). Routed by [[Router]]: cases that are
+    * pure maps/filters fuse into one projection. */
   final case class Switch(cases: scala.Seq[(Option[String], scala.Seq[Processor])]) extends Processor {
-    def apply(df: DataFrame): DataFrame = {
-      val conds: scala.Seq[Column] = cases.map {
-        case (Some(check), _) => coalesce(Blobl.envelopeExpr(df, check), lit(false))
-        case (None, _) => lit(true)
-      }
-      val outs = cases.zipWithIndex.map { case ((_, procs), i) =>
-        val notEarlier = conds.take(i).foldLeft(lit(true))((a, c) => a && !c)
-        Pipeline(procs)(df.filter(notEarlier && conds(i)))
-      }
-      outs.reduce(_.unionByName(_))
-    }
+    def apply(df: DataFrame): DataFrame =
+      Router(df, cases.map { case (check, procs) =>
+        check.map(Blobl.envelopeExpr(df, _)).getOrElse(lit(true)) -> Pipeline(procs)
+      })
   }
 
   /** `conditional` (deprecated two-armed switch). */

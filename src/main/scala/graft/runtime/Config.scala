@@ -169,7 +169,7 @@ object Config {
     val input = compileInput(asMap(root.getOrElse("input",
       throw new IllegalArgumentException("config: missing input"))))
     val procs = root.get("pipeline").map(asMap).flatMap(_.get("processors"))
-      .map(asList(_).map(p => compileProcessor(asMap(p)))).getOrElse(Nil)
+      .map(compileProcessors).getOrElse(Nil)
     val output = root.get("output").map(asMap).map(compileOutput)
       .getOrElse(Sinks.ConsoleSink())
     val streaming = root.get("input").map(asMap).exists(m =>
@@ -500,6 +500,15 @@ object Config {
     walk(p)
   }
 
+  /** A processor list. A `try` directly followed by a `catch` compiles to
+    * one [[E.TryCatch]]: the same rows and flags as the two in sequence,
+    * while a row's doc type is only that of the arms it ran. */
+  private def compileProcessors(list: Any): scala.Seq[Processor] =
+    asList(list).map(p => compileProcessor(asMap(p))).foldRight(List.empty[Processor]) {
+      case (E.TryProc(t), E.CatchProc(c) :: rest) => E.TryCatch(t, c) :: rest
+      case (p, rest) => p :: rest
+    }
+
   def compileProcessor(m: Map[String, Any]): Processor = {
     val (kind, conf) = one(m, "processor")
     // generic `parts` scoping (PartsFieldSpec on the deprecated
@@ -517,7 +526,7 @@ object Config {
       case "filter" => FilterProc(condString(m(kind)))
       case "noop" => Noop
       case "for_each" | "process_batch" =>
-        ForEach(asList(m(kind)).map(p => compileProcessor(asMap(p))))
+        ForEach(compileProcessors(m(kind)))
       case "dedupe" =>
         // with a `cache:` resource the reference form dedupes ACROSS
         // batches/runs (lib/processor/dedupe.go:53); without one it's
@@ -604,22 +613,22 @@ object Config {
         B.GroupBy(asList(m(kind)).map { g =>
           val gm = asMap(g)
           (condString(gm("check")),
-            asList(gm("processors")).map(p => compileProcessor(asMap(p))))
+            compileProcessors(gm("processors")))
         })
       case "switch" =>
         F.Switch(asList(m(kind)).map { c =>
           val cm = asMap(c)
           (cm.get("check").map(condString).filter(_.nonEmpty),
-            asList(cm("processors")).map(p => compileProcessor(asMap(p))))
+            compileProcessors(cm("processors")))
         })
       case "while" =>
         F.WhileProc(condString(conf("check")),
-          asList(conf("processors")).map(p => compileProcessor(asMap(p))),
+          compileProcessors(conf("processors")),
           conf.get("max_loops").map(_.toString.toInt).getOrElse(10))
       case "try" =>
-        E.TryProc(asList(m(kind)).map(p => compileProcessor(asMap(p))))
+        E.TryProc(compileProcessors(m(kind)))
       case "catch" =>
-        E.CatchProc(asList(m(kind)).map(p => compileProcessor(asMap(p))))
+        E.CatchProc(compileProcessors(m(kind)))
       case "bounds_check" =>
         E.BoundsCheck(
           conf.get("min_part_size").map(_.toString.toLong).getOrElse(0L),
@@ -718,20 +727,16 @@ object Config {
           .orElse(conf.get("path").map(p => s"root.$p = this"))
           .getOrElse("root = this")
         F.Branch(req,
-          asList(conf.getOrElse("processors", new java.util.ArrayList[Any]()))
-            .map(p => compileProcessor(asMap(p))),
+          compileProcessors(conf.getOrElse("processors", new java.util.ArrayList[Any]())),
           parseResultMap(res))
       case "conditional" =>
         F.Switch(scala.Seq(
           (Some(condString(conf("condition"))),
-            asList(conf.getOrElse("processors", new java.util.ArrayList[Any]()))
-              .map(p => compileProcessor(asMap(p)))),
+            compileProcessors(conf.getOrElse("processors", new java.util.ArrayList[Any]()))),
           (None,
-            asList(conf.getOrElse("else_processors", new java.util.ArrayList[Any]()))
-              .map(p => compileProcessor(asMap(p))))))
+            compileProcessors(conf.getOrElse("else_processors", new java.util.ArrayList[Any]())))))
       case "parallel" =>
-        ForEach(asList(conf.getOrElse("processors", new java.util.ArrayList[Any]()))
-          .map(p => compileProcessor(asMap(p))))
+        ForEach(compileProcessors(conf.getOrElse("processors", new java.util.ArrayList[Any]())))
       case "jsonschema" | "json_schema" =>
         // registry spelling is json_schema (lib/processor/constructor.go:164)
         E.JsonSchema(conf.get("schema").map(_.toString).getOrElse(
@@ -768,15 +773,13 @@ object Config {
           optStr(conf, "key", "content().string()"))
       case "branch" =>
         F.Branch(str(conf, "request_map"),
-          asList(conf.getOrElse("processors", new java.util.ArrayList[Any]()))
-            .map(p => compileProcessor(asMap(p))),
+          compileProcessors(conf.getOrElse("processors", new java.util.ArrayList[Any]())),
           parseResultMap(str(conf, "result_map")))
       case "workflow" | "process_dag" =>
         val branches = asMap(conf("branches")).toSeq.sortBy(_._1).map { case (_, b) =>
           val bm = asMap(b)
           F.Branch(str(bm, "request_map"),
-            asList(bm.getOrElse("processors", new java.util.ArrayList[Any]()))
-              .map(p => compileProcessor(asMap(p))),
+            compileProcessors(bm.getOrElse("processors", new java.util.ArrayList[Any]())),
             parseResultMap(str(bm, "result_map")))
         }
         F.Workflow.auto(branches)
@@ -966,8 +969,7 @@ object Config {
             val count = b.get("count").map(_.toString.toLong).getOrElse(0L)
             val bytes = b.get("byte_size").map(_.toString.toLong).getOrElse(0L)
             val check = b.get("check").map(_.toString).filter(_.nonEmpty)
-            val post = b.get("processors").map(asList).getOrElse(Nil)
-              .map(p => compileProcessor(asMap(p)))
+            val post = b.get("processors").map(compileProcessors).getOrElse(Nil)
             val rebatch: Processor =
               if (check.isDefined) B.SplitOnCheck(check.get)
               else if (bytes > 0) B.Split(1L, bytes)

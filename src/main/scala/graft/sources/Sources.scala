@@ -17,7 +17,12 @@ object Sources {
     * `internal/codec/reader.go:204-250`). codec ∈ lines | csv |
     * csv:<delim> | json | json_documents | parquet | all-bytes |
     * delim:<d> | chunker:<n> | tar | gzip/<inner> | auto. Deprecated
-    * aliases csv-gzip / tar-gzip normalize like the reference. */
+    * aliases csv-gzip / tar-gzip normalize like the reference.
+    *
+    * json / json_documents without a `schema` infer one, once per
+    * unchanged file listing (see [[JsonSchemas]]): re-reading files
+    * whose paths, lengths and modification times are all unchanged, under
+    * the same SQL conf, skips the inference scan. */
   def file(spark: SparkSession, path: String, codec0: String,
       schema: Option[StructType] = None, header: Boolean = true): DataFrame = {
     val meta = map(lit("path"), input_file_name())
@@ -55,9 +60,7 @@ object Sources {
         schema.foreach(s => r = r.schema(s))
         wrap(r.csv(path))
       case "json" | "json_documents" =>
-        var r = spark.read
-        schema.foreach(s => r = r.schema(s))
-        wrap(r.json(path))
+        wrap(schema.map(spark.read.schema(_).json(path)).getOrElse(JsonSchemas.read(spark, path)))
       case "parquet" => wrap(spark.read.parquet(path))
       case "all-bytes" =>
         val df = spark.read.format("binaryFile").load(path)
@@ -181,6 +184,47 @@ object Sources {
         (monotonically_increasing_id() * 1000000 + col("_pos")).as(Envelope.Seq))
 
   private def wrap(df: DataFrame): DataFrame = Envelope.wrapUnordered(df)
+
+  /** Inferred JSON schemas, keyed by the files a read would scan.
+    *
+    * `spark.read.json` without a schema runs an inference job, a full scan
+    * of the input, before the query is planned. The key is a digest of the
+    * path, the (path, length, modification time) of every file in Spark's
+    * own listing for it, and the session's SQL conf (this read sets no
+    * reader options). While that listing is unchanged the inferred schema
+    * is the same, so a hit hands it to the reader and no inference job
+    * runs. A miss, an empty listing or a failed listing reads as before.
+    * At most [[MaxEntries]] schemas are kept, least recently used first out.
+    */
+  private object JsonSchemas {
+    private val MaxEntries = 32
+    private val memo = new java.util.LinkedHashMap[String, StructType](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[String, StructType]): Boolean =
+        size() > MaxEntries
+    }
+
+    def read(spark: SparkSession, path: String): DataFrame = {
+      val key = fingerprint(spark, path)
+      key.flatMap(k => memo.synchronized(Option(memo.get(k)))) match {
+        case Some(s) => spark.read.schema(s).json(path)
+        case None =>
+          val df = spark.read.json(path)
+          key.foreach(k => memo.synchronized(memo.put(k, df.schema)))
+          df
+      }
+    }
+
+    private def fingerprint(spark: SparkSession, path: String): Option[String] =
+      scala.util.Try(org.apache.spark.sql.graft.GraftSqlShims.leafFiles(spark, path))
+        .toOption.filter(_.nonEmpty).map { files =>
+          val md = java.security.MessageDigest.getInstance("SHA-256")
+          def add(s: String): Unit = md.update((s + "\u0000").getBytes("UTF-8"))
+          add(path)
+          files.map(f => s"${f.getPath}|${f.getLen}|${f.getModificationTime}").sorted.foreach(add)
+          spark.conf.getAll.toSeq.sorted.foreach { case (k, v) => add(s"$k=$v") }
+          md.digest().map(b => f"$b%02x").mkString
+        }
+  }
 
   /** `generate` input (`lib/input/generate.go:140-151`): Bloblang mapping
     * producing `count` rows (batch); streaming variant uses the rate

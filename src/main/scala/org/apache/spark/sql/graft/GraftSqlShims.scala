@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow, UnsafeProjection}
 import org.apache.spark.sql.classic.ClassicConversions._
+import org.apache.spark.sql.execution.datasources.{DataSource, InMemoryFileIndex}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Package-private Spark SQL surface the engine needs (lives under
@@ -70,5 +71,14 @@ object GraftSqlShims {
       }
     }
     spark.internalCreateDataFrame(indexed, schema)
+  }
+
+  /** The leaf files `spark.read` would scan for `path`: Spark's own glob
+    * and listing (hidden files skipped, directories descended), no cache. */
+  def leafFiles(spark: SparkSession, path: String): scala.Seq[org.apache.hadoop.fs.FileStatus] = {
+    val roots = DataSource.checkAndGlobPathIfNecessary(scala.Seq(path),
+      spark.sessionState.newHadoopConf(), checkEmptyGlobPath = true,
+      checkFilesExist = true, enableGlobbing = true)
+    new InMemoryFileIndex(spark, roots, Map.empty, None).allFiles().toSeq
   }
 }

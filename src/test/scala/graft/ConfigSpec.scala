@@ -591,4 +591,42 @@ class ConfigSpec extends AnyFunSuite {
     val got = spark.read.textFile(out).collect().sorted
     assert(got.toSeq == scala.Seq("s3row1", "s3row2"))
   }
+
+  test("try directly followed by catch: rows the try arm flags run the catch arm") {
+    import org.apache.spark.sql.functions.{col, to_json}
+    val dir = Files.createTempDirectory("graft-cfg-try")
+    Files.write(dir.resolve("in.jsonl"), scala.Seq(
+      """{"id":1,"props":"{\"k\": 1}"}""",
+      """{"id":2,"props":"not json"}""",
+      """{"id":3,"props":"{\"k\": 3}"}""",
+      """{"id":4,"props":"{\"k\": 4""").mkString("\n").getBytes("UTF-8"))
+    val spec = Config.load(
+      s"""input:
+         |  file:
+         |    paths: [ "$dir/*.jsonl" ]
+         |    codec: json
+         |pipeline:
+         |  processors:
+         |    - try:
+         |        - bloblang: |
+         |            root.id = this.id
+         |            root.k = this.props.parse_json().k
+         |    - catch:
+         |        - bloblang: |
+         |            root.id = this.id
+         |            root.k = -1
+         |output:
+         |  drop: {}
+         |""".stripMargin)
+    assert(spec.pipeline == scala.Seq(graft.ops.ErrorOps.TryCatch(
+      scala.Seq(graft.ops.BloblangProc("root.id = this.id\nroot.k = this.props.parse_json().k\n")),
+      scala.Seq(graft.ops.BloblangProc("root.id = this.id\nroot.k = -1\n")))))
+    val out = graft.ops.Pipeline(spec.pipeline)(spec.input(spark))
+    assert(out.filter(col("_error").isNotNull).count() == 0)
+    val got = out.select(col("doc.id").cast("string"), to_json(col("doc.k"))).collect()
+      .map(r => Option(r.getString(0)).getOrElse("corrupt") -> r.getString(1)).toMap
+    // 2's props is not JSON, so the try arm flags it; the truncated line 4
+    // is a corrupt record whose null props parse to null, not to an error
+    assert(got == Map("1" -> "1", "2" -> "-1", "3" -> "3", "corrupt" -> null))
+  }
 }

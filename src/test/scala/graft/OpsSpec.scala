@@ -223,4 +223,123 @@ class OpsSpec extends AnyFunSuite {
       .collect().map(_.getString(0)).toSet
     assert(metas == Set("7", "9"))
   }
+
+  // ---------- routed processors: one fused projection vs the union of arms ----------
+
+  /** Not a Project/Filter, so an arm holding it takes the router's union
+    * path; the rows pass through unchanged. */
+  private case object Barrier extends Processor {
+    def apply(df: org.apache.spark.sql.DataFrame) = df.repartition(2)
+  }
+
+  /** Rows with a null `kind` (checks on it evaluate to null), an errored
+    * row, and a `s` that is not JSON. */
+  private def mixed = E.FlagError("this.v < 0", "negative")(env(
+    """{"id":1,"kind":"a","v":5,"s":"{\"k\":1}"}""",
+    """{"id":2,"kind":"b","v":-3,"s":"{\"k\":2}"}""",
+    """{"id":3,"v":40,"s":"nope"}""",
+    """{"id":4,"kind":"a","v":95,"s":"{\"k\":4}"}""",
+    """{"id":5,"kind":"c","v":12,"s":"{\"k\":5}"}""",
+    """{"id":6,"kind":"b","v":60,"s":"{\"k\":6}"}""",
+    """{"id":7,"kind":"a","v":-1,"s":"{\"k\":7}"}"""))
+
+  private def unions(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.analyzed.collectFirst {
+      case u: org.apache.spark.sql.catalyst.plans.logical.Union => u
+    }.isDefined
+
+  private def rows(df: org.apache.spark.sql.DataFrame): List[String] =
+    df.orderBy(Envelope.Seq).collect().map(_.toString).toList
+
+  /** `fused` is one projection (or, for a router nesting another, holds
+    * fused arms), `union` the union of arms, same rows. */
+  private def sameRows(fused: org.apache.spark.sql.DataFrame,
+      union: org.apache.spark.sql.DataFrame, nested: Boolean = false): List[String] = {
+    assert(nested || !unions(fused), fused.queryExecution.analyzed.treeString)
+    assert(unions(union))
+    assert(fused.schema.simpleString == union.schema.simpleString)
+    val got = rows(fused)
+    assert(got == rows(union))
+    got
+  }
+
+  private val switchCases = scala.Seq(
+    Some("this.kind == \"a\"") -> scala.Seq[Processor](BloblangProc(
+      "root = if this.v > 90 { deleted() } else { this }\nroot.tag = \"A\"")),
+    Some("this.kind == \"b\"") -> scala.Seq[Processor](
+      FilterProc("this.v > 10"), BloblangProc("root.id = this.id\nroot.tag = \"B\"")),
+    None -> scala.Seq[Processor](BloblangProc("root = this\nroot.tag = \"other\"")))
+
+  private def barred(cases: scala.Seq[(Option[String], scala.Seq[Processor])]) =
+    cases.map { case (c, ps) => c -> (ps :+ Barrier) }
+
+  test("switch: fused arms equal the union path (default case, null check, deleted(), filter)") {
+    val got = sameRows(F.Switch(switchCases)(mixed), F.Switch(barred(switchCases))(mixed))
+    // id 4 deleted in its arm, id 2 filtered in its arm; null kind → default
+    assert(got.size == 5)
+    val out = F.Switch(switchCases)(mixed)
+    assert(out.filter(col("doc.tag") === "other").select("doc.id").collect()
+      .map(_.getLong(0)).sorted.toList == List(3L, 5L))
+  }
+
+  test("switch without a default drops unmatched rows on both paths") {
+    val cases = switchCases.init
+    val got = sameRows(F.Switch(cases)(mixed), F.Switch(barred(cases))(mixed))
+    assert(got.size == 3) // ids 1, 6, 7
+  }
+
+  test("group_by: fused groups equal the union path") {
+    val groups = scala.Seq(
+      "this.v >= 50" -> scala.Seq[Processor](BloblangProc("root = this\nroot.tier = \"high\"")),
+      "this.kind == \"a\"" -> scala.Seq[Processor](BloblangProc("root = this\nroot.tier = \"a\"")))
+    val got = sameRows(B.GroupBy(groups)(mixed),
+      B.GroupBy(groups.map { case (c, ps) => c -> (ps :+ Barrier) })(mixed))
+    assert(got.size == 4) // ids 1, 4, 6, 7; the others match no group and drop
+  }
+
+  test("try, catch and try + catch: fused arms equal the union path") {
+    val t = scala.Seq[Processor](BloblangProc("root.id = this.id\nroot.k = this.s.parse_json().k"))
+    val c = scala.Seq[Processor](BloblangProc("root.id = this.id\nroot.k = -1"))
+    sameRows(E.TryProc(t)(mixed), E.TryProc(t :+ Barrier)(mixed))
+    sameRows(E.CatchProc(c)(mixed), E.CatchProc(c :+ Barrier)(mixed))
+    // the catch router nested in TryCatch's try arm is fused; its arm index
+    // would be evaluated once per output column in the outer projection,
+    // so the outer router keeps the union of its two arms
+    val got = sameRows(E.TryCatch(t, c)(mixed), E.TryCatch(t :+ Barrier, c :+ Barrier)(mixed),
+      nested = true)
+    assert(got.size == 7)
+  }
+
+  test("try arm's parse_json failures run the catch arm (Benthos try/catch)") {
+    val out = E.TryCatch(
+      scala.Seq(BloblangProc("root.id = this.id\nroot.k = this.s.parse_json().k")),
+      scala.Seq(BloblangProc("root.id = this.id\nroot.k = -1")))(mixed)
+    assert(out.filter(col(Envelope.Error).isNotNull).count() == 0)
+    val k = out.select(col("doc.id"), to_json(col("doc.k"))).collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    // 2 and 7 were flagged before, 3's `s` is not JSON: all repaired
+    assert(k == Map(1L -> "1", 2L -> "-1", 3L -> "-1", 4L -> "4", 5L -> "5", 6L -> "6", 7L -> "-1"))
+  }
+
+  test("a case holding a dedupe takes the union path") {
+    val out = F.Switch(scala.Seq(
+      Some("this.kind == \"a\"") -> scala.Seq[Processor](DedupeProc("this.kind")),
+      None -> scala.Seq[Processor](Noop)))(mixed)
+    assert(unions(out))
+    assert(out.count() == 5) // the three kind=a rows dedupe to one
+  }
+
+  test("dedupe → switch reads the dedupe's shuffle once: one final aggregate") {
+    val out = Pipeline(scala.Seq(DedupeProc("this.id"), F.Switch(switchCases)))(mixed)
+    val plan = out.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val finals = plan.collect {
+      case a: org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+          if a.aggregateExpressions.exists(_.mode ==
+            org.apache.spark.sql.catalyst.expressions.aggregate.Final) => a
+    }
+    assert(finals.size == 1, plan.treeString)
+  }
 }
