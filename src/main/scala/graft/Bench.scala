@@ -1,33 +1,58 @@
 package graft
 
 /** Benchmark main (driver contract): runs every SparkEntry query on
-  * SPARK_GRAFT_SF_DIR, 1 warmup + 3 timed runs each, reports per-query
-  * median wall seconds as ONE JSON line (protocol per BASELINE.md).
+  * SPARK_GRAFT_SF_DIR, 1 warmup + 3 timed runs each, and writes the
+  * per-query median wall seconds and plan fingerprints to
+  * `BENCH_RESULT_<sf>[_c<cores>].json`. Its last stdout line is the
+  * compact protocol line (BASELINE.md). Bench only measures and writes:
+  * comparing two result files is [[BenchDiff]]'s job.
   */
 object Bench {
+  /** Plan FINGERPRINT of a query: the pre-AQE physical plan's node names
+    * and tree shape (expr-ids stripped by using nodeName only), which is
+    * deterministic for fixed code and data. A wall regression WITH a
+    * fingerprint change names its own cause (the plan moved); one WITHOUT
+    * points at machine state. The counts say what kind of node appeared. */
+  final case class PlanFp(hash: String, nodes: Int, exchanges: Int,
+      sorts: Int, joins: Int) {
+    def json: String =
+      s"""{"hash":"$hash","nodes":$nodes,"exchanges":$exchanges,""" +
+        s""""sorts":$sorts,"joins":$joins}"""
+  }
+
+  def planFingerprint(df: org.apache.spark.sql.DataFrame): PlanFp = {
+    val sb = new StringBuilder
+    var nodes = 0; var ex = 0; var so = 0; var jo = 0
+    def walk(p: org.apache.spark.sql.execution.SparkPlan, d: Int): Unit = {
+      sb.append(d).append(':').append(p.nodeName).append('\n')
+      nodes += 1
+      val n = p.nodeName
+      if (n.contains("Exchange")) ex += 1
+      if (n.contains("Sort")) so += 1
+      if (n.contains("Join")) jo += 1
+      p.children.foreach(walk(_, d + 1))
+    }
+    walk(df.queryExecution.sparkPlan, 0)
+    PlanFp(f"${scala.util.hashing.MurmurHash3.stringHash(sb.toString)}%08x",
+      nodes, ex, so, jo)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Sessions.get()
 
-    // Contention guard: a driver bench co-scheduled with other work
-    // produces 1.5-3x inflated timings (r5: 1, r6: 10 false REGRESSION
-    // flags, every one reverting under isolation). Record the 1-min load
-    // average in the protocol line so readers can discount the numbers,
-    // and refuse to merge a contended run into the medians history the
-    // tripwire compares against.
+    // A bench co-scheduled with other work produces 1.5-3x inflated
+    // timings: the 1-min load average at start goes into the protocol
+    // line so readers can discount a contended run.
     val hostCores = Runtime.getRuntime.availableProcessors
-    // "cores" in the protocol line must be the SESSION's parallelism
-    // (SPARK_GRAFT_CPUS drives local[N] + shuffle.partitions in Sessions),
-    // not the host's core count: the driver's scaling run sets CPUS=8 on a
-    // 32-core host and reads this field to confirm the env was honored
-    // (VERDICT r11 #2 — reporting availableProcessors false-trips its
-    // cpus-ignored heuristic).
+    // "cores" is the SESSION's parallelism (SPARK_GRAFT_CPUS drives
+    // local[N] + shuffle.partitions in Sessions), not the host's core
+    // count: a scaling run sets CPUS=8 on a 32-core host and reads this
+    // field to confirm the env was honored.
     val cores = sys.env.get("SPARK_GRAFT_CPUS")
       .flatMap(s => scala.util.Try(s.toInt).toOption).getOrElse(Sessions.DefaultCpus)
-    val defaultCores = cores == Sessions.DefaultCpus
-    def loadNow: Double = java.lang.management.ManagementFactory
+    val loadAtStart = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage // -1 if unsupported
-    val loadAtStart = loadNow
     val contended = loadAtStart > hostCores
 
     def time(f: => Unit): Double = {
@@ -45,49 +70,13 @@ object Bench {
       t
     }
 
-    // Plan FINGERPRINT per query (r11, VERDICT r10 #8): the medians/floor
-    // tripwires flag THAT a query got slower but not WHY — q101's ×2.2
-    // cross-round creep arrived with no signal naming its cause. The
-    // pre-AQE physical plan (node names + tree shape, expr-ids stripped
-    // by using nodeName only) is deterministic for fixed code+data, so
-    // hashing it gives a cross-round change detector: a wall regression
-    // WITH a fingerprint change names its own cause (the plan moved); one
-    // WITHOUT points at machine state. Counts ride along so the warning
-    // says what kind of node appeared.
-    final case class PlanFp(hash: String, nodes: Int, exchanges: Int,
-        sorts: Int, joins: Int) {
-      def json: String =
-        s"""{"hash":"$hash","nodes":$nodes,"exchanges":$exchanges,""" +
-          s""""sorts":$sorts,"joins":$joins}"""
-    }
-    def planFingerprint(df: org.apache.spark.sql.DataFrame): PlanFp = {
-      val sb = new StringBuilder
-      var nodes = 0; var ex = 0; var so = 0; var jo = 0
-      def walk(p: org.apache.spark.sql.execution.SparkPlan, d: Int): Unit = {
-        sb.append(d).append(':').append(p.nodeName).append('\n')
-        nodes += 1
-        val n = p.nodeName
-        if (n.contains("Exchange")) ex += 1
-        if (n.contains("Sort")) so += 1
-        if (n.contains("Join")) jo += 1
-        p.children.foreach(walk(_, d + 1))
-      }
-      walk(df.queryExecution.sparkPlan, 0)
-      PlanFp(f"${scala.util.hashing.MurmurHash3.stringHash(sb.toString)}%08x",
-        nodes, ex, so, jo)
-    }
-
     // optional args = query-name filter (dev loop); driver passes none
     val names =
       if (args.nonEmpty) SparkEntry.queries.keys.toSeq.filter(args.contains).sorted
       else SparkEntry.queries.keys.toSeq.sorted
-    // per-query 1-min load at measurement time: lets a reader attribute a
-    // flagged query to a load spike without re-running the whole suite
-    val qload = scala.collection.mutable.Map[String, Double]()
     val fps = scala.collection.mutable.Map[String, PlanFp]()
-    val measured = names.map { name =>
+    val results = names.map { name =>
       try {
-        qload(name) = loadNow
         // build once outside time() for the fingerprint, then warm up on
         // the built frame — warmup wall is discarded either way, and for
         // the streaming gates (whose BUILDER runs the stream) this avoids
@@ -100,95 +89,6 @@ object Bench {
       } catch { case _: Throwable => name -> -1.0 }
     }
 
-    // No-regression tripwire baseline: last persisted medians for this sf.
-    val medianPath = java.nio.file.Paths.get(
-      s"BENCH_MEDIANS_${new java.io.File(sfDir).getName}.json")
-    val prior: Map[String, Double] =
-      if (java.nio.file.Files.exists(medianPath)) {
-        val txt = new String(java.nio.file.Files.readAllBytes(medianPath), "UTF-8")
-        "\"([^\"]+)\":(-?[0-9.]+)".r.findAllMatchIn(txt)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      } else Map.empty
-    // A REGRESSION must clear BOTH a relative bar (1.5×) and an absolute
-    // one (+0.5 s): sub-second queries drift ±0.2-0.4 s with session state
-    // (codegen-cache/registry floor) while their plans are untouched — r7
-    // flagged two such (q95 +0.40 s, q97 +0.23 s) that the judge
-    // adjudicated as floor drift, and a real plan defect on any query
-    // that matters at scale moves seconds, not fractions of the JVM
-    // floor. PlanAuditSpec pins the plan shapes the floor can't excuse.
-    def isRegression(name: String, v: Double): Boolean =
-      v >= 0.3 && prior.get(name).exists(p =>
-        p >= 0.1 && v > p * 1.5 && v - p > 0.5)
-
-    // All-time per-query FLOOR (min ever measured on an uncontended
-    // run), pinned in its own file: the rolling-median tripwire above
-    // absorbs slow creep (each round's slightly-slower median merges
-    // into the history and becomes the next round's baseline — a
-    // sub-second query can triple across rounds without ever clearing
-    // the +0.5 s bar in one step). Comparing against the pinned floor
-    // keeps cross-ROUND creep visible. Warn-only, never strict-fails:
-    // machine-state floor shifts (r7's bisect-confirmed class) would
-    // otherwise fail builds on unchanged code.
-    val floorPath = java.nio.file.Paths.get(
-      s"BENCH_FLOORS_${new java.io.File(sfDir).getName}.json")
-    val floors: Map[String, Double] =
-      if (java.nio.file.Files.exists(floorPath)) {
-        val txt = new String(java.nio.file.Files.readAllBytes(floorPath), "UTF-8")
-        "\"([^\"]+)\":(-?[0-9.]+)".r.findAllMatchIn(txt)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      } else Map.empty
-    def isCreep(name: String, v: Double): Boolean =
-      v >= 0.3 && floors.get(name).exists(f =>
-        f >= 0.05 && v > f * 2.0 && v - f > 0.4)
-
-    // Fingerprint tripwire: compare against the persisted plans, name the
-    // structural diff, then merge+persist (plans are load-independent, so
-    // contended runs update them too; filtered dev runs merge, not clobber).
-    val planPath = java.nio.file.Paths.get(
-      s"BENCH_PLANS_${new java.io.File(sfDir).getName}.json")
-    val priorFps: Map[String, PlanFp] =
-      if (java.nio.file.Files.exists(planPath)) {
-        val txt = new String(java.nio.file.Files.readAllBytes(planPath), "UTF-8")
-        ("\"([^\"]+)\":\\{\"hash\":\"([0-9a-f]+)\",\"nodes\":(\\d+)," +
-          "\"exchanges\":(\\d+),\"sorts\":(\\d+),\"joins\":(\\d+)\\}").r
-          .findAllMatchIn(txt).map(m => m.group(1) -> PlanFp(m.group(2),
-            m.group(3).toInt, m.group(4).toInt, m.group(5).toInt,
-            m.group(6).toInt)).toMap
-      } else Map.empty
-    fps.foreach { case (name, fp) =>
-      priorFps.get(name).filter(_.hash != fp.hash).foreach { p =>
-        System.err.println(
-          s"[bench] plan change: $name nodes ${p.nodes}->${fp.nodes} " +
-            s"exchanges ${p.exchanges}->${fp.exchanges} sorts ${p.sorts}->" +
-            s"${fp.sorts} joins ${p.joins}->${fp.joins} (hash ${p.hash}->" +
-            s"${fp.hash}; if this query also regressed, the plan moved — " +
-            "diff .explain against the prior round's code)")
-      }
-    }
-    locally {
-      val merged = priorFps ++ fps
-      val json = merged.toSeq.sortBy(_._1)
-        .map { case (k, v) => "\"" + k + "\":" + v.json }
-        .mkString("{", ",\n ", "}")
-      java.nio.file.Files.write(planPath, (json + "\n").getBytes("UTF-8"))
-    }
-
-    // Suspects re-run once AFTER the full sweep (minutes past the original
-    // window, so transient co-scheduling decorrelates; the re-run load is
-    // recorded alongside). The better of (median, re-run) is REPORTED —
-    // suppressing a transient flag — but the ORIGINAL median is what
-    // merges into the history below: merging the lucky re-run ratchets
-    // the baseline down, making future runs more likely to false-flag.
-    val rechecked: Map[String, Double] = measured.collect {
-      case (name, v) if isRegression(name, v) =>
-        qload(name + ":rerun") = loadNow
-        val rerun = try runOnce(name) catch { case _: Throwable => v }
-        name -> math.min(v, rerun)
-    }.toMap
-    val results = measured.map { case (n, v) => n -> rechecked.getOrElse(n, v) }
-
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.4f" }
-      .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     val failed = results.filter(_._2 < 0)
     // The stdout protocol line stays compact, so it survives a 2,000-char
@@ -198,98 +98,24 @@ object Bench {
     // Full-suite runs only, so a filtered dev loop never clobbers it with a
     // partial total. Non-default core counts (scaling runs) get
     // their own file so the default-core snapshot is never overwritten.
-    if (args.isEmpty)
+    if (args.isEmpty) {
+      val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.4f" }
+        .mkString("{", ",", "}")
+      val plans = fps.toSeq.sortBy(_._1)
+        .map { case (k, v) => "\"" + k + "\":" + v.json }.mkString("{", ",\n ", "}")
       java.nio.file.Files.write(
         java.nio.file.Paths.get(
           s"BENCH_RESULT_${new java.io.File(sfDir).getName}" +
-            (if (defaultCores) "" else s"_c$cores") + ".json"),
-        (resultLine.stripSuffix("}") + s""","queries":$qs}""" + "\n").getBytes("UTF-8"))
-
-    // Flag >50% slowdowns that SURVIVED the re-run (would have caught the
-    // round-3 q44 UDF regression). Warnings to stderr — the stdout JSON
-    // line is the driver protocol; SPARK_GRAFT_BENCH_STRICT=1 exits 1.
-    val regressions = results.filter { case (n, v) => isRegression(n, v) }
-    regressions.foreach { case (name, v) =>
-      System.err.println(
-        f"[bench] REGRESSION $name: ${prior(name)}%.2f s -> $v%.2f s (+${(v / prior(name) - 1) * 100}%.0f%%, confirmed by re-run; load ${qload.getOrElse(name, -1.0)}%.1f at measure, ${qload.getOrElse(name + ":rerun", -1.0)}%.1f at re-run, $cores cores)")
+            (if (cores == Sessions.DefaultCpus) "" else s"_c$cores") + ".json"),
+        (resultLine.stripSuffix("}") + s""","queries":$qs,"plans":$plans}""" + "\n")
+          .getBytes("UTF-8"))
     }
-    rechecked.foreach { case (name, v) =>
-      if (!isRegression(name, v))
-        System.err.println(
-          f"[bench] transient: $name median ${measured.toMap.apply(name)}%.2f s re-ran at $v%.2f s -- not flagged")
-    }
-    results.filter { case (n, v) => v >= 0 && isCreep(n, v) }
-      .foreach { case (name, v) =>
-        System.err.println(
-          f"[bench] creep: $name all-time floor ${floors(name)}%.2f s -> " +
-            f"$v%.2f s (x${v / floors(name)}%.1f across rounds; " +
-            "median tripwire can't see slow drift — check the plan)")
-      }
     failed.foreach { case (name, _) =>
       System.err.println(s"[bench] FAILED $name (-1)")
     }
-    // Merge into prior medians so a filtered dev run (args given) doesn't
-    // clobber the full-suite history the tripwire compares against — but
-    // NEVER from a contended run: merging inflated values degrades the
-    // baseline every time the driver benches on a busy box.
-    if (contended)
-      System.err.println(
-        f"[bench] load $loadAtStart%.1f > $hostCores cores at start: medians NOT merged (contended run; timings untrusted)")
-    else if (!defaultCores)
-      // The driver's low-core scaling run must not write its timings into
-      // the shared 32-core tripwire baselines: r11's c8 close-out min-merged
-      // faster 8-core times into BENCH_FLOORS and mixed core counts into the
-      // medians (VERDICT r11 #3) — every later 32-core run then false-flags.
-      System.err.println(
-        s"[bench] SPARK_GRAFT_CPUS=$cores != ${Sessions.DefaultCpus}: medians/floors NOT merged " +
-          "(low-core scaling run; baselines are 32-core only)")
-    else {
-      // What merges into the history: normally the original median — but a
-      // query whose re-run came in UNDER the regression threshold is a
-      // PROVEN load spike, and carrying the spike poisons the next round's
-      // tripwire (r9: nine queries baselined off one co-scheduling event).
-      // Seed those from the re-run, clamped to no lower than the prior
-      // baseline so a lucky re-run still can't ratchet the tripwire down.
-      val mergeVals = measured.filter(_._2 >= 0).toMap.map { case (n, v) =>
-        rechecked.get(n) match {
-          case Some(better) if !isRegression(n, better) =>
-            n -> prior.get(n).map(p => math.max(p, better)).getOrElse(better)
-          case _ => n -> v
-        }
-      }
-      val merged = prior ++ mergeVals
-      val mergedJson = merged.toSeq.sortBy(_._1)
-        .map { case (k, v) => "\"" + k + "\":" + f"$v%.4f" }
-        .mkString("{", ",", "}")
-      java.nio.file.Files.write(medianPath, mergedJson.getBytes("UTF-8"))
-      // floors only ever ratchet DOWN (min-merge) — the pinned
-      // creep baseline, immune to the median history's drift
-      val mergedFloors = (floors.keySet ++ measured.map(_._1)).flatMap { k =>
-        val cands = floors.get(k).toSeq ++
-          measured.toMap.get(k).filter(_ >= 0).toSeq
-        if (cands.isEmpty) None else Some(k -> cands.min)
-      }.toMap
-      val floorsJson = mergedFloors.toSeq.sortBy(_._1)
-        .map { case (k, v) => "\"" + k + "\":" + f"$v%.4f" }
-        .mkString("{", ",", "}")
-      java.nio.file.Files.write(floorPath, floorsJson.getBytes("UTF-8"))
-    }
     spark.stop()
-    // BASELINE.md's side-by-side section is a pure function of the
-    // medians + oracle artifacts: regenerate it from the just-merged state
-    // on full sf0.1 runs, best-effort.
-    if (args.isEmpty && sfDir.endsWith("sf0.1")) try {
-      new ProcessBuilder("python3", "tools/baseline_sidebyside.py")
-        .inheritIO().start().waitFor()
-      ()
-    } catch { case _: Throwable => () }
-    // The protocol line is printed LAST, after every tripwire warning and
-    // all close-out chatter: the driver captures a bounded log TAIL, and
-    // printing the JSON before the warnings pushed it out of that window
-    // four rounds running (BENCH_r08..r11 "parsed": null — VERDICT r11 #1).
+    // The protocol line is printed LAST, after all close-out chatter, so a
+    // reader that keeps only a bounded log tail still has it.
     println(resultLine)
-    if (sys.env.get("SPARK_GRAFT_BENCH_STRICT").contains("1") &&
-        (regressions.nonEmpty || failed.nonEmpty))
-      sys.exit(1)
   }
 }

@@ -1,22 +1,18 @@
 package graft
 
-import org.apache.spark.scheduler._
-import scala.collection.mutable
+import graft.obs.JobProfile
 
 /** Per-query job/stage profiler (guide §1: measure first).
   *
   * `runMain graft.QProf <query> [reps]` runs one declared query against
-  * SPARK_GRAFT_SF_DIR with a listener attached and prints, per Spark job:
-  * wall ms, stage count, task count, executor run/cpu time, shuffle
-  * read/write bytes, and the job group/description — so a multi-job query
-  * (localCheckpoints, adaptive counts, iterative algorithms) shows where
-  * its wall time actually goes before anything is changed.
+  * SPARK_GRAFT_SF_DIR and prints, per Spark job (read from
+  * [[graft.obs.JobProfile]]): wall ms, stage count, task count, executor
+  * run/cpu time, shuffle read/write bytes, and the job group/description —
+  * so a multi-job query (localCheckpoints, adaptive counts, iterative
+  * algorithms) shows where its wall time actually goes before anything is
+  * changed.
   */
 object QProf {
-  final case class JobRow(id: Int, desc: String, wallMs: Long,
-      stages: Int, tasks: Int, runMs: Long, cpuMs: Long,
-      shufR: Long, shufW: Long, spill: Long)
-
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: QProf <queryName...> [reps]")
     val (names, reps) =
@@ -25,72 +21,34 @@ object QProf {
       else (args.toSeq, 2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Sessions.get()
-    val sc = spark.sparkContext
-
-    val jobStart = mutable.Map[Int, (Long, String)]()
-    val jobStages = mutable.Map[Int, Int]()
-    val rows = mutable.ArrayBuffer[JobRow]()
-    // per-job accumulated task metrics (keyed by stage->job)
-    val stageJob = mutable.Map[Int, Int]()
-    val agg = mutable.Map[Int, (Int, Long, Long, Long, Long, Long)]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val desc = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("")
-        jobStart(e.jobId) = (System.nanoTime(), desc)
-        jobStages(e.jobId) = e.stageIds.size
-        e.stageIds.foreach(sid => stageJob(sid) = e.jobId)
-      }
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-        val jid = stageJob.getOrElse(e.stageId, -1)
-        val m = e.taskMetrics
-        if (m != null) {
-          val (n, run, cpu, sr, sw, sp) =
-            agg.getOrElse(jid, (0, 0L, 0L, 0L, 0L, 0L))
-          agg(jid) = (n + 1, run + m.executorRunTime,
-            cpu + m.executorCpuTime / 1000000L,
-            sr + m.shuffleReadMetrics.totalBytesRead,
-            sw + m.shuffleWriteMetrics.bytesWritten,
-            sp + m.diskBytesSpilled + m.memoryBytesSpilled)
-        }
-      }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = {
-        jobStart.remove(e.jobId).foreach { case (t0, desc) =>
-          val (n, run, cpu, sr, sw, sp) =
-            agg.getOrElse(e.jobId, (0, 0L, 0L, 0L, 0L, 0L))
-          rows += JobRow(e.jobId, desc, (System.nanoTime() - t0) / 1000000L,
-            jobStages.getOrElse(e.jobId, 0), n, run, cpu, sr, sw, sp)
-        }
-      }
-    }
-    sc.addSparkListener(listener)
+    val profile = JobProfile.attach(spark.sparkContext)
 
     def once(name: String, tag: String): Double = {
-      rows.clear()
+      profile.drain().take()
       val t0 = System.nanoTime()
       SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - t0) / 1e9
-      sc.getPersistentRDDs.values.foreach(_.unpersist(false))
-      // listener events are async; give the bus a moment to drain
-      Thread.sleep(400)
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      val prof = profile.drain().take()
+      val rows = prof.jobs.filter(_.endMs >= 0).map(j => (j, prof.countsOf(j.id)))
       println(f"== $name $tag: wall $wall%.3f s, ${rows.size} jobs ==")
-      val jobSum = rows.map(_.wallMs).sum
+      val jobSum = rows.map(_._1.wallMs).sum
       println(f"   sum(job walls) ${jobSum / 1000.0}%.3f s  " +
         f"(driver gap ${wall - jobSum / 1000.0}%.3f s)")
-      rows.sortBy(-_.wallMs).take(25).foreach { r =>
-        println(f"   job ${r.id}%3d ${r.wallMs}%6d ms  stages=${r.stages}%2d " +
-          f"tasks=${r.tasks}%4d run=${r.runMs}%6d cpu=${r.cpuMs}%6d " +
-          f"shufR=${r.shufR}%9d shufW=${r.shufW}%9d spill=${r.spill}%9d  ${r.desc.take(60)}")
+      rows.sortBy(-_._1.wallMs).take(25).foreach { case (j, c) =>
+        println(f"   job ${j.id}%3d ${j.wallMs}%6d ms  stages=${j.stageIds.size}%2d " +
+          f"tasks=${c.tasks}%4d run=${c.runMs}%6d cpu=${c.cpuMs}%6d " +
+          f"shufR=${c.shuffleReadBytes}%9d shufW=${c.shuffleWriteBytes}%9d " +
+          f"spill=${c.spillBytes}%9d  ${j.description.take(60)}")
       }
       // duplicate-eval signature: two jobs in one run reading the same
       // shuffle bytes with both cpu-heavy (range-sampling re-evaluation)
-      val heavies = rows.filter(_.cpuMs > 300).groupBy(_.shufR)
+      val heavies = rows.filter(_._2.cpuMs > 300).groupBy(_._2.shuffleReadBytes)
         .filter { case (_, g) => g.size >= 2 }
       heavies.foreach { case (sr, g) =>
-        println(s"   DUP-EVAL? shufR=$sr jobs=${g.map(_.id).mkString(",")} " +
-          s"cpuMs=${g.map(_.cpuMs).mkString(",")}")
+        println(s"   DUP-EVAL? shufR=$sr jobs=${g.map(_._1.id).mkString(",")} " +
+          s"cpuMs=${g.map(_._2.cpuMs).mkString(",")}")
       }
       wall
     }

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, FloatType}
+import graft.obs.JobProfile
 
 /** Scale-up probe: replicates the sf0.1 corpora at 1×/4×/16× with
   * per-copy decorrelating transforms and times the scale-sensitive
@@ -31,12 +32,13 @@ import org.apache.spark.sql.types.{ArrayType, FloatType}
   *    nodes; per-key structure identical).
   *
   * Emits one `SCALE <op> mult=<m> rows=<n> t=<s> out=<n>` line per
-  * measurement and writes the aggregate as JSON to SCALE_r8.json (or
+  * measurement and writes the aggregate as JSON to SCALE_r10.json (or
   * `--out <path>`), which ScaleLinearitySpec gates: wall-clock growth
   * per 4× step must stay ≤ 1.3× linear and pair outputs must not blow
   * up super-linearly. Each row also carries the measured SHUFFLE and
-  * SPILL bytes (task-metrics listener): byte counters are immune to the
-  * shared-host wall-clock noise (±2× on repeat runs of identical code),
+  * SPILL bytes (task metrics, from [[graft.obs.JobProfile]]): byte
+  * counters are immune to the shared-host wall-clock noise (±2× on
+  * repeat runs of identical code),
   * so a wall-clock wobble with exactly-linear bytes is adjudicated as
   * machine noise, super-linear bytes as a real plan defect.
   *
@@ -57,143 +59,59 @@ object ScaleProbe {
       spillDisk: Long = -1L, taskTimeMs: Long = -1L,
       cpuTimeMs: Long = -1L, gcTimeMs: Long = -1L, load: Double = -1.0)
 
-  /** Task-level counters across jobs. READ and WRITE shuffle bytes are
-    * tracked separately (r9): write bytes are what the plan PRODUCES
-    * (one copy per exchange — the honest data-growth signal); read
-    * bytes additionally count every RE-read — AQE skew-split
-    * replication of the non-skewed side, retry re-reads under spill
-    * pressure — so a linear write curve with a super-linear read curve
-    * localizes the growth to re-reads, not plan shape.
-    * `shuffleBytes` (read+write) is kept for the standing byte gates.
-    * [[retried]] counts non-first task attempts — nonzero means wall
-    * and read numbers carry retry inflation. Listener delivery is
-    * async; [[drain]] polls until the counters go quiet. */
-  private final class MetricsListener
-      extends org.apache.spark.scheduler.SparkListener {
-    private val read = new java.util.concurrent.atomic.AtomicLong
-    private val write = new java.util.concurrent.atomic.AtomicLong
-    private val spill = new java.util.concurrent.atomic.AtomicLong
-    private val spillDisk = new java.util.concurrent.atomic.AtomicLong
-    private val retried = new java.util.concurrent.atomic.AtomicLong
-    private val records = new java.util.concurrent.atomic.AtomicLong
-    private val runMs = new java.util.concurrent.atomic.AtomicLong
-    private val cpuMs = new java.util.concurrent.atomic.AtomicLong
-    private val gcMs = new java.util.concurrent.atomic.AtomicLong
-    override def onTaskEnd(
-        e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = e.taskMetrics
-      if (m != null) {
-        read.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        write.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        // TASK-TIME counters (r11, VERDICT r10 #1): wall-clock on a
-        // shared host wobbles ±2×, and byte counters can't see CPU
-        // growth — summed executorRunTime is the noise-immune WORK
-        // signal that splits "the plan computes more at this mult"
-        // (runTime super-linear) from "the box was busy" (runTime
-        // linear, wall inflated). cpu vs run separates compute from
-        // blocked-on-I/O/GC; gc names memory-pressure inflation.
-        runMs.addAndGet(m.executorRunTime)
-        cpuMs.addAndGet(m.executorCpuTime / 1000000L)
-        gcMs.addAndGet(m.jvmGCTime)
-        // memoryBytesSpilled is an ACCOUNTING metric — the estimated
-        // in-memory size of data at the moment it spills, counted per
-        // spill pass — so the legacy sum wildly overstates disk
-        // pressure whenever an exchange targets >200 partitions (the
-        // sort-based shuffle writer's passes all count: r9 measured
-        // 94.6 GB "spill" on a stage that WROTE 2.47 GB). spillDisk is
-        // the serialized bytes that actually hit disk — the honest
-        // memory-thrash signal the wall-exclusion rule keys on.
-        spill.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-        spillDisk.addAndGet(m.diskBytesSpilled)
-        // WRITTEN records: the compression-free data-growth signal —
-        // compressed bytes conflate codec adjacency (r9: jaccard's
-        // verify exchange compressed 20× at 32 partitions but only 9×
-        // at 205, turning exactly-linear records into a 1.76×-of-
-        // linear byte curve)
-        records.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-      }
-      if (e.taskInfo != null && e.taskInfo.attemptNumber > 0)
-        retried.incrementAndGet()
-      ()
-    }
-    def snapshot(): (Long, Long, Long, Long, Long, Long, Long, Long, Long) =
-      (read.get, write.get, spill.get, retried.get, records.get,
-        spillDisk.get, runMs.get, cpuMs.get, gcMs.get)
-    /** Wait for the listener bus to finish delivering the just-ended
-      * jobs' task events: poll until two consecutive reads agree. */
-    def drain(): (Long, Long, Long, Long, Long, Long, Long, Long, Long) = {
-      var prev = snapshot()
-      var quiet = false
-      val deadline = System.nanoTime() + 3000000000L
-      while (!quiet && System.nanoTime() < deadline) {
-        Thread.sleep(100)
-        val cur = snapshot()
-        quiet = cur == prev
-        prev = cur
-      }
-      prev
-    }
-  }
-
-  /** Per-STAGE byte attribution (r9, VERDICT r8 #1): the operators under
-    * probe run INTERNAL actions (localCheckpoint materializations,
+  /** The counters of one probe's work, from [[graft.obs.JobProfile]]
+    * (what each field is for):
+    *  - READ and WRITE shuffle bytes separately (r9): write bytes are what
+    *    the plan PRODUCES (one copy per exchange — the honest data-growth
+    *    signal); read bytes additionally count every RE-read — AQE
+    *    skew-split replication of the non-skewed side, retry re-reads
+    *    under spill pressure — so a linear write curve with a super-linear
+    *    read curve localizes the growth to re-reads, not plan shape.
+    *    `shuffleBytes` (read+write) is kept for the standing byte gates.
+    *  - retried: non-first task attempts — nonzero means wall and read
+    *    numbers carry retry inflation.
+    *  - TASK-TIME (r11, VERDICT r10 #1): wall-clock on a shared host
+    *    wobbles ±2×, and byte counters can't see CPU growth — summed
+    *    executorRunTime is the noise-immune WORK signal that splits "the
+    *    plan computes more at this mult" (runTime super-linear) from "the
+    *    box was busy" (runTime linear, wall inflated). cpu vs run
+    *    separates compute from blocked-on-I/O/GC; gc names
+    *    memory-pressure inflation.
+    *  - spill vs spill_disk: memoryBytesSpilled is an ACCOUNTING metric —
+    *    the estimated in-memory size of data at the moment it spills,
+    *    counted per spill pass — so the legacy memory+disk sum wildly
+    *    overstates disk pressure whenever an exchange targets >200
+    *    partitions (r9 measured 94.6 GB "spill" on a stage that WROTE
+    *    2.47 GB). spill_disk is the serialized bytes that actually hit
+    *    disk — the honest memory-thrash signal the wall-exclusion rule
+    *    keys on.
+    *  - WRITTEN shuffle records: the compression-free data-growth signal
+    *    — compressed bytes conflate codec adjacency (r9: jaccard's verify
+    *    exchange compressed 20× at 32 partitions but only 9× at 205,
+    *    turning exactly-linear records into a 1.76×-of-linear byte
+    *    curve).
+    *
+    * Per-STAGE attribution (r9, VERDICT r8 #1; `--attr`): the operators
+    * under probe run INTERNAL actions (localCheckpoint materializations,
     * sizing counts) whose query plans are gone by the final action, so
-    * plan-walking alone can't attribute their bytes — a stage listener
-    * can: every stage's name carries the action's callsite
-    * ("count at Dedup.scala:920"), and its accumulated task metrics
-    * carry the bytes. One ATTRSTAGE line per completed stage with
-    * nonzero shuffle/spill. */
-  private final class StageAttrListener
-      extends org.apache.spark.scheduler.SparkListener {
-    @volatile var tag: String = ""
-    // per-stage task RUN TIMES (r11, VERDICT r10 #1): byte attribution
-    // pinned minhash_pairs' 256× SPILL to its bucket exchange, but the
-    // remaining residual is WALL with exactly-linear bytes — only task
-    // time can attribute that. onTaskEnd buffers each task's runtime
-    // per stage; onStageCompleted prints sum/cpu/gc plus max-vs-median
-    // task (max ≫ p50 = one straggling partition, i.e. key skew or a
-    // hot bucket chain; max ≈ p50 with super-linear sum = the whole
-    // stage genuinely computes more per row at this mult).
-    private val durs = new java.util.concurrent.ConcurrentHashMap[
-      Int, java.util.concurrent.ConcurrentLinkedQueue[Long]]()
-    override def onTaskEnd(
-        e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      if (tag.nonEmpty && e.taskMetrics != null) {
-        durs.computeIfAbsent(e.stageId,
-          _ => new java.util.concurrent.ConcurrentLinkedQueue[Long]())
-          .add(e.taskMetrics.executorRunTime)
-        ()
-      }
-    }
-    override def onStageCompleted(
-        e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      val si = e.stageInfo
-      val q = durs.remove(si.stageId)
-      if (tag.nonEmpty) {
-        val m = si.taskMetrics
-        if (m != null) {
-          val rd = m.shuffleReadMetrics.totalBytesRead
-          val wr = m.shuffleWriteMetrics.bytesWritten
-          val sp = m.memoryBytesSpilled + m.diskBytesSpilled
-          val sd = m.diskBytesSpilled
-          val rc = m.shuffleWriteMetrics.recordsWritten
-          val run = m.executorRunTime
-          val cpu = m.executorCpuTime / 1000000L
-          val gc = m.jvmGCTime
-          val (mx, p50) =
-            if (q == null || q.isEmpty) (0L, 0L)
-            else {
-              val a = q.toArray(Array.empty[java.lang.Long]).map(_.toLong).sorted
-              (a.last, a(a.length / 2))
-            }
-          if (rd > 0 || wr > 0 || sp > 0 || run > 1000)
-            println(s"ATTRSTAGE $tag stage=${si.stageId} tasks=${si.numTasks} " +
-              s"read=$rd write=$wr spill=$sp spill_disk=$sd records=$rc " +
-              s"run_ms=$run cpu_ms=$cpu gc_ms=$gc task_max_ms=$mx task_p50_ms=$p50 " +
-              s"name=${si.name.takeWhile(_ != '\n')}")
-        }
-      }
-    }
+    * plan-walking alone can't attribute their bytes — the stage records
+    * can: every stage's name carries the action's callsite ("count at
+    * Dedup.scala:920"). One ATTRSTAGE line per stage with nonzero
+    * shuffle/spill or over 1 s of task time, with the max-vs-median task
+    * run time (r11: max ≫ p50 = one straggling partition, i.e. key skew or
+    * a hot bucket chain; max ≈ p50 with super-linear sum = the whole stage
+    * genuinely computes more per row at this mult). */
+  private def attrStage(tag: String, s: JobProfile.Stage): Unit = {
+    val c = s.counts
+    val (mx, p50) =
+      if (s.taskRunMs.isEmpty) (0L, 0L)
+      else { val a = s.taskRunMs.sorted; (a.last, a(a.length / 2)) }
+    if (c.shuffleReadBytes > 0 || c.shuffleWriteBytes > 0 || c.spillBytes > 0 || c.runMs > 1000)
+      println(s"ATTRSTAGE $tag stage=${s.id} tasks=${c.tasks} " +
+        s"read=${c.shuffleReadBytes} write=${c.shuffleWriteBytes} spill=${c.spillBytes} " +
+        s"spill_disk=${c.spillDiskBytes} records=${c.records} " +
+        s"run_ms=${c.runMs} cpu_ms=${c.cpuMs} gc_ms=${c.gcMs} task_max_ms=$mx task_p50_ms=$p50 " +
+        s"name=${s.name}")
   }
 
   /** Per-node SQL-metric attribution (r9, VERDICT r8 #1): walk the
@@ -244,7 +162,7 @@ object ScaleProbe {
       if (i >= 0) {
         if (i + 1 >= args.length) usage("--out requires a path argument")
         (args(i + 1), args.patch(i, Nil, 2).toSeq)
-      } else ("SCALE_r8.json", args.toSeq)
+      } else ("SCALE_r10.json", args.toSeq)
     }
     // --ops a,b,c limits the run to named families (corpora build lazily,
     // so a targeted 64x point doesn't pay the full-suite 64x cost)
@@ -397,30 +315,36 @@ object ScaleProbe {
     def loadNow: Double = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
 
-    val metrics = new MetricsListener
-    spark.sparkContext.addSparkListener(metrics)
-    val stageAttr = new StageAttrListener
-    if (attr) spark.sparkContext.addSparkListener(stageAttr)
-
+    val profile = JobProfile.attach(spark.sparkContext)
     val buf = scala.collection.mutable.ArrayBuffer.empty[Result]
+    // runs `f` and hands back what its jobs counted; nothing before it
+    // (corpus materialization, the previous probe) is included
+    def measured[A](op: String, mult: Int)(f: => A): (A, JobProfile.Counts) = {
+      profile.drain().take()
+      val a = f
+      val prof = profile.drain().take()
+      if (attr) prof.stages.foreach(attrStage(s"$op mult=$mult", _))
+      (a, prof.total)
+    }
+    def record(op: String, mult: Int, rowsIn: Long, t: Double, n: Long,
+        cross: Long, c: JobProfile.Counts): Unit = {
+      val (rd, wr) = (c.shuffleReadBytes, c.shuffleWriteBytes)
+      println(f"SCALE $op mult=$mult rows=$rowsIn t=$t%.2f s out=$n" +
+        (if (cross >= 0) s" cross=$cross" else "") + " " +
+        f"shuffle=${rd + wr} spill=${c.spillBytes} read=$rd write=$wr " +
+        f"retried=${c.retried} records=${c.records} spill_disk=${c.spillDiskBytes} " +
+        f"run_ms=${c.runMs} cpu_ms=${c.cpuMs} gc_ms=${c.gcMs}")
+      buf += Result(op, mult, rowsIn, t, n, cross, rd + wr, c.spillBytes,
+        rd, wr, c.retried, c.records, c.spillDiskBytes,
+        c.runMs, c.cpuMs, c.gcMs, loadNow)
+    }
     def probe(op: String, mult: Int, rowsIn: Long)(f: => Long): Unit = {
       if (ops.nonEmpty && !ops(op)) return
-      val (rd0, wr0, sp0, rt0, rc0, sd0, rn0, cp0, gc0) = metrics.drain()
-      if (attr) stageAttr.tag = s"$op mult=$mult"
-      val (t, n) = time(f)
-      val (rd1, wr1, sp1, rt1, rc1, sd1, rn1, cp1, gc1) = metrics.drain()
-      if (attr) stageAttr.tag = ""
-      val (rd, wr) = (rd1 - rd0, wr1 - wr0)
-      println(f"SCALE $op mult=$mult rows=$rowsIn t=$t%.2f s out=$n " +
-        f"shuffle=${rd + wr} spill=${sp1 - sp0} read=$rd write=$wr " +
-        f"retried=${rt1 - rt0} records=${rc1 - rc0} spill_disk=${sd1 - sd0} " +
-        f"run_ms=${rn1 - rn0} cpu_ms=${cp1 - cp0} gc_ms=${gc1 - gc0}")
-      buf += Result(op, mult, rowsIn, t, n, -1L, rd + wr, sp1 - sp0,
-        rd, wr, rt1 - rt0, rc1 - rc0, sd1 - sd0,
-        rn1 - rn0, cp1 - cp0, gc1 - gc0, loadNow)
+      val ((t, n), c) = measured(op, mult)(time(f))
+      record(op, mult, rowsIn, t, n, -1L, c)
       // leaked localCheckpoint blocks from one family otherwise inflate
       // the NEXT family's wall via block-manager memory pressure (the
-      // same effect Bench guards per-query); metrics are drained above,
+      // same effect Bench guards per-query); metrics are taken above,
       // so the cleanup never pollutes the counters. BLOCKING: the async
       // form left blocks alive into the next family — the r9 256× full
       // run OOM'd at family 13 (AGGREGATE_OUT_OF_MEMORY) under the
@@ -433,30 +357,21 @@ object ScaleProbe {
     def probePairs(op: String, mult: Int, rowsIn: Long)
         (f: => DataFrame): Unit = {
       if (ops.nonEmpty && !ops(op)) return
-      val (rd0, wr0, sp0, rt0, rc0, sd0, rn0, cp0, gc0) = metrics.drain()
-      if (attr) stageAttr.tag = s"$op mult=$mult"
-      val t0 = System.nanoTime()
-      val aggDf = f.agg(
-        count(lit(1)).as("n"),
-        coalesce(sum(when(floor(col("id_a") / 1000000L) =!=
-          floor(col("id_b") / 1000000L), 1L).otherwise(0L)), lit(0L))
-          .as("x"))
-      // collect(), not head(): head() re-plans through limit(1) as a
-      // SEPARATE execution, so dumpPlanMetrics below would walk a plan
-      // whose metrics never populated (r10: silent empty ATTR dump)
-      val row = aggDf.collect()(0)
-      val t = (System.nanoTime() - t0) / 1e9
-      val (n, x) = (row.getLong(0), row.getLong(1))
-      val (rd1, wr1, sp1, rt1, rc1, sd1, rn1, cp1, gc1) = metrics.drain()
-      val (rd, wr) = (rd1 - rd0, wr1 - wr0)
-      println(f"SCALE $op mult=$mult rows=$rowsIn t=$t%.2f s out=$n cross=$x " +
-        f"shuffle=${rd + wr} spill=${sp1 - sp0} read=$rd write=$wr " +
-        f"retried=${rt1 - rt0} records=${rc1 - rc0} spill_disk=${sd1 - sd0} " +
-        f"run_ms=${rn1 - rn0} cpu_ms=${cp1 - cp0} gc_ms=${gc1 - gc0}")
-      if (attr) { stageAttr.tag = ""; dumpPlanMetrics(op, mult, aggDf) }
-      buf += Result(op, mult, rowsIn, t, n, x, rd + wr, sp1 - sp0,
-        rd, wr, rt1 - rt0, rc1 - rc0, sd1 - sd0,
-        rn1 - rn0, cp1 - cp0, gc1 - gc0, loadNow)
+      val ((t, aggDf, row), c) = measured(op, mult) {
+        val t0 = System.nanoTime()
+        val aggDf = f.agg(
+          count(lit(1)).as("n"),
+          coalesce(sum(when(floor(col("id_a") / 1000000L) =!=
+            floor(col("id_b") / 1000000L), 1L).otherwise(0L)), lit(0L))
+            .as("x"))
+        // collect(), not head(): head() re-plans through limit(1) as a
+        // SEPARATE execution, so dumpPlanMetrics below would walk a plan
+        // whose metrics never populated (r10: silent empty ATTR dump)
+        val row = aggDf.collect()(0)
+        ((System.nanoTime() - t0) / 1e9, aggDf, row)
+      }
+      record(op, mult, rowsIn, t, row.getLong(0), row.getLong(1), c)
+      if (attr) dumpPlanMetrics(op, mult, aggDf)
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
     }
 

@@ -19,7 +19,6 @@ final case class TC(col: Column, tpe: Option[DataType],
   def isString: Boolean = tpe.contains(StringType)
   def isArray: Boolean = tpe.exists(_.isInstanceOf[ArrayType])
   def isMap: Boolean = tpe.exists(_.isInstanceOf[MapType])
-  def isStruct: Boolean = tpe.exists(_.isInstanceOf[StructType])
   def isVariant: Boolean = tpe.exists(_.isInstanceOf[VariantType])
   def elemType: Option[DataType] = tpe.collect { case ArrayType(e, _) => e }
   /** Merge an upstream error condition into this value's error channel

@@ -124,7 +124,6 @@ object Parser {
     def isIdent(s: String): Boolean = peek match {
       case TIdent(`s`, _) => true; case _ => false
     }
-    def eatIdent(s: String): Boolean = { val r = isIdent(s); if (r) pos += 1; r }
   }
 
   def parseMapping(src: String): Program = {

@@ -40,10 +40,6 @@ object Targets {
     out.toSet
   }
 
-  /** Root paths written by the program (empty list = whole root). */
-  def assignmentPaths(prog: Program): Set[List[String]] =
-    prog.stmts.collect { case Assign(RootPath(segs), _) => segs }.toSet
-
   /** `this`-rooted field chain (this.a.b → [a,b]; bare `this` → []) or
     * `json("a.b")`. */
   private def pathOf(e: Expr): Option[List[String]] = e match {

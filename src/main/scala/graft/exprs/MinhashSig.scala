@@ -7,13 +7,16 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** One-pass MinHash signature: k-gram shingles → md5 → per-seed rotated-hex
-  * minima, all inside a single expression eval. Exactly the portable
-  * scheme of `Dedup.minhashSigTable` (min over shingles of
-  * `rot_{8·seed}(md5hex(shingle))`) but with ZERO intermediate rows/
-  * arrays/UTF8String churn: one reused MessageDigest, byte-level hex,
-  * in-place min tracking. Replaces an explode + groupBy stage with a
-  * projection. */
+/** One-pass MinHash signature, md5-rotation scheme (engine-portable: the
+  * DuckDB oracle recomputes it with md5 and substring). Each distinct
+  * character k-gram of the text (the whole text when it is at most k
+  * characters) is hashed once to its 32-char lowercase md5 hex; hash
+  * function `seed` is that hex rotated left by `8·seed` characters, and
+  * signature entry `seed` is the lexicographic minimum of the rotated
+  * strings over all shingles. Rotations repeat after 4 seeds, so at most
+  * 4 entries are independent. Runs inside a single expression eval: one
+  * reused MessageDigest, byte-level hex, in-place min tracking, no
+  * intermediate rows or arrays. */
 case class MinhashSigExpr(child: Expression, k: Int, numHashes: Int)
     extends UnaryExpression with CodegenFallback {
   override def dataType: DataType = ArrayType(StringType)

@@ -24,22 +24,6 @@ object Dedup {
   def charShingles(text: Column, k: Int): Column =
     graft.exprs.CharShinglesExpr.column(text, k, distinct = true)
 
-  /** All character k-gram shingles (with duplicates — cheaper when the
-    * consumer is an aggregate like min that ignores multiplicity). */
-  def charShinglesRaw(text: Column, k: Int): Column =
-    graft.exprs.CharShinglesExpr.column(text, k, distinct = false)
-
-  /** MinHash signature (engine-portable flavor): md5 each shingle ONCE,
-    * then derive per-seed hashes by hex-rotation — min of the rotated hex
-    * strings. One md5 per shingle regardless of signature width (the naive
-    * per-seed-md5 scheme cost numHashes× the hashing). */
-  /** Distinct hex-rotation offset per seed: seeds 0-3 keep the original
-    * 8-char (32-bit) rotations for oracle parity; seeds 4+ take the
-    * remaining 28 nibble offsets, so up to 32 independent hash functions
-    * (the old (seed*8)%32 scheme silently cycled after 4 — m4 == m0). */
-  private val rotOffsets: IndexedSeq[Int] =
-    IndexedSeq(0, 8, 16, 24) ++ (1 until 32).filterNot(Set(8, 16, 24))
-
   /** Label the Spark jobs a blocking step submits (guide §1.5) — the
     * multi-action operators here (jaccardJoinExact) are unreadable in
     * job-level profiles without it. Thread-local, restored after. */
@@ -49,51 +33,9 @@ object Dedup {
     try f finally sc.setJobDescription(null)
   }
 
-  private def rotOffset(seed: Int): Int = {
-    require(seed < rotOffsets.length,
-      s"md5 hex rotation supports at most ${rotOffsets.length} seeds; " +
-        "use the xxhash64 'fast' flavor for wider signatures")
-    rotOffsets(seed)
-  }
-
-  def minhashSignature(shingles: Column, numHashes: Int): Column = {
-    val hashes = transform(shingles, s => md5(s))
-    array((0 until numHashes).map { seed =>
-      val off = rotOffset(seed)
-      if (off == 0) array_min(hashes)
-      else array_min(transform(hashes, h =>
-        concat(substring(h, off + 1, 32), substring(h, 1, off))))
-    }: _*)
-  }
-
-  /** Fast signature for internal LSH use (not oracle-portable): native
-    * codegen'd xxhash64 with per-seed salt. */
-  def minhashSignatureFast(shingles: Column, numHashes: Int): Column =
-    array((0 until numHashes).map { seed =>
-      array_min(transform(shingles, s => xxhash64(lit(seed), s)))
-    }: _*)
-
-  /** Signature as a TABLE via explode + partial-agg min — the columnar
-    * path: no per-row array materialization, map-side combine shrinks the
-    * shuffle to one row per doc. Portable md5-rotation flavor.
-    * Output: (id, m0..m{n-1}). */
-  def minhashSigTable(df: DataFrame, idCol: String, textCol: String,
-      shingleK: Int, numHashes: Int): DataFrame = {
-    val ex = df.select(col(idCol).as("id"),
-        explode(charShinglesRaw(col(textCol), shingleK)).as("s"))
-      .select(col("id"), md5(col("s")).as("h"))
-    val aggs = (0 until numHashes).map { seed =>
-      val off = rotOffset(seed)
-      val rot = if (off == 0) col("h")
-        else concat(substring(col("h"), off + 1, 32), substring(col("h"), 1, off))
-      min(rot).as(s"m$seed")
-    }
-    ex.groupBy(col("id")).agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** Native one-pass signature (same md5-rotation scheme as
-    * [[minhashSigTable]], ≤4 independent seeds): a single projection, no
-    * explode/shuffle. Output: (id, m0..m{n-1}). */
+  /** Portable MinHash signature (the md5-rotation scheme of
+    * [[graft.exprs.MinhashSigExpr]], ≤4 independent seeds): a single
+    * projection, no explode/shuffle. Output: (id, m0..m{n-1}). */
   def minhashSigNative(df: DataFrame, idCol: String, textCol: String,
       shingleK: Int, numHashes: Int): DataFrame = {
     val sig = graft.exprs.MinhashSigExpr.column(col(textCol), shingleK, numHashes)
@@ -103,26 +45,6 @@ object Dedup {
       .select((col("id") +:
         (0 until numHashes).map(i => element_at(col("_sig"), i + 1).as(s"m$i"))): _*)
   }
-
-  /** xxhash64 flavor of [[minhashSigTable]] (internal LSH use). */
-  def minhashSigTableFast(df: DataFrame, idCol: String, textCol: String,
-      shingleK: Int, numHashes: Int): DataFrame = {
-    val ex = df.select(col(idCol).as("id"),
-      explode(charShinglesRaw(col(textCol), shingleK)).as("s"))
-    val aggs = (0 until numHashes).map { seed =>
-      min(xxhash64(lit(seed), col("s"))).as(s"m$seed")
-    }
-    ex.groupBy(col("id")).agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** LSH band keys: signature split into `bands` groups of `rowsPerBand`;
-    * each band hashes to one bucket key (band index prefixed so buckets
-    * from different bands never collide). */
-  def lshBandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    array((0 until bands).map { b =>
-      md5(concat(lit(s"$b|"),
-        concat_ws("|", slice(sig, b * rowsPerBand + 1, rowsPerBand))))
-    }: _*)
 
   /** Exact dedup: keep the smallest id per key (hash-groupBy; map-side
     * combine makes this a single shuffle of (key → min id)).

@@ -49,8 +49,6 @@ object Flac {
   final class BitReader(bytes: Array[Byte], startByte: Int) {
     private var pos = startByte * 8L
     private val end = bytes.length * 8L
-    def bitsLeft: Long = end - pos
-    def bytePos: Int = (pos / 8).toInt
     def readBits(n: Int): Long = {
       if (pos + n > end) throw new java.io.EOFException
       var v = 0L

@@ -89,19 +89,10 @@ object Similarity {
         (col("label") === col("knn_label")).as("agree"))
   }
 
-  /** Label-noise detection (kNN consistency), exact-neighbor flavor: for
-    * each vector, the majority label among its k nearest neighbors vs its
-    * own label. Disagreement flags candidate mislabeled examples — a
-    * standard training-data curation signal. */
-  def labelConsistency(queries: DataFrame, corpus: DataFrame,
-      idCol: String, vecCol: String, labelCol: String, k: Int): DataFrame =
-    voteLabels(bruteForceTopK(queries, corpus, idCol, vecCol, k),
-      queries, corpus, idCol, labelCol)
-
   /** Label-noise detection over ANN neighbors — the 100 TB path: neighbor
     * candidates come from the LSH bucket equi-join (no cross product),
     * exactly re-ranked. This is how kNN curation actually runs at corpus
-    * scale; the exact flavor remains as the small-batch/recall baseline. */
+    * scale. */
   def labelConsistencyAnn(queries: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, labelCol: String, k: Int,
       lsh: SignLsh, probes: Int): DataFrame =

@@ -118,12 +118,6 @@ object TextStats {
 
   // ------------------------------------------- n-gram LM novelty scoring
 
-  /** Word bigrams of a token ARRAY with multiplicity ("a b" strings);
-    * empty below 2 tokens. zip_with over two shifted slices — O(n) per
-    * row. (The tempting transform(sequence)+element_at(toks, i) form
-    * re-evaluates the `toks` expression inside the lambda per element:
-    * with toks = split(...) that's O(n²) per document — measured 6× on
-    * q57 at sf0.1.) */
   /** Word bigrams with multiplicity ("a b" strings); empty below 2 tokens.
     * r12: the native one-pass kernel (identical byte spans to the
     * zip_with-slice-concat_ws form — split-on-" "/join-with-" " round

@@ -170,8 +170,6 @@ object Config {
       throw new IllegalArgumentException("config: missing input"))))
     val procs = root.get("pipeline").map(asMap).flatMap(_.get("processors"))
       .map(compileProcessors).getOrElse(Nil)
-    val output = root.get("output").map(asMap).map(compileOutput)
-      .getOrElse(Sinks.ConsoleSink())
     val streaming = root.get("input").map(asMap).exists(m =>
       m.contains("file_stream") || m.contains("generate_stream") ||
         (m.contains("kafka") &&
@@ -180,6 +178,11 @@ object Config {
           asMap(m("spark_format")).get("streaming").forall(_.toString.toBoolean)) ||
         (m.contains("socket") &&
           asMap(m("socket")).get("stream").exists(_.toString.toBoolean)))
+    // a stream writes its output once per micro-batch: a file output
+    // with no `mode` appends there, or each batch would replace the last
+    val output = root.get("output").map(asMap)
+      .map(compileOutput(_, if (streaming) "append" else "overwrite"))
+      .getOrElse(Sinks.ConsoleSink())
     val pushPath = root.get("input").map(asMap)
       .flatMap(_.get("http_server")).map(c =>
         Option(c).map(asMap).flatMap(_.get("path")).map(_.toString)
@@ -459,28 +462,27 @@ object Config {
 
   private def compileInput(m: Map[String, Any]): SparkSession => DataFrame = {
     val base = compileInputBase(m)
-    // input-level `batching:` (the Batching field on broker/file inputs):
-    // same count/byte_size/check policy as the output side, applied right
-    // after the source. Streaming inputs keep micro-batch batching.
-    val (_, conf) = one(m, "input")
-    val rebatch: Option[Processor] = conf match {
-      case cm: Map[_, _] =>
-        cm.asInstanceOf[Map[String, Any]].get("batching").map(asMap).map { b =>
-          val count = b.get("count").map(_.toString.toLong).getOrElse(0L)
-          val bytes = b.get("byte_size").map(_.toString.toLong).getOrElse(0L)
-          val check = b.get("check").map(_.toString).filter(_.nonEmpty)
-          if (check.isDefined) B.SplitOnCheck(check.get)
-          else if (bytes > 0) B.Split(1L, bytes)
-          else if (count > 1) B.Split(count)
-          else Noop
-        }
-      case _ => None
-    }
-    rebatch match {
+    // input-level `batching:` (the Batching field on broker/file inputs),
+    // applied right after the source. Streaming inputs keep micro-batch
+    // batching.
+    one(m, "input")._2.get("batching").map(asMap).map(rebatcher) match {
       case Some(p) if !(p eq Noop) =>
         s => { val df = base(s); if (df.isStreaming) df else p(df) }
       case _ => base
     }
+  }
+
+  /** An input/output `batching:` policy's re-batcher: `check` splits
+    * where the condition holds, else `byte_size`, else `count` (period is
+    * a trigger knob). Noop when nothing re-batches. */
+  private def rebatcher(b: Map[String, Any]): Processor = {
+    val count = b.get("count").map(_.toString.toLong).getOrElse(0L)
+    val bytes = b.get("byte_size").map(_.toString.toLong).getOrElse(0L)
+    val check = b.get("check").map(_.toString).filter(_.nonEmpty)
+    if (check.isDefined) B.SplitOnCheck(check.get)
+    else if (bytes > 0) B.Split(1L, bytes)
+    else if (count > 1) B.Split(count)
+    else Noop
   }
 
   /** Walk a processor tree (generic productIterator descent, so every
@@ -799,13 +801,18 @@ object Config {
     if (partsScope.isEmpty) compiled else B.PartsScoped(partsScope, compiled)
   }
 
-  private def compileOutput(m: Map[String, Any]): Sink = {
+  /** `fileMode`: the write mode of a `file` output that sets no `mode`
+    * (this output's and those nested in it). */
+  private def compileOutput(m: Map[String, Any],
+      fileMode: String = "overwrite"): Sink = {
+    def child(o: Any): Sink = compileOutput(asMap(o), fileMode)
     val (kind, conf) = one(m, "output")
     val sink = kind match {
       case "file" | "files" =>
         val codec = conf.get("codec").orElse(conf.get("format"))
           .map(_.toString).getOrElse("lines")
         val rawPath = str(conf, "path")
+        val mode = conf.get("mode").map(_.toString).getOrElse(fileMode)
         // writer codecs (internal/codec/writer.go): append / all-bytes /
         // delim:x are byte-stream shapes, not table formats
         if (rawPath.contains("${!")) {
@@ -815,16 +822,15 @@ object Config {
           val base = if (cut < 0) "." else rawPath.substring(0, cut)
           Sinks.DynamicPathSink(base,
             Conditions.interpToExpr(rawPath.substring(cut + 1)), codec,
-            conf.get("mode").map(_.toString).getOrElse("overwrite"),
+            mode,
             // above this many distinct resolved paths the sink switches
             // to one partitionBy pass + metadata renames (same layout)
             conf.get("auto_partition_threshold")
               .map(_.toString.toInt).getOrElse(100))
         } else if (codec == "append" || codec == "all-bytes" ||
             codec.startsWith("delim:"))
-          Sinks.CodecFileSink(rawPath, codec)
-        else Sinks.FileSink(rawPath, codec,
-          mode = conf.get("mode").map(_.toString).getOrElse("overwrite"))
+          Sinks.CodecFileSink(rawPath, codec, mode)
+        else Sinks.FileSink(rawPath, codec, mode = mode)
       case "parquet" => Sinks.FileSink(str(conf, "path"), "parquet")
       case "stdout" => Sinks.ConsoleSink()
       case "drop" => Sinks.DropSink
@@ -832,10 +838,10 @@ object Config {
         Sinks.SwitchSink(asList(conf("cases")).map { c =>
           val cm = asMap(c)
           (cm.get("check").map(condString).filter(_.nonEmpty),
-            compileOutput(asMap(cm("output"))))
+            child(cm("output")))
         })
       case "broker" =>
-        val outs = asList(conf("outputs")).map(o => compileOutput(asMap(o)))
+        val outs = asList(conf("outputs")).map(child)
         conf.get("pattern").map(_.toString).getOrElse("fan_out") match {
           // fan_out_sequential: FanOutSink already writes sinks in order
           case "fan_out" | "fan_out_sequential" => Sinks.FanOutSink(outs)
@@ -846,7 +852,7 @@ object Config {
           case o => throw new IllegalArgumentException(s"broker output: unsupported pattern $o")
         }
       case "retry" =>
-        Sinks.RetrySink(compileOutput(asMap(conf("output"))),
+        Sinks.RetrySink(child(conf("output")),
           conf.get("max_retries").map(_.toString.toInt).getOrElse(3))
       case "resource" =>
         Sinks.OutputResources(m(kind).toString)
@@ -871,7 +877,7 @@ object Config {
         Sinks.HttpServeSink(optStr(conf, "path", "/get"),
           optStr(conf, "stream_path", "/get/stream"))
       case "fallback" | "try" =>
-        Sinks.FallbackSink(asList(m(kind)).map(o => compileOutput(asMap(o))))
+        Sinks.FallbackSink(asList(m(kind)).map(child))
       case "reject" | "drop_on_error" =>
         Sinks.DropOnError(Sinks.DropSink)
       case "http_client" =>
@@ -953,33 +959,21 @@ object Config {
         // lib/output/drop_on.go: wrap a child output, dropping messages
         // instead of erroring when `error: true` (back_pressure is a
         // liveness knob the micro-batch engine handles via triggers)
-        val child = compileOutput(asMap(conf("output")))
+        val inner = child(conf("output"))
         if (conf.get("error").exists(_.toString.toBoolean))
-          Sinks.DropOnError(child)
-        else child
+          Sinks.DropOnError(inner)
+        else inner
       case o => throw new IllegalArgumentException(s"config: unknown output $o")
     }
     // output-level `batching:` (every writer output's Batching field):
-    // count / byte_size / check re-batch + post-batch processors; period
-    // stays a trigger knob
-    conf match {
-      case cm: Map[_, _] =>
-        cm.asInstanceOf[Map[String, Any]].get("batching").map(asMap) match {
-          case Some(b) =>
-            val count = b.get("count").map(_.toString.toLong).getOrElse(0L)
-            val bytes = b.get("byte_size").map(_.toString.toLong).getOrElse(0L)
-            val check = b.get("check").map(_.toString).filter(_.nonEmpty)
-            val post = b.get("processors").map(compileProcessors).getOrElse(Nil)
-            val rebatch: Processor =
-              if (check.isDefined) B.SplitOnCheck(check.get)
-              else if (bytes > 0) B.Split(1L, bytes)
-              else if (count > 1) B.Split(count)
-              else Noop
-            if ((rebatch eq Noop) && post.isEmpty) sink
-            else graft.sinks.BatchedSink(sink, rebatch, post)
-          case None => sink
-        }
-      case _ => sink
+    // re-batch + post-batch processors
+    conf.get("batching").map(asMap) match {
+      case Some(b) =>
+        val rebatch = rebatcher(b)
+        val post = b.get("processors").map(compileProcessors).getOrElse(Nil)
+        if ((rebatch eq Noop) && post.isEmpty) sink
+        else graft.sinks.BatchedSink(sink, rebatch, post)
+      case None => sink
     }
   }
 

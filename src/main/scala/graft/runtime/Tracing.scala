@@ -1,8 +1,8 @@
 package graft.runtime
 
 import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import graft.obs.JobProfile
 
 /** Tracing (`lib/tracer/constructor.go`, `jaeger.go`): the reference opens
   * an opentracing span per processor per message part
@@ -14,7 +14,8 @@ import org.apache.spark.sql.SparkSession
   *     ├─ one child span per processor (plan-assembly — shows operator
   *     │  order and config cost)
   *     └─ one child span per Spark JOB launched while the trace is open
-  *        (the actual data work, with real durations)
+  *        (the actual data work, with real durations; read from
+  *        [[graft.obs.JobProfile]] when the root span closes)
   *
   * No jaeger agent exists in this image (and no egress), so spans are
   * recorded in-process and served as jaeger-style JSON from the control
@@ -32,7 +33,7 @@ object Tracing {
   private val finished = new java.util.concurrent.ConcurrentLinkedQueue[Span]()
   private val active = new ThreadLocal[List[Span]] { override def initialValue = Nil }
   @volatile private var enabled = false
-  @volatile private var listening: Option[(SparkSession, SparkListener)] = None
+  @volatile private var profile: Option[JobProfile] = None
 
   def enable(): Unit = { enabled = true }
   def disable(): Unit = { enabled = false }
@@ -63,54 +64,48 @@ object Tracing {
         parent.map(_.traceId).getOrElse(idGen.getAndIncrement()),
         operation, nowUs, -1L, tags)
       active.set(s :: active.get)
-      if (parent.isEmpty) noteOpened(s)
+      // a root span owns the jobs that start while it is open
+      if (parent.isEmpty) profile.foreach(_.take())
       try f
       finally {
         active.set(active.get.tail)
         s.endUs = nowUs
         finished.add(s)
-        if (parent.isEmpty) { lastOpened = None; fireFlush(s.traceId) }
+        if (parent.isEmpty) {
+          profile.foreach { p =>
+            // a listener bus still busy after 10 s: trace what arrived
+            try p.drain() catch { case _: java.util.concurrent.TimeoutException => () }
+            jobSpans(s, p.take())
+          }
+          fireFlush(s.traceId)
+        }
       }
     }
 
-  /** While any trace span is open, record every Spark job as a child of
-    * the trace root (jobs run on scheduler threads, so parentage comes
-    * from the job-group property set by [[span]] callers' session). */
+  /** Record every Spark job as a child of the trace root open when it
+    * started. With several root spans open at once on different threads,
+    * each root claims the jobs that ran since the last root opened or
+    * closed. */
   def attachJobListener(spark: SparkSession): Unit = synchronized {
-    if (listening.isEmpty) {
-      val l = new SparkListener {
-        private val open = scala.collection.concurrent.TrieMap[Int, (Long, String)]()
-        override def onJobStart(js: SparkListenerJobStart): Unit =
-          if (enabled) open.put(js.jobId, (nowUs,
-            Option(js.properties.getProperty("spark.job.description"))
-              .getOrElse(s"job ${js.jobId}")))
-        override def onJobEnd(je: SparkListenerJobEnd): Unit =
-          open.remove(je.jobId).foreach { case (t0, desc) =>
-            val root = rootSpanHint
-            finished.add(Span(idGen.getAndIncrement(), root.map(_.id),
-              root.map(_.traceId).getOrElse(0L),
-              s"spark job ${je.jobId}: $desc", t0, nowUs,
-              Map("component" -> "spark")))
-          }
-      }
-      spark.sparkContext.addSparkListener(l)
-      listening = Some((spark, l))
-    }
+    if (profile.isEmpty) profile = Some(JobProfile.attach(spark.sparkContext))
   }
 
   def detachJobListener(): Unit = synchronized {
-    listening.foreach { case (spark, l) =>
-      spark.sparkContext.removeSparkListener(l)
-    }
-    listening = None
+    profile.foreach(_.detach())
+    profile = None
   }
 
-  // jobs finish on listener threads — parent them to the most recent
-  // still-open span recorded by any thread (the pipeline root in the
-  // single-pipeline case; a heuristic, clearly tagged, in concurrent ones)
-  @volatile private var lastOpened: Option[Span] = None
-  private def rootSpanHint: Option[Span] = lastOpened
-  private[runtime] def noteOpened(s: Span): Unit = { lastOpened = Some(s) }
+  // job timestamps are epoch ms; spans are on the nanoTime clock
+  private def jobSpans(root: Span, prof: JobProfile.Profile): Unit = {
+    val shiftUs = nowUs - System.currentTimeMillis() * 1000L
+    prof.jobs.foreach { j =>
+      val desc = if (j.description.nonEmpty) j.description else s"job ${j.id}"
+      finished.add(Span(idGen.getAndIncrement(), Some(root.id), root.traceId,
+        s"spark job ${j.id}: $desc", j.startMs * 1000L + shiftUs,
+        if (j.endMs < 0) root.endUs else j.endMs * 1000L + shiftUs,
+        Map("component" -> "spark")))
+    }
+  }
 
   /** Completed spans, oldest first. */
   def spans: scala.Seq[Span] = {

@@ -524,23 +524,30 @@ object Sinks {
     * writer (custom `lineSep`); `append` concatenates a partition's
     * messages into one undelimited file per task; `all-bytes` writes one
     * file per message. The task-side file writes keep every shape fully
-    * parallel — one file per task/message, no driver funnel. */
-  final case class CodecFileSink(path: String, codec: String) extends Sink {
+    * parallel — one file per task/message, no driver funnel. `mode`
+    * `append` keeps what earlier writes (a stream's earlier micro-batches)
+    * left in `path`. */
+  final case class CodecFileSink(path: String, codec: String,
+      mode: String = "overwrite") extends Sink {
     def write(df: DataFrame): Unit = {
       val content = df.select(
         Envelope.contentOrDoc(df).cast("binary").as("b"))
       codec match {
         case "lines" =>
           content.select(col("b").cast("string").as("value"))
-            .write.mode("overwrite").text(path)
+            .write.mode(mode).text(path)
         case c if c.startsWith("delim:") =>
           content.select(col("b").cast("string").as("value"))
-            .write.mode("overwrite").option("lineSep", c.substring(6)).text(path)
+            .write.mode(mode).option("lineSep", c.substring(6)).text(path)
         case "append" | "all-bytes" =>
           val perMessage = codec == "all-bytes"
           val dir = java.nio.file.Paths.get(path)
           java.nio.file.Files.createDirectories(dir)
           val pathStr = path
+          // file names are per task; an appending write tags its own
+          val tag =
+            if (mode == "append") java.util.UUID.randomUUID().toString.take(8) + "-"
+            else ""
           content.foreachPartition {
             (rows: Iterator[org.apache.spark.sql.Row]) =>
               val pid = org.apache.spark.TaskContext.getPartitionId()
@@ -548,14 +555,14 @@ object Sinks {
                 var i = 0
                 rows.foreach { r =>
                   java.nio.file.Files.write(
-                    java.nio.file.Paths.get(pathStr, f"msg-$pid%05d-$i%06d.bin"),
+                    java.nio.file.Paths.get(pathStr, f"msg-$tag$pid%05d-$i%06d.bin"),
                     r.getAs[Array[Byte]](0))
                   i += 1
                 }
               } else {
                 val out = new java.io.BufferedOutputStream(
                   java.nio.file.Files.newOutputStream(
-                    java.nio.file.Paths.get(pathStr, f"part-$pid%05d.bin")))
+                    java.nio.file.Paths.get(pathStr, f"part-$tag$pid%05d.bin")))
                 try rows.foreach(r => out.write(r.getAs[Array[Byte]](0)))
                 finally out.close()
               }

@@ -629,4 +629,57 @@ class ConfigSpec extends AnyFunSuite {
     // is a corrupt record whose null props parse to null, not to an error
     assert(got == Map("1" -> "1", "2" -> "-1", "3" -> "3", "corrupt" -> null))
   }
+
+  private def batchSizes(df: org.apache.spark.sql.DataFrame): scala.Seq[Long] =
+    df.groupBy(org.apache.spark.sql.functions.col(graft.model.Envelope.BatchId)).count()
+      .orderBy(graft.model.Envelope.BatchId).collect().map(_.getLong(1)).toSeq
+
+  test("input batching.count re-batches right after the source") {
+    val spec = Config.load(
+      """input:
+        |  generate:
+        |    count: 10
+        |    mapping: "root.i = this.i"
+        |    batching:
+        |      count: 3
+        |""".stripMargin)
+    assert(batchSizes(spec.input(spark)) == scala.Seq(3L, 3L, 3L, 1L))
+  }
+
+  test("input batching.check ends a batch with each matching message") {
+    val spec = Config.load(
+      """input:
+        |  generate:
+        |    count: 10
+        |    mapping: "root.i = this.i"
+        |    batching:
+        |      check: this.i % 4 == 3
+        |""".stripMargin)
+    assert(batchSizes(spec.input(spark)) == scala.Seq(4L, 4L, 2L))
+  }
+
+  test("output batching with post-batch processors compiles to BatchedSink") {
+    val out = Files.createTempDirectory("graft-cfg-obatch").toString + "/out"
+    val spec = Config.load(
+      s"""input:
+         |  generate:
+         |    count: 10
+         |    mapping: "root.i = this.i"
+         |output:
+         |  file:
+         |    path: $out
+         |    codec: lines
+         |    batching:
+         |      count: 4
+         |      processors:
+         |        - bloblang: 'root = "b" + this.i.string()'
+         |""".stripMargin)
+    assert(spec.output == graft.sinks.BatchedSink(
+      graft.sinks.Sinks.FileSink(out, "lines", mode = "overwrite"),
+      graft.ops.BatchOps.Split(4L),
+      scala.Seq(graft.ops.BloblangProc("root = \"b\" + this.i.string()"))))
+    spec.run(spark)
+    assert(spark.read.text(out).collect().map(_.getString(0)).sorted.toSeq ==
+      (0 until 10).map(i => s"b$i").sorted)
+  }
 }

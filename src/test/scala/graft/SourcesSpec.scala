@@ -1,10 +1,8 @@
 package graft
 
 import java.nio.file.{Files, Path, StandardOpenOption}
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
+import graft.obs.JobProfile
 import graft.sources.Sources
 
 /** The `file` input's JSON schema memo: a read over an unchanged file
@@ -12,25 +10,14 @@ import graft.sources.Sources
 class SourcesSpec extends AnyFunSuite {
   lazy val spark = Sessions.builder("4").getOrCreate()
 
-  /** Spark jobs `f` starts, counted by a SparkListener. A fence job run
-    * afterwards marks the point where every earlier job start was seen. */
+  /** Spark jobs `f` starts, counted by the JobProfile. */
   private def jobsDuring(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val fence = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("graft.fence") != null)) fence.countDown()
-        else jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
+    val profile = JobProfile.attach(spark.sparkContext)
     try {
+      profile.drain().take()
       f
-      sc.setLocalProperty("graft.fence", "1")
-      try sc.parallelize(1 to 1, 1).count() finally sc.setLocalProperty("graft.fence", null)
-      assert(fence.await(30, TimeUnit.SECONDS))
-      jobs.get()
-    } finally sc.removeSparkListener(listener)
+      profile.drain().take().jobs.size
+    } finally profile.detach()
   }
 
   private def columns(path: String): Set[String] =

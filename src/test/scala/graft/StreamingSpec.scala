@@ -482,4 +482,81 @@ class StreamingSpec extends AnyFunSuite {
       .orderBy("j", "pos").collect().map(_.toSeq).toSeq
     assert(streamed === batch)
   }
+
+  /** Runs a `file_stream` config with `output` over three micro-batches
+    * of five rows each (ids 0..14). */
+  private def threeBatches(output: String): Unit = {
+    val src = Files.createTempDirectory("graft-sdm-in")
+    val ckpt = Files.createTempDirectory("graft-sdm-ck").toString
+    val spec = graft.runtime.Config.load(
+      s"""input:
+         |  file_stream:
+         |    path: $src
+         |    format: json
+         |pipeline:
+         |  processors:
+         |    - bloblang: 'root.id = this.id'
+         |output:
+         |""".stripMargin + output)
+    def drop(batch: Int): Unit = {
+      val lines = (0 until 5).map(i => s"""{"id":${batch * 5 + i}}""").mkString("\n")
+      val tmp = Files.createTempFile("graft-sdm", ".json")
+      Files.write(tmp, lines.getBytes("UTF-8"))
+      Files.move(tmp, src.resolve(s"b$batch.json"))
+      ()
+    }
+    drop(0)
+    val q = spec.runStream(spark, ckpt)
+    try {
+      q.processAllAvailable()
+      drop(1); q.processAllAvailable()
+      drop(2); q.processAllAvailable()
+    } finally q.stop()
+    assert(q.recentProgress.count(_.numInputRows > 0) == 3)
+  }
+
+  test("streaming file output with no mode keeps every micro-batch") {
+    val out = Files.createTempDirectory("graft-sdm-out").toString + "/out"
+    threeBatches(
+      s"""  file:
+         |    path: $out
+         |    codec: json
+         |""".stripMargin)
+    assert(spark.read.json(out).select("id").collect().map(_.getLong(0)).sorted.toSeq ==
+      (0L until 15L))
+  }
+
+  test("streaming interpolated-path file output with no mode keeps every micro-batch") {
+    val out = Files.createTempDirectory("graft-sdm-dyn").toString
+    threeBatches(
+      s"""  file:
+         |    path: '$out/$${! this.id % 2 }'
+         |    codec: json
+         |""".stripMargin)
+    val got = scala.Seq("0", "1").flatMap(p =>
+      spark.read.json(s"$out/$p").select("id").collect().map(_.getLong(0)))
+    assert(got.sorted == (0L until 15L))
+  }
+
+  test("streaming writer-codec file outputs with no mode keep every micro-batch") {
+    def ids(dir: String): scala.Seq[Long] =
+      new java.io.File(dir).listFiles().toSeq.filter(_.getName.endsWith(".bin"))
+        .flatMap(f => "\"id\":(\\d+)".r.findAllMatchIn(
+          new String(Files.readAllBytes(f.toPath), "UTF-8")).map(_.group(1).toLong))
+    val delim = Files.createTempDirectory("graft-sdm-delim").toString + "/out"
+    threeBatches(
+      s"""  file:
+         |    path: $delim
+         |    codec: "delim:;"
+         |""".stripMargin)
+    assert(spark.read.option("lineSep", ";").json(delim).select("id").collect()
+      .map(_.getLong(0)).sorted.toSeq == (0L until 15L))
+    val append = Files.createTempDirectory("graft-sdm-append").toString + "/out"
+    threeBatches(
+      s"""  file:
+         |    path: $append
+         |    codec: append
+         |""".stripMargin)
+    assert(ids(append).sorted == (0L until 15L))
+  }
 }

@@ -7,7 +7,8 @@ close-out medians said 156.3 s — a stale number survived into the committed
 BASELINE.md. This script makes the section a pure function of the committed
 artifacts so a hand-typed snapshot can never be published again:
 
-  inputs : BENCH_MEDIANS_sf0.1.json           (graft side: per-query medians)
+  inputs : BENCH_RESULT_sf0.1.json            (graft side: its per-query
+                                               `queries` medians)
            ORACLE_SIDEBYSIDE_sf0.1_r{N}.json  (oracle side: highest N found)
   output : BASELINE.md, the block between SIDEBYSIDE:BEGIN/END markers
 
@@ -21,7 +22,7 @@ Decomposition mirrors the judge's own (VERDICT r10 "Performance"):
     the comparison buys semantics the oracle doesn't execute
   - top graft wins on the non-outlier subset
 
-Run from the repo root (Bench's close-out invokes it best-effort):
+Run it after a full sf0.1 `graft.Bench` run:
   python3 tools/baseline_sidebyside.py [--dry-run]
 """
 import glob
@@ -49,7 +50,7 @@ def latest_sidebyside():
 
 def main():
     os.chdir(os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
-    graft = json.load(open("BENCH_MEDIANS_sf0.1.json"))
+    graft = json.load(open("BENCH_RESULT_sf0.1.json"))["queries"]
     sbs_path, round_n = latest_sidebyside()
     sbs = json.load(open(sbs_path))
     oracle = sbs["queries"]
@@ -84,8 +85,8 @@ def main():
     out.append(BEGIN)
     out.append(f"## Round-{round_n} full side-by-side (sf0.1, regenerated {date.today().isoformat()}) — CURRENT")
     out.append("")
-    out.append(f"Generated from `BENCH_MEDIANS_sf0.1.json` (graft medians, close-out")
-    out.append(f"state) + `{sbs_path}` (DuckDB oracle medians,")
+    out.append(f"Generated from `BENCH_RESULT_sf0.1.json` (graft medians, full-suite")
+    out.append(f"bench) + `{sbs_path}` (DuckDB oracle medians,")
     out.append(f"`tools/oracle_bench.py --timeout 180`) by")
     out.append("`tools/baseline_sidebyside.py` — re-run it after any full bench or")
     out.append("oracle run; hand-edits inside this block are overwritten.")
