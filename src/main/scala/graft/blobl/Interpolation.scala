@@ -17,10 +17,6 @@ object Interpolation {
   def column(df: DataFrame, template: String): Column =
     build(template, expr => Mapping.envelopeExpr(df, expr))
 
-  /** Compile against a plain DataFrame (this = row struct). */
-  def columnPlain(df: DataFrame, template: String): Column =
-    build(template, expr => Mapping.columnExpr(expr, df))
-
   private def build(template: String, compile: String => Column): Column = {
     val parts = scala.collection.mutable.ListBuffer[Column]()
     var last = 0

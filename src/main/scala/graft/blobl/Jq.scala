@@ -1529,7 +1529,12 @@ object Jq {
           // contract, so a lower cap ≥ k yields the identical first-k
           // stream (an early null end shortens both forms the same way).
           // recurse/until are NOT eligible: their caps ERROR when still
-          // live, so lowering one changes the error channel.
+          // live, so lowering one changes the error channel. An f that
+          // fails past k leaves the error channel unchanged too: the
+          // capped form never runs it, and the uncapped form ends the
+          // stream at the failed output without flagging the row
+          // (repeat_apply does not propagate f's error), so both give
+          // the same k outputs and no error (JqSpec pins it).
           val g2 = (n, g) match {
             case (LitLong(k),
                 MethodCall(recv, "repeat_apply", List(f, LitLong(cap))))

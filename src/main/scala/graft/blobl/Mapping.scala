@@ -49,13 +49,6 @@ object Mapping {
     Program(out)
   }
 
-  /** Compile a bare Bloblang expression to a Column against a plain
-    * DataFrame (`this` = struct of all columns). */
-  def columnExpr(src: String, df: DataFrame): Column = {
-    val ctx = plainCtx(df)
-    Compiler.compile(Parser.parseQueryString(src), ctx).col
-  }
-
   /** Compile a bare Bloblang expression against an envelope DataFrame
     * (`this` = doc, meta/_error/content/batch available). */
   def envelopeExpr(df: DataFrame, src: String): Column = {

@@ -29,8 +29,10 @@ case class SimhashExpr(child: Expression, bits: Int)
     // SLICES of one array — r12: the old path allocated a String, its
     // getBytes copy, and a '#'-concat String per token, and that
     // allocation churn (not the md5 itself) was most of the kernel's
-    // non-cpu task time in the banded-join profiles. md5 inputs are
-    // byte-identical, so every simhash value is unchanged.
+    // non-cpu task time in the banded-join profiles. For valid UTF-8 the
+    // md5 inputs are byte-identical to the String path's, so every
+    // simhash value is unchanged; invalid sequences are digested as their
+    // raw bytes (the String path digested U+FFFD replacements instead).
     val s = input.asInstanceOf[UTF8String]
     val bytes = s.getBytes
     val len = bytes.length

@@ -4,16 +4,16 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-/** Distributed text indexing & retrieval for corpus curation: positional
-  * postings, phrase statistics, and a fully integer-deterministic BM25
+/** Distributed text indexing & retrieval for corpus curation: phrase
+  * statistics, document commonness and a fully integer-deterministic BM25
   * variant for benchmark-decontamination / targeted-subset retrieval
   * (the "retrieve training docs matching an eval set" pass).
   *
   * Everything is rank-deterministic in integer arithmetic — no `ln`, no
   * doubles — so an external SQL oracle replays every score bit-exactly.
   *
-  * Scale notes (100 TB posture): postings are produced by one explode
-  * whose very next operator filters to the query vocabulary, so the
+  * Scale notes (100 TB posture): (doc, term) rows are produced by one
+  * explode whose very next operator filters to the query vocabulary, so the
   * shuffle carries only matching (doc, term) rows — O(hits), not
   * O(corpus tokens). Corpus-level stats (N, total tokens) are a 1-row
   * aggregate joined on a constant key with a broadcast hint
@@ -22,14 +22,6 @@ import org.apache.spark.sql.types.LongType
   * is `orderBy().limit()` → TakeOrdered, never a global sort.
   */
 object Index {
-
-  /** Positional posting list: one row per token occurrence —
-    * (id, pos, token), pos 0-based. The building block for phrase and
-    * proximity queries; callers filter to their query vocabulary BEFORE
-    * any shuffle so the exploded relation never materializes corpus-wide.
-    */
-  def postings(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.select(col(idCol), posexplode(split(col(textCol), " ")).as(Seq("pos", "token")))
 
   /** Exact phrase statistics: for each phrase, the number of documents
     * containing it and the total occurrence count. Computed as position

@@ -1,19 +1,18 @@
 package graft.llmops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Multimodal column handling: image/audio/video as opaque `binary`
   * columns plus a typed metadata struct.
   *
-  * IMAGE decode/resize is REAL for the formats the JDK decodes natively
-  * (PNG, JPEG, GIF, BMP via `javax.imageio` — no external libraries):
-  * [[decodeImage]] reads only the header for dimensions, [[resizeImage]]
-  * re-renders through Graphics2D. AUDIO decode/features are REAL for the
-  * containers the JDK parses (WAV/AIFF/AU PCM via `javax.sound.sampled`):
-  * [[decodeAudio]] reads the header, [[audioFeatures]] computes RMS/peak/
-  * zero-cross over bounded PCM. VIDEO/COMPRESSED-AUDIO *metadata* is
+  * IMAGE decode is REAL for the formats the JDK decodes natively (PNG,
+  * JPEG, GIF, BMP via `javax.imageio` — no external libraries):
+  * [[decodeImage]] reads only the header for dimensions. AUDIO decode is
+  * REAL for the containers the JDK parses (WAV/AIFF/AU PCM via
+  * `javax.sound.sampled`): [[decodeAudio]] reads the header.
+  * VIDEO/COMPRESSED-AUDIO *metadata* is
   * REAL via pure-JVM parsers of the published container layouts:
   * [[decodeAvi]] (RIFF chunk walk), [[decodeMp4]] (ISO-BMFF box walk),
   * [[decodeMp3]] (MPEG-1 Layer III frame headers + ID3v2 skip).
@@ -67,33 +66,6 @@ object Multimodal {
     f(payload)
   }
 
-  /** Real image resize: decode → Graphics2D bilinear re-render → PNG
-    * bytes. Null for undecodable payloads. */
-  def resizeImage(payload: Column, width: Int, height: Int): Column = {
-    val f = org.apache.spark.sql.functions.udf { (b: Array[Byte]) =>
-      if (b == null) null
-      else try {
-        val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(b))
-        if (img == null) null
-        else {
-          val out = new java.awt.image.BufferedImage(width, height,
-            java.awt.image.BufferedImage.TYPE_INT_RGB)
-          val g = out.createGraphics()
-          try {
-            g.setRenderingHint(
-              java.awt.RenderingHints.KEY_INTERPOLATION,
-              java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-            g.drawImage(img, 0, 0, width, height, null)
-          } finally g.dispose()
-          val bos = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(out, "png", bos)
-          bos.toByteArray
-        }
-      } catch { case _: Exception => null }
-    }
-    f(payload)
-  }
-
   case class AudioMeta(n_bytes: Long, format: String,
       channels: java.lang.Integer, sample_rate: java.lang.Float,
       frames: java.lang.Long, duration_ms: java.lang.Double)
@@ -124,60 +96,6 @@ object Multimodal {
       } catch {
         case _: Exception => AudioMeta(b.length.toLong, null, null, null, null, null)
       }
-    }
-    f(payload)
-  }
-
-  private case class AudioFeat(rms: Double, peak: Double,
-      zero_cross_rate: Double, n_samples: Long)
-
-  /** Real PCM feature extraction for audio-quality filtering: convert to
-    * 16-bit signed PCM, fold channel 0 into normalized [-1,1] samples,
-    * and compute RMS energy, peak amplitude, and zero-crossing rate.
-    * `maxSamples` bounds per-row work so one long file can't stall a
-    * task (analyze a prefix, like header-only image decode). */
-  def audioFeatures(payload: Column, maxSamples: Int = 1 << 20): Column = {
-    val limit = maxSamples
-    val f = org.apache.spark.sql.functions.udf { (b: Array[Byte]) =>
-      if (b == null) null
-      else try {
-        val src = javax.sound.sampled.AudioSystem.getAudioInputStream(
-          new java.io.ByteArrayInputStream(b))
-        val fmt = src.getFormat
-        val target = new javax.sound.sampled.AudioFormat(
-          javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED,
-          fmt.getSampleRate, 16, fmt.getChannels,
-          2 * fmt.getChannels, fmt.getSampleRate, false)
-        val pcm = javax.sound.sampled.AudioSystem.getAudioInputStream(target, src)
-        try {
-          val frameBytes = target.getFrameSize
-          val buf = new Array[Byte](frameBytes * 4096)
-          var n = 0L; var sumSq = 0.0; var peak = 0.0; var crossings = 0L
-          var prevSign = 0
-          var read = pcm.read(buf)
-          while (read > 0 && n < limit) {
-            var off = 0
-            while (off + 1 < read && n < limit) {
-              // little-endian 16-bit channel 0 of each frame
-              val s = ((buf(off + 1) << 8) | (buf(off) & 0xff)).toShort
-              val v = s / 32768.0
-              sumSq += v * v
-              if (math.abs(v) > peak) peak = math.abs(v)
-              val sign = if (v > 0) 1 else if (v < 0) -1 else 0
-              if (sign != 0) {
-                if (prevSign != 0 && sign != prevSign) crossings += 1
-                prevSign = sign
-              }
-              n += 1
-              off += frameBytes
-            }
-            read = if (n < limit) pcm.read(buf) else -1
-          }
-          if (n == 0) null
-          else AudioFeat(math.sqrt(sumSq / n), peak,
-            crossings.toDouble / n, n)
-        } finally { pcm.close(); src.close() }
-      } catch { case _: Exception => null }
     }
     f(payload)
   }
@@ -243,13 +161,6 @@ object Multimodal {
     }
     f(frames)
   }
-
-  /** Typed metadata schema carried next to every media payload. */
-  val metaSchema: StructType = StructType(scala.Seq(
-    StructField("n_bytes", LongType),
-    StructField("format", StringType),
-    StructField("width", LongType),
-    StructField("height", LongType)))
 
   /** STUB decode: deterministic fake metadata from the payload hash.
     * Real implementation would parse the container header. */
@@ -1009,15 +920,5 @@ object Multimodal {
     val sampled = transform(sequence(lit(0), lit(n - 1)),
       i => element_at(real, (i * m / n + 1).cast(IntegerType)))
     when(real.isNotNull && m >= n, sampled).otherwise(slices)
-  }
-
-  /** Partition a media DataFrame by payload size class so huge payloads
-    * don't skew task times (the 100 TB concern: one 4 GB video per task vs
-    * thousands of thumbnails). */
-  def repartitionBySize(df: DataFrame, payloadCol: String, partitions: Int): DataFrame = {
-    val sizeClass = when(octet_length(col(payloadCol)) < 1024, 0)
-      .when(octet_length(col(payloadCol)) < 1024 * 1024, 1)
-      .otherwise(2)
-    df.repartition(partitions, sizeClass, pmod(hash(col(payloadCol)), lit(partitions)))
   }
 }

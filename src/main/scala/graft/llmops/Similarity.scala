@@ -273,10 +273,6 @@ object Similarity {
       .select(col("id"), col("_q.scale").as("scale"), col("_q.codes").as("codes"))
   }
 
-  /** Dequantize back to doubles (codes * scale / 127). */
-  def dequantizeInt8(codes: Column, scale: Column): Column =
-    transform(codes, c => c.cast(DoubleType) * scale / 127.0)
-
   /** Product quantization over int8-quantized embeddings — the memory
     * layout that makes a 100 TB embedding corpus scannable: after the 4×
     * int8 cut, each vector collapses to `m` one-byte centroid ids (64
@@ -336,10 +332,9 @@ object Similarity {
         cb: Seq[Seq[Seq[Int]]]): DataFrame =
       topKWithCodes(quantQueries, encode(quantCorpus, cb), k, cb)
 
-    /** [[topK]] against a precomputed (vid, pq) codes relation — the
-      * search half of the persisted-index split: the corpus is encoded
-      * once ([[writeIndex]]), daily query batches scan only the 12-byte
-      * code rows. */
+    /** [[topK]] against a precomputed (vid, pq) codes relation: the
+      * corpus is encoded once ([[encode]]) and query batches scan only
+      * the 12-byte code rows. */
     def topKWithCodes(quantQueries: DataFrame, codes: DataFrame, k: Int,
         cb: Seq[Seq[Seq[Int]]]): DataFrame = {
       val q = broadcast(quantQueries.select(col("id").as("qid"),
@@ -350,37 +345,6 @@ object Similarity {
       topKOfSims(sims, k, keepSim = true)
         .select(col("qid"), col("vid"),
           (-col("sim")).cast(LongType).as("adc_dist"), col("rnk"))
-    }
-
-    /** Persist the PQ index: `<path>/codes` (vid, pq — the whole corpus
-      * at ~12 bytes a row) and `<path>/codebook` (sub, j, cv — m·ksub
-      * tiny rows). Rebuilding the index is the only step that reads the
-      * original vectors; search never does. */
-    def writeIndex(quantCorpus: DataFrame, cb: Seq[Seq[Seq[Int]]],
-        path: String): Unit = {
-      val spark = quantCorpus.sparkSession
-      import spark.implicits._
-      encode(quantCorpus, cb).write.mode("overwrite")
-        .parquet(s"$path/codes")
-      cb.zipWithIndex.flatMap { case (cents, sub) =>
-        cents.zipWithIndex.map { case (cv, j) => (sub, j, cv) }
-      }.toDF("sub", "j", "cv").coalesce(1).write.mode("overwrite")
-        .parquet(s"$path/codebook")
-    }
-
-    /** Load a persisted index: (codebook, codes relation). */
-    def readIndex(spark: org.apache.spark.sql.SparkSession,
-        path: String): (Seq[Seq[Seq[Int]]], DataFrame) = {
-      val cbRows = spark.read.parquet(s"$path/codebook")
-        .select(col("sub"), col("j"), col("cv")).collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Int](2)))
-      val cb = cbRows.groupBy(_._1).toSeq.sortBy(_._1).map {
-        case (_, rows) => rows.sortBy(_._2).map(_._3.toSeq).toSeq
-      }
-      require(cb.length == m && cb.forall(_.length == ksub),
-        s"index at $path has shape (${cb.length}, ${cb.map(_.length).distinct})" +
-          s", expected ($m, $ksub)")
-      (cb, spark.read.parquet(s"$path/codes"))
     }
   }
 

@@ -505,41 +505,6 @@ object Training {
     df.filter(cond)
   }
 
-  /** Solved sampling plan for one source: `rate` feeds [[mixStrata]],
-    * `epochs` = rate (≥1 means the source repeats), `tokens` the expected
-    * contribution, `capped` flags sources whose epoch cap binds — the
-    * realized mixture under-weights them vs the target. */
-  final case class MixRate(rate: Double, epochs: Double, tokens: Long,
-      capped: Boolean)
-
-  /** Solve per-source sampling rates for a target token mixture (the
-    * LLaMA/Pile-style recipe arithmetic): source s should contribute
-    * `weights(s) * budgetTokens` tokens, so its rate is
-    * `weight·budget / tokens_s`, clamped to `maxEpochs` repeats of the
-    * source. Driver-side arithmetic over the (tiny) per-source token
-    * table — pair with a `groupBy(source).agg(sum(nTokens))` pass and
-    * feed the rates into [[mixStrata]] (rates > 1 mean duplication,
-    * which mixStrata treats as keep-all; express extra epochs as corpus
-    * repetition upstream). */
-  def mixtureRates(sourceTokens: Map[String, Long],
-      weights: Map[String, Double], budgetTokens: Long,
-      maxEpochs: Double = 1.0): Map[String, MixRate] = {
-    require(sourceTokens.keySet == weights.keySet,
-      "mixtureRates: sources and weights must cover the same keys")
-    val wsum = weights.values.sum
-    require(wsum > 0, "mixtureRates: weights must sum > 0")
-    weights.map { case (s, w) =>
-      val have = sourceTokens(s)
-      val want = w / wsum * budgetTokens
-      val raw = if (have <= 0) 0.0 else want / have
-      val rate = math.min(raw, maxEpochs)
-      // relative epsilon: weight-normalization arithmetic may land an ulp
-      // above the cap without the cap genuinely binding
-      val capped = raw > maxEpochs * (1 + 1e-9)
-      s -> MixRate(rate, rate, math.round(rate * have), capped)
-    }
-  }
-
   /** Temperature-scaled source sampling weights (the multilingual /
     * multi-source upsampling recipe: sample source s proportionally to
     * p_s^τ with τ = 0.5, flattening the head so low-resource sources are
@@ -648,88 +613,6 @@ object Training {
     out
   }
 
-  // -------------------------------------------------- BPE tokenizer training
-
-  /** BPE tokenizer training (Sennrich et al. 2016): learn `numMerges`
-    * merge rules from a corpus.
-    *
-    * The corpus-heavy pass — the word count — is fully distributed (the
-    * canonical explode + map-side-combined groupBy); the merge loop then
-    * runs on the COLLECTED vocabulary (distinct words × counts). That is
-    * the standard trade, and the same shape as the connected-components
-    * union-find finish: at 100 TB the corpus is petabytes but the
-    * vocabulary is millions of rows, and each merge step only touches
-    * vocabulary entries. `maxVocab` caps driver memory (rare tail words
-    * contribute negligible pair mass).
-    *
-    * Deterministic: best pair = max count, ties → lexicographically
-    * smallest pair; merge application is the classic left-to-right
-    * non-overlapping scan over SYMBOL ARRAYS (no string-replace boundary
-    * artifacts). Words carry a terminal `</w>` marker.
-    *
-    * Returns the ordered merge rules. */
-  def bpeTrain(df: DataFrame, textCol: String, numMerges: Int,
-      maxVocab: Int = 1000000): scala.Seq[(String, String)] = {
-    val vocab = df
-      .select(explode(split(col(textCol), " ")).as("w"))
-      .filter(length(col("w")) > 0)
-      .groupBy(col("w")).agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col("w"))
-      .limit(maxVocab)
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-    var words: Array[(Array[String], Long)] =
-      vocab.map { case (w, n) => (w.map(_.toString).toArray :+ "</w>", n) }
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    var step = 0
-    var done = false
-    while (step < numMerges && !done) {
-      val counts = scala.collection.mutable.Map.empty[(String, String), Long]
-      for ((syms, n) <- words; i <- 0 until syms.length - 1)
-        counts.updateWith((syms(i), syms(i + 1)))(c => Some(c.getOrElse(0L) + n))
-      if (counts.isEmpty) done = true
-      else {
-        val best = counts.toSeq.minBy { case ((a, b), c) => (-c, a, b) }._1
-        merges += best
-        words = words.map { case (syms, n) => (applyBpeMerge(syms, best), n) }
-        step += 1
-      }
-    }
-    merges.toSeq
-  }
-
-  /** One merge rule applied to a symbol array: left-to-right
-    * non-overlapping — exactly the reference BPE algorithm's scan. */
-  def applyBpeMerge(syms: Array[String],
-      pair: (String, String)): Array[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var i = 0
-    while (i < syms.length) {
-      if (i < syms.length - 1 && syms(i) == pair._1 && syms(i + 1) == pair._2) {
-        out += pair._1 + pair._2
-        i += 2
-      } else {
-        out += syms(i)
-        i += 1
-      }
-    }
-    out.toArray
-  }
-
-  /** Tokenize one word with a learned merge table (reference
-    * implementation: the literal in-order fold; the corpus-scale path is
-    * [[bpeTokens]] / [[graft.exprs.BpeTokenizeExpr]]). */
-  def bpeTokenize(word: String,
-      merges: scala.Seq[(String, String)]): scala.Seq[String] =
-    merges.foldLeft(word.map(_.toString).toArray :+ "</w>")(applyBpeMerge).toSeq
-
-  /** Corpus-scale BPE tokenization: text column → array of merged
-    * symbols, native one-pass expression (rank-greedy per word — provably
-    * identical to the in-order fold because a merged symbol only ever
-    * participates in later-rank rules). `size(bpeTokens(...))` is the
-    * trained-tokenizer token count the packing/budget ops consume. */
-  def bpeTokens(text: Column, merges: scala.Seq[(String, String)]): Column =
-    graft.exprs.BpeTokenizeExpr.column(text, merges)
-
   /** Epoch-repetition materialization: given a per-row repetition
     * factor in basis points (25000 = 2.5 epochs — typically from
     * [[temperatureWeights]]-style mixture math), emit one (row, epoch)
@@ -818,32 +701,6 @@ object Training {
       assigned.select(col(idCol), col("cid")), idCol, "cid", keepFracBp,
       valName = "keep", trainName = "drop")
   }
-
-  // ------------------------------------------------- artifact persistence
-
-  /** Persist a learned BPE merge table to parquet (rank order preserved)
-    * — train once on the corpus, reuse across jobs (the same contract as
-    * [[graft.llmops.Dedup.minhashIndex]] for signature tables). */
-  def saveMerges(spark: SparkSession, merges: scala.Seq[(String, String)],
-      path: String): Unit = {
-    import spark.implicits._
-    merges.zipWithIndex
-      .map { case ((a, b), i) => (i.toLong, a, b) }
-      .toDF("rank", "left", "right")
-      .coalesce(1).write.mode("overwrite").parquet(path)
-  }
-
-  def loadMerges(spark: SparkSession, path: String): scala.Seq[(String, String)] =
-    spark.read.parquet(path).orderBy(col("rank")).collect()
-      .map(r => (r.getAs[String]("left"), r.getAs[String]("right"))).toSeq
-
-  /** Persist fitted k-means centroids (cid, cvec) — the reusable model
-    * for [[KMeans.assign]]-style scoring of new batches. */
-  def saveCentroids(centroids: DataFrame, path: String): Unit =
-    centroids.coalesce(1).write.mode("overwrite").parquet(path)
-
-  def loadCentroids(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
 
   /** Sequence-length bucketing for padded-batch training: each document
     * is assigned the smallest configured bucket length ≥ its token count

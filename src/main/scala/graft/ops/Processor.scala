@@ -159,7 +159,8 @@ object DedupeProc {
 
 /** `dedupe` (`lib/processor/dedupe.go:32-58`): drop rows with an
   * already-seen key. Batch mode = dropDuplicates (state = shuffle hash);
-  * streaming uses dropDuplicatesWithinWatermark (see graft.streaming). */
+  * on a stream the same dropDuplicates keeps every seen key in state
+  * (no watermark, so no row is ever dropped as late). */
 final case class DedupeProc(key: String, hash: String = "none") extends Processor {
   def apply(df: DataFrame): DataFrame = {
     val keyed = df.withColumn("_dedupe_key",

@@ -122,16 +122,10 @@ object Sketches {
       .agg(count(lit(1)).as("cnt"))
   }
 
-  /** Merge two count-min sketches of identical (d, w) geometry:
-    * counter-wise sum. */
-  def countMinMerge(a: DataFrame, b: DataFrame): DataFrame =
-    a.unionByName(b).groupBy(col("j"), col("pos"))
-      .agg(sum(col("cnt")).as("cnt"))
-
   /** Point-query the sketch for each probe value: est = min over the d
     * rows of the counter at (j, hash_j(v)) — absent counters read 0.
-    * The probe list is query-sized; its positions broadcast against the
-    * ≤ d·w-row sketch. Output: (v, est), probe order by value. */
+    * The probe list is query-sized and joins the ≤ d·w-row sketch on
+    * (j, pos). Output: (v, est), probe order by value. */
   def countMinEstimate(sketch: DataFrame, probes: Seq[String], d: Int,
       w: Int): DataFrame = {
     require(probes.nonEmpty, "countMinEstimate needs probes")
@@ -140,7 +134,7 @@ object Sketches {
     val pp = probes.toDF("v")
       .select(col("v"), explode(sequence(lit(0), lit(d - 1))).as("j"))
       .select(col("v"), col("j"), cmPos(col("j"), col("v"), w).as("pos"))
-    broadcast(pp).join(sketch, Seq("j", "pos"), "left")
+    pp.join(sketch, Seq("j", "pos"), "left")
       .groupBy(col("v"))
       .agg(min(coalesce(col("cnt"), lit(0L))).as("est"))
       .orderBy(col("v"))

@@ -184,18 +184,6 @@ object OpsQueries {
       .orderBy(col("bucket"))
   }
 
-  /** The q13 dedupe pipeline executed as a STREAM — the batch/stream
-    * duality gate: the same Envelope.wrap → DedupeProc → unwrap
-    * composition runs under Structured Streaming (file source split
-    * into 4 files; maxFilesPerTrigger=2 so Trigger.AvailableNow drives a
-    * genuine MULTI-micro-batch execution with dedupe state carried
-    * ACROSS batches — r12: 2 files/trigger, the q172 posture, because
-    * the r11 ground truth showed driver-side per-batch planning
-    * (~1.5 s/gate) dominating all 1-file gates; state still crosses a
-    * batch boundary, and the converged answer is batch-count-invariant),
-    * lands in a parquet sink, and must hash-match the same DuckDB oracle
-    * as the batch run. Only key columns are emitted, so which duplicate
-    * survives per key cannot affect the result. */
   /** Stage the events table as a 4-file parquet copy under tmp — input
     * prep for the streaming gates (q166/q167), not the operator under
     * test. Cached per (source dir, content fingerprint) so regenerated
@@ -281,6 +269,24 @@ object OpsQueries {
       java.nio.file.Paths.get(base), prefix).toString
   }
 
+  /** The q13 dedupe pipeline executed as a STREAM — the batch/stream
+    * duality gate: the same Envelope.wrap → DedupeProc → unwrap
+    * composition runs under Structured Streaming (file source split
+    * into 4 files; maxFilesPerTrigger=2 so Trigger.AvailableNow drives a
+    * genuine MULTI-micro-batch execution with dedupe state carried
+    * ACROSS batches — r12: 2 files/trigger, the q172 posture, because
+    * the r11 ground truth showed driver-side per-batch planning
+    * (~1.5 s/gate) dominating all 1-file gates; state still crosses a
+    * batch boundary), lands in a parquet sink, and must hash-match the
+    * same DuckDB oracle as the batch run. Only key columns are emitted,
+    * so which duplicate survives per key cannot affect the result.
+    *
+    * The converged answer is batch-count-invariant here because the
+    * dedupe sets no watermark: every seen key stays in state and no row
+    * is dropped as late. The watermarked gates (q170/q171/q181) are
+    * invariant only because no row in these datasets is late relative to
+    * the per-batch watermark; a dataset with genuinely late rows would
+    * make their results depend on how the input is batched. */
   def q166(s: SparkSession, dir: String): DataFrame = {
     import java.nio.file.Files
     // sink + checkpoint stay fresh per run — that IS the streaming job

@@ -29,9 +29,16 @@ final case class BatchedSink(child: Sink,
 
 object Sinks {
 
-  /** `file`/`files`/object-store writers. format ∈ parquet | json | csv |
-    * lines. `partitionByMeta` = interpolated-path semantics → directory
-    * partitioning (the scalable form of per-message dynamic paths). */
+  /** Impossible-in-a-real-path value standing in for null in the
+    * partitionBy regime, so the null check rides the single write pass.
+    * \\u0001 is in Spark's partition-escape set (lands as %01 on disk);
+    * \\u0000 is NOT and would fail the write itself. A per-run UUID
+    * suffix makes collision with a legitimate data-derived path
+    * impossible (the marker value doesn't exist until this write
+    * starts). */
+  private def newNullPathMarker(): String =
+    s"\u0001null-${java.util.UUID.randomUUID().toString.take(8)}"
+
   /** Interpolated-path file output (`lib/output/writer/files.go:22,51`:
     * `path` is a Bloblang field expression — per-message dynamic paths).
     * The relative path compiles to a Column. Two write regimes, chosen
@@ -47,16 +54,6 @@ object Sinks {
     *    directories are then renamed to the same `base/<path>/` layout
     *    the per-path regime produces — P filtered data passes become
     *    1 data pass + P metadata renames. */
-  /** Impossible-in-a-real-path value standing in for null in the
-    * partitionBy regime, so the null check rides the single write pass.
-    * \\u0001 is in Spark's partition-escape set (lands as %01 on disk);
-    * \\u0000 is NOT and would fail the write itself. A per-run UUID
-    * suffix makes collision with a legitimate data-derived path
-    * impossible (the marker value doesn't exist until this write
-    * starts). */
-  private def newNullPathMarker(): String =
-    s"\u0001null-${java.util.UUID.randomUUID().toString.take(8)}"
-
   final case class DynamicPathSink(base: String, pathExpr: String,
       format: String = "lines", mode: String = "overwrite",
       autoPartitionThreshold: Int = 100) extends Sink {
@@ -87,7 +84,7 @@ object Sinks {
 
     private def writePerPath(withP: DataFrame, paths: Array[String]): Unit =
       paths.foreach { p =>
-        FileSink(checkInBase(p).getPath, format, Nil, mode)
+        FileSink(checkInBase(p).getPath, format, mode)
           .write(withP.filter(col("_graft_path") === p).drop("_graft_path"))
       }
 
@@ -175,45 +172,25 @@ object Sinks {
     }
   }
 
+  /** `file`/`files`/object-store writer to one static path. format ∈
+    * parquet | json | csv | lines: `lines` writes each row's content (else
+    * its serialized doc) as one text line; the other formats write the
+    * unwrapped doc columns. */
   final case class FileSink(path: String, format: String = "parquet",
-      partitionBy: scala.Seq[String] = Nil, mode: String = "overwrite") extends Sink {
+      mode: String = "overwrite") extends Sink {
     def write(df: DataFrame): Unit = {
       val out = format match {
         case "lines" =>
           df.select(Envelope.contentOrDoc(df).cast("string").as("value"))
         case _ => Envelope.unwrap(df)
       }
-      val w0 = out.write.mode(mode)
-      val w = if (partitionBy.nonEmpty) w0.partitionBy(partitionBy: _*) else w0
+      val w = out.write.mode(mode)
       format match {
         case "parquet" => w.parquet(path)
         case "json" => w.json(path)
         case "csv" => w.option("header", true).csv(path)
         case "lines" => w.text(path)
         case o => throw new IllegalArgumentException(s"unknown sink format $o")
-      }
-    }
-  }
-
-  /** Interpolated-path file output (`file` with `${! ... }` in the path,
-    * the reference's per-message dynamic paths): the dynamic part becomes
-    * a partition column, so each interpolated value lands in its own
-    * directory — the 100 TB-safe analog of per-message file handles. */
-  final case class InterpolatedFileSink(basePath: String, pathTemplate: String,
-      format: String = "lines", mode: String = "overwrite") extends Sink {
-    def write(df: DataFrame): Unit = {
-      val keyed = df.withColumn("__path",
-        graft.blobl.Interpolation.column(df, pathTemplate))
-      val out = format match {
-        case "lines" => keyed.select(
-          Envelope.contentOrDoc(df).cast("string").as("value"), col("__path"))
-        case _ => keyed.select(col(Envelope.Doc + ".*"), col("__path"))
-      }
-      val w = out.write.mode(mode).partitionBy("__path")
-      format match {
-        case "parquet" => w.parquet(basePath)
-        case "json" => w.json(basePath)
-        case _ => w.text(basePath)
       }
     }
   }

@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 import graft.model.Envelope
 import graft.sinks.Sink
 
@@ -16,8 +16,11 @@ import graft.sinks.Sink
   * than the reference's at-least-once.
   *
   * v3 has NO event-time windowing (batch `period` is its only windowing —
-  * `lib/message/batch/policy.go:53-59`); we expose real event-time
-  * tumbling/sliding/session windows + watermarks as a documented superset.
+  * `lib/message/batch/policy.go:53-59`). graft adds no windowing API of
+  * its own: event-time windows, watermarks, watermarked dedupe and
+  * stream-stream joins are Spark's operators applied to envelope
+  * streams, as the streaming gates q170–q182 (`queries/OpsQueries.scala`)
+  * do.
   */
 object Streaming {
 
@@ -43,34 +46,6 @@ object Streaming {
     graft.blobl.Mapping.compile(mapping).applyEnvelope(Envelope.wrapUnordered(base))
   }
 
-  /** `dedupe` with TTL (cache-backend TTL parity): drop duplicate keys
-    * within the watermark window. `tsField` is an event-time field inside
-    * doc. */
-  def dedupeWithinWatermark(df: DataFrame, keyExpr: String, tsField: String,
-      delay: String): DataFrame = {
-    val keyed = df
-      .withColumn("_ts", col(s"${Envelope.Doc}.$tsField"))
-      .withColumn("_key", graft.blobl.Mapping.envelopeExpr(df, keyExpr))
-      .withWatermark("_ts", delay)
-    keyed.dropDuplicatesWithinWatermark("_key").drop("_key", "_ts")
-  }
-
-  /** Event-time windowed aggregation over doc fields (tumbling when
-    * slide == window). Returns (window_start, window_end, key?, aggs). */
-  def windowedAgg(df: DataFrame, tsField: String, windowDur: String,
-      slide: Option[String], delay: String,
-      keyFields: scala.Seq[String], aggs: scala.Seq[Column]): DataFrame = {
-    val ts = col(s"${Envelope.Doc}.$tsField")
-    val withTs = df.withColumn("_ts", ts).withWatermark("_ts", delay)
-    val win = slide.map(s => window(col("_ts"), windowDur, s))
-      .getOrElse(window(col("_ts"), windowDur))
-    val keys = win +: keyFields.map(f => col(s"${Envelope.Doc}.$f").as(f))
-    withTs.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
-      .withColumn("window_start", col("window.start"))
-      .withColumn("window_end", col("window.end"))
-      .drop("window")
-  }
-
   /** Batch policy → processing-time micro-batching: the reference's
     * count/period flush (`lib/message/batch/policy.go`) becomes trigger
     * interval + per-micro-batch batch_id (foreachBatch assigns it). */
@@ -90,111 +65,6 @@ object Streaming {
         onBatch(batch)
       }
       .start()
-
-  /** Streaming NEAR-duplicate dedupe — the streaming face of the
-    * incremental batch-vs-corpus MinHash dedupe (q66): every micro-batch
-    * (1) drops in-batch near-dup pairs (keep-min), (2) LSH-checks the
-    * rest against the ACCUMULATED corpus index (a parquet directory
-    * holding id/text/signature — the corpus lives in storage, not in
-    * bounded streaming state, which is what survives an unbounded
-    * stream), (3) delivers the survivors and appends their rows to the
-    * index. Candidate generation is banded bucket equi-joins throughout;
-    * the corpus text is only touched by the exact-verify join on
-    * surviving candidates — the same 100 TB shape as the batch path.
-    * `idField`/`textField` are doc fields of the envelope stream. */
-  def runNearDupDedupe(df: DataFrame, idField: String, textField: String,
-      indexDir: String, sink: Sink, checkpoint: String,
-      threshold: Double = 0.9, numHashes: Int = 24,
-      trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery = {
-    import graft.llmops.Dedup
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        val idC = col(s"${Envelope.Doc}.$idField")
-        val textC = col(s"${Envelope.Doc}.$textField")
-        val plain = batch.select(idC.as("id"), textC.as("text"))
-          .localCheckpoint() // one materialization; reused by 3 plans below
-        // (1) in-batch near-dups: keep the smaller id of each pair
-        val inBatchDrop = Dedup.minhashPairs(plain, "id", "text",
-            numHashes = numHashes, threshold = threshold)
-          .select(greatest(col("id_a"), col("id_b")).as("id")).distinct()
-        val fresh = plain.join(inBatchDrop, scala.Seq("id"), "left_anti")
-        // (2) vs the accumulated corpus index
-        val dir = new java.io.File(indexDir)
-        val survivors =
-          if (dir.exists() && dir.listFiles() != null && dir.listFiles().nonEmpty) {
-            val corpus = spark.read.parquet(indexDir)
-            val dups = Dedup.incrementalNearDupWithIndex(
-              fresh, corpus.select(col("id"), col("text")),
-              corpus.drop("text"), "id", "text",
-              numHashes = numHashes, threshold = threshold)
-              .select(col("new_id").as("id")).distinct()
-            fresh.join(dups, scala.Seq("id"), "left_anti").localCheckpoint()
-          } else fresh
-        // (3) deliver + append to the corpus index (id, text, signature)
-        sink.write(batch
-          .join(survivors.select(col("id").as("_sid")),
-            idC === col("_sid"), "left_semi")
-          .withColumn(Envelope.BatchId, lit(id)))
-        Dedup.minhashIndex(survivors, "id", "text", numHashes = numHashes)
-          .join(survivors, scala.Seq("id"))
-          .write.mode("append").parquet(indexDir)
-      }
-      .start()
-  }
-
-  /** Watermarked stream-stream interval join — the streaming enrichment
-    * the reference approximates with sharded_join + cache lookups
-    * (`lib/input/sequence.go` sharded path): right-side rows within
-    * `within` of the left row's event time, equi-keyed. Both sides carry
-    * watermarks so Spark bounds the join state and evicts expired rows —
-    * state never grows with the stream, the property that makes this run
-    * forever at 100 TB/day.
-    *
-    * Output carries both sides' columns; disambiguate via the `l`/`r`
-    * aliases (`col("l.key")`). */
-  def intervalJoin(left: DataFrame, right: DataFrame, key: String,
-      leftTs: String, rightTs: String, leftDelay: String,
-      rightDelay: String, within: String): DataFrame = {
-    val l = left.withWatermark(leftTs, leftDelay).alias("l")
-    val r = right.withWatermark(rightTs, rightDelay).alias("r")
-    l.join(r, expr(
-      s"l.$key = r.$key AND r.$rightTs >= l.$leftTs - INTERVAL $within" +
-        s" AND r.$rightTs <= l.$leftTs + INTERVAL $within"))
-  }
-
-  /** Per-key quota across the stream's lifetime (the reference's
-    * rate_limit resource keyed by message content — `lib/ratelimit/`):
-    * the first `limit` rows of each key pass, everything after drops.
-    * flatMapGroupsWithState keeps one counter per key; rows ride through
-    * as JSON payloads so any envelope shape survives the typed hop.
-    * Output: (key, payload) — `from_json` restores the row downstream. */
-  def throttleByKey(df: DataFrame, keyExpr: String, limit: Int): DataFrame = {
-    require(limit > 0, s"limit must be positive, got $limit")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val keyed = df.select(
-      graft.blobl.Mapping.envelopeExpr(df, keyExpr)
-        .cast(StringType).as("key"),
-      to_json(struct(col("*"))).as("payload")).as[(String, String)]
-    keyed.groupByKey(_._1)
-      .flatMapGroupsWithState[Long, (String, String)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[(String, String)],
-            state: GroupState[Long]) =>
-          var n = state.getOption.getOrElse(0L)
-          val out = scala.collection.mutable.ListBuffer[(String, String)]()
-          rows.foreach { r =>
-            if (n < limit) out += ((key, r._2))
-            n += 1
-          }
-          state.update(n)
-          out.iterator
-      }.toDF("key", "payload")
-  }
 
   /** Streaming dedupe backed by a TTL'd key cache — the reference's
     * `dedupe` processor over a `memory` cache resource with `ttl`
@@ -217,7 +87,7 @@ object Streaming {
     * row. Requires the RocksDB state-store provider (the TWS operator
     * rejects the HDFS-backed one); callers set
     * `spark.sql.streaming.stateStore.providerClass`. Rows ride as JSON
-    * payloads like [[throttleByKey]]; output (key, payload). */
+    * payloads; output (key, payload). */
   def dedupeByKeyTtl(df: DataFrame, keyExpr: String,
       ttl: java.time.Duration): DataFrame = {
     val spark = df.sparkSession
@@ -234,22 +104,6 @@ object Streaming {
       .toDF("key", "payload")
   }
 
-  /** Stateful named counters (the `cache` incrby / `count()` function
-    * semantics) via mapGroupsWithState: running count per key across
-    * micro-batches. */
-  def statefulCounter(df: DataFrame, keyExpr: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val keyed = df.select(graft.blobl.Mapping.envelopeExpr(df, keyExpr)
-      .cast(StringType).as("key")).as[String]
-    keyed.groupByKey(identity)
-      .mapGroupsWithState[Long, (String, Long)](GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[String], state: GroupState[Long]) =>
-          val n = state.getOption.getOrElse(0L) + rows.size
-          state.update(n)
-          (key, n)
-      }.toDF("key", "count")
-  }
 }
 
 /** The TTL'd seen-key state behind [[Streaming.dedupeByKeyTtl]]: one

@@ -968,6 +968,25 @@ class JqSpec extends AnyFunSuite {
       """{"n":0}""") == "[0,10,20]")
   }
 
+  test("limit(k; repeat(f)): the cap pushdown keeps output and error flag when f fails past k") {
+    // f fails at the 4th application (. = 8); k = 3 stops before it
+    val f = """if . < 8 then . * 2 else error("boom") end"""
+    def outErr(q: String): (String, String) = {
+      val out = JqProc(q)(Envelope.wrapUnordered(jdf("""{"n":1}""")))
+      val r = out.select(to_json(col(Envelope.Doc)), col(Envelope.Error)).head()
+      (r.getString(0), r.getString(1))
+    }
+    val pushedQ = s".n | limit(3; repeat($f))"
+    // a non-literal k is not eligible: repeat runs to its default cap 64
+    val plainQ = s".n | limit(3 + 0; repeat($f))"
+    assert(!graft.blobl.Jq.translate(pushedQ).toString.contains("LitLong(64)"))
+    assert(graft.blobl.Jq.translate(plainQ).toString.contains("LitLong(64)"))
+    val pushed = outErr(pushedQ)
+    val plain = outErr(plainQ)
+    assert(pushed == plain)
+    assert(pushed == (("[1,2,4]", null)))
+  }
+
   test("math tail: exp2/exp10/trunc/cbrt/atan2, nan/infinite classifiers") {
     assert(run(".n | exp2", """{"n":3}""") == "8.0")
     assert(run(".n | exp10", """{"n":2}""") == "100.0")

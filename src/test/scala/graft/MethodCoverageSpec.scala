@@ -73,29 +73,51 @@ class MethodCoverageSpec extends AnyFunSuite {
       == List("""{"n":42.5,"i":42}""")) // bad → null → omitted from JSON
   }
 
+  private val langRows = scala.Seq(
+    """{"id":1,"lang":"en","s":"one"}""", """{"id":2,"lang":"de","s":"zwei"}""",
+    """{"id":3,"lang":"en","s":"three"}""")
+
+  /** Writes `langRows` through a YAML `file` output with the interpolated
+    * path `<base>/${! this.lang }`, compiled by `Config.loadOutput`, once
+    * per `DynamicPathSink` write regime: the default threshold (two paths:
+    * one write per path) and `auto_partition_threshold: 1` (one
+    * partitioned write, renamed to the same layout). Returns the base
+    * directory of each write. */
+  private def writeByLang(codec: String): scala.Seq[String] =
+    scala.Seq(None -> 100, Some(1) -> 1).map { case (threshold, expected) =>
+      val base = java.nio.file.Files.createTempDirectory("graft-dyn").toString
+      val sink = graft.runtime.Config.loadOutput(
+        (scala.Seq("file:", s"  path: '$base/$${! this.lang }'", s"  codec: $codec") ++
+          threshold.map(t => s"  auto_partition_threshold: $t")).mkString("\n"))
+      sink match {
+        case d: graft.sinks.Sinks.DynamicPathSink =>
+          assert(d.autoPartitionThreshold == expected)
+        case o => fail(s"interpolated path compiled to $o")
+      }
+      sink.write(Envelope.wrap(jdf(langRows: _*), scala.Seq(col("id"))))
+      assert(new java.io.File(base).list().sorted.toSeq == scala.Seq("de", "en"))
+      base
+    }
+
+  private def rows(df: org.apache.spark.sql.DataFrame): scala.Seq[scala.Seq[Any]] =
+    df.select("id", "lang", "s").orderBy("id").collect().map(_.toSeq).toSeq
+
   test("interpolated dynamic-path sink partitions by value") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-dyn").toString
-    val env = Envelope.wrap(jdf(
-      """{"id":1,"lang":"en","s":"one"}""", """{"id":2,"lang":"de","s":"zwei"}""",
-      """{"id":3,"lang":"en","s":"three"}"""), scala.Seq(col("id")))
-      .withColumn(Envelope.Content, col("doc.s").cast("binary"))
-    graft.sinks.Sinks.InterpolatedFileSink(dir, "lang=${! this.lang }").write(env)
-    val en = spark.read.text(s"$dir/__path=lang%3Den").count()
-    val de = spark.read.text(s"$dir/__path=lang%3Dde").count()
-    assert(en == 2 && de == 1)
+    writeByLang("lines").foreach { base =>
+      // each line is the whole doc, serialized
+      assert(rows(spark.read.json(s"$base/en")) ==
+        scala.Seq(scala.Seq(1L, "en", "one"), scala.Seq(3L, "en", "three")))
+      assert(rows(spark.read.json(s"$base/de")) == scala.Seq(scala.Seq(2L, "de", "zwei")))
+    }
   }
 
   test("interpolated dynamic-path sink: structured (parquet) format") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-dynp").toString
-    val env = Envelope.wrap(jdf(
-      """{"id":1,"lang":"en","s":"one"}""", """{"id":2,"lang":"de","s":"zwei"}"""),
-      scala.Seq(col("id")))
-    graft.sinks.Sinks.InterpolatedFileSink(dir, "lang=${! this.lang }",
-      format = "parquet").write(env)
-    val back = spark.read.parquet(dir)
-    assert(back.count() == 2)
-    assert(back.columns.contains("__path") && back.columns.contains("s"))
-    assert(back.filter(col("__path") === "lang=en")
-      .select("s").head().getString(0) == "one")
+    writeByLang("parquet").foreach { base =>
+      val en = spark.read.parquet(s"$base/en")
+      assert(en.columns.toSeq == scala.Seq("id", "lang", "s"))
+      assert(rows(en) ==
+        scala.Seq(scala.Seq(1L, "en", "one"), scala.Seq(3L, "en", "three")))
+      assert(rows(spark.read.parquet(s"$base/de")) == scala.Seq(scala.Seq(2L, "de", "zwei")))
+    }
   }
 }

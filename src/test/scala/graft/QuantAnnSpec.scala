@@ -95,20 +95,6 @@ class QuantAnnSpec extends AnyFunSuite {
     assert(a === b)
   }
 
-  test("PQ index parquet round trip: persisted search ≡ direct search") {
-    val quant = Similarity.quantizeInt8(emb, "vec_id", "embedding")
-    val pq = Similarity.Pq(m = 8, ksub = 16)
-    val cb = pq.codebook(quant)
-    val dir = java.nio.file.Files.createTempDirectory("pqidx").toString
-    pq.writeIndex(quant, cb, dir)
-    val (cb2, codes) = pq.readIndex(spark, dir)
-    assert(cb2 === cb)
-    val q = quant.filter(col("id") < 5)
-    val direct = pq.topK(q, quant, 5, cb).collect().toSet
-    val loaded = pq.topKWithCodes(q, codes, 5, cb2).collect().toSet
-    assert(loaded === direct)
-  }
-
   test("PQ ADC neighbors approximate exact kNN (recall floor)") {
     val quant = Similarity.quantizeInt8(emb, "vec_id", "embedding")
     val pq = Similarity.Pq(m = 8, ksub = 16)

@@ -675,9 +675,9 @@ class ReferenceVectorsSpec extends AnyFunSuite {
 
   test("interpolation leaves unsuspicious strings alone (field/expression_test.go)") {
     import spark.implicits._
-    val df = scala.Seq("bar").toDF("foo")
+    val df = graft.model.Envelope.wrapUnordered(scala.Seq("bar").toDF("foo"))
     def render(t: String): String =
-      df.select(graft.blobl.Interpolation.columnPlain(df, t).as("r"))
+      df.select(graft.blobl.Interpolation.column(df, t).as("r"))
         .head().getString(0)
     assert(render("static string hello world") == "static string hello world")
     assert(render("${{! not a thing") == "${{! not a thing")

@@ -4,8 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.llmops.{Index, Training}
 import graft.ops.Sketches
 
-/** Hand-computed cases for the retrieval index (postings / phrase /
-  * BM25 / commonness), the KMV distinct sketch, and padding buckets.
+/** Hand-computed cases for the retrieval index (phrase / BM25 /
+  * commonness), the KMV distinct sketch, and padding buckets.
   */
 class RetrievalSketchSpec extends AnyFunSuite {
   lazy val spark = Sessions.builder("4").getOrCreate()
@@ -17,13 +17,6 @@ class RetrievalSketchSpec extends AnyFunSuite {
     (3L, "lazy dog sleeps"),
     (4L, "the lazy quick brown dog")
   ).toDF("doc_id", "text")
-
-  test("postings: 0-based positions, one row per occurrence") {
-    val out = Index.postings(Seq((1L, "a b a")).toDF("doc_id", "text"),
-        "doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
-    assert(out === Set((1L, 0, "a"), (1L, 1, "b"), (1L, 2, "a")))
-  }
 
   test("phraseHits: doc and occurrence counts; mixed phrase lengths; zero-hit absent") {
     val out = Index.phraseHits(docs, "doc_id", "text",
@@ -95,17 +88,6 @@ class RetrievalSketchSpec extends AnyFunSuite {
     val out = Sketches.countMinEstimate(sk, Seq("a", "b", "absent"), 3, 16)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(out("a") >= 40L && out("b") >= 7L && out("absent") >= 0L)
-  }
-
-  test("countMin: merged sketches equal the sketch of the union") {
-    val a = (1 to 50).map(i => s"v${i % 9}").toDF("v")
-    val b = (1 to 30).map(i => s"v${i % 5}").toDF("v")
-    val merged = Sketches.countMinMerge(
-      Sketches.countMinSketch(a, "v", 4, 32),
-      Sketches.countMinSketch(b, "v", 4, 32))
-    val direct = Sketches.countMinSketch(a.unionByName(b), "v", 4, 32)
-    assert(merged.orderBy("j", "pos").collect().map(_.toSeq).toSeq ===
-      direct.orderBy("j", "pos").collect().map(_.toSeq).toSeq)
   }
 
   test("bloomSemiJoin: bit-identical to the plain semi-join even with a saturated filter") {

@@ -42,84 +42,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(spark.sql("SELECT count(*) FROM s1 WHERE etype = 'CLICK'").head().getLong(0) > 0)
   }
 
-  test("event-time windowed aggregation with watermark") {
-    val env = eventsStream
-    // derive the event-time field from the NTZ timestamp (UTC session);
-    // BloblangProc-on-a-stream composition is covered by the first test
-    val withTs = BloblangProc("root = this")(env)
-    val out = Streaming.windowedAgg(
-      withTs.withColumn("doc",
-        col("doc").withField("ets", col("doc.ts").cast(TimestampType))),
-      tsField = "ets", windowDur = "1 hour", slide = None, delay = "1 hour",
-      keyFields = scala.Seq("event_type"),
-      aggs = scala.Seq(count(lit(1)).as("n")))
-    val q = out.writeStream.format("memory").queryName("s2").outputMode("append").start()
-    q.processAllAvailable(); q.stop()
-    // windows close only once the watermark passes; with a single batch the
-    // final windows stay open, so compare the CLOSED prefix against batch
-    val streamed = spark.sql("SELECT sum(n) FROM s2").head()
-    assert(!streamed.isNullAt(0) && streamed.getLong(0) > 0)
-  }
-
-  test("watermarked dedupe drops in-window duplicates") {
-    val env = eventsStream
-    val withTs = env.withColumn("doc",
-      col("doc").withField("ets", col("doc.ts").cast(TimestampType)))
-    val dd = Streaming.dedupeWithinWatermark(withTs,
-      keyExpr = """this.user_id.string() + ":" + this.event_type""",
-      tsField = "ets", delay = "10 days")
-    val q = Envelope.unwrap(dd).writeStream
-      .format("memory").queryName("s3").outputMode("append").start()
-    q.processAllAvailable(); q.stop()
-    val n = spark.sql("SELECT count(*) FROM s3").head().getLong(0)
-    val distinct = spark.read.parquet(s"$dir/events.parquet")
-      .select("user_id", "event_type").distinct().count()
-    assert(n == distinct)
-  }
-
-  test("stateful counter accumulates across micro-batches") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val ms = MemoryStream[String]
-    val env = Envelope.wrapUnordered(ms.toDF().select(col("value").as("k")))
-    val counted = Streaming.statefulCounter(env, "this.k")
-    val q = counted.writeStream.format("memory").queryName("s4")
-      .outputMode("update").start()
-    ms.addData("a", "a", "b"); q.processAllAvailable()
-    ms.addData("a", "b"); q.processAllAvailable()
-    q.stop()
-    val last = spark.sql(
-      "SELECT key, max(count) FROM s4 GROUP BY key ORDER BY key").collect()
-      .map(r => (r.getString(0), r.getLong(1))).toList
-    assert(last == List(("a", 3L), ("b", 2L)))
-  }
-
-  test("stream-stream interval join: equi-key within time bound, state bounded") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val lms = MemoryStream[(Long, java.sql.Timestamp)]
-    val rms = MemoryStream[(Long, java.sql.Timestamp, String)]
-    def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    val l = lms.toDF().toDF("k", "lts")
-    val r = rms.toDF().toDF("k", "rts", "tag")
-    val joined = Streaming.intervalJoin(l, r, "k", "lts", "rts",
-        "1 minute", "1 minute", "10 minutes")
-      .select(col("l.k"), col("tag"))
-    val q = joined.writeStream.format("memory").queryName("ssj")
-      .outputMode("append").start()
-    lms.addData((1L, ts("2024-01-01 10:00:00")), (2L, ts("2024-01-01 10:00:00")))
-    rms.addData(
-      (1L, ts("2024-01-01 10:05:00"), "in"),     // +5m -> joins
-      (1L, ts("2024-01-01 10:30:00"), "out"),    // +30m -> outside bound
-      (2L, ts("2024-01-01 09:55:00"), "before")) // -5m -> joins
-    q.processAllAvailable(); q.stop()
-    val got = spark.sql("SELECT k, tag FROM ssj ORDER BY k").collect()
-      .map(r0 => (r0.getLong(0), r0.getString(1))).toList
-    assert(got === List((1L, "in"), (2L, "before")))
-  }
-
   test("state eviction MEASURED: windowed-agg state stays flat as batches accumulate") {
     // The 100 TB streaming claim, instrumented: drive 24 micro-batches
     // whose event time advances 1 h each, and read the state-store row
@@ -153,40 +75,6 @@ class StreamingSpec extends AnyFunSuite {
     // and the emitted (closed) windows cover all but the open tail
     val emitted = spark.sql("SELECT sum(n) FROM evict1").head().getLong(0)
     assert(emitted >= 50L * 22)
-  }
-
-  test("state eviction MEASURED: interval-join state is horizon-bounded, not corpus-bounded") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val lms = MemoryStream[(Long, java.sql.Timestamp)]
-    val rms = MemoryStream[(Long, java.sql.Timestamp, String)]
-    val joined = Streaming.intervalJoin(
-      lms.toDF().toDF("k", "lts"), rms.toDF().toDF("k", "rts", "tag"),
-      "k", "lts", "rts", "1 minute", "1 minute", "10 minutes")
-      .select(col("l.k"), col("tag"))
-    val q = joined.writeStream.format("memory").queryName("evict2")
-      .outputMode("append").start()
-    val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
-    // 20 batches, both sides advancing 30 min each — far past the
-    // ±10 min join range, so old rows must leave the state store
-    (0 until 20).foreach { b =>
-      val base = t0 + b * 1800000L
-      lms.addData((0L until 10L).map(i =>
-        (i, new java.sql.Timestamp(base + i * 1000L))): _*)
-      rms.addData((0L until 10L).map(i =>
-        (i, new java.sql.Timestamp(base + i * 1000L), s"b$b")): _*)
-      q.processAllAvailable()
-    }
-    val states = q.recentProgress.toSeq
-      .flatMap(p => Option(p.stateOperators).toSeq.flatten)
-      .map(_.numRowsTotal).filter(_ > 0)
-    q.stop()
-    assert(states.nonEmpty)
-    // 400 rows fed; the watermark horizon (range + delay ≈ one batch
-    // step) keeps at most ~2 batches of both sides resident
-    assert(states.max <= 60,
-      s"join state grew to ${states.max} rows — range eviction broken")
   }
 
   test("dedupeByKeyTtl: TTL'd key cache via transformWithState (RocksDB state)") {
@@ -233,29 +121,6 @@ class StreamingSpec extends AnyFunSuite {
       s"expected a,b,c then re-admitted a — got $keys")
   }
 
-  test("throttleByKey: per-key quota persists across micro-batches") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val ms = MemoryStream[(String, Long)]
-    val env = Envelope.wrapUnordered(
-      ms.toDF().toDF("k", "v"))
-    val out = Streaming.throttleByKey(env, "this.k", limit = 3)
-    val q = out.writeStream.format("memory").queryName("thr")
-      .outputMode("append").start()
-    ms.addData(("a", 1L), ("a", 2L), ("b", 1L)); q.processAllAvailable()
-    ms.addData(("a", 3L), ("a", 4L), ("b", 2L)); q.processAllAvailable()
-    q.stop()
-    val counts = spark.sql("SELECT key, count(*) FROM thr GROUP BY key ORDER BY key")
-      .collect().map(r0 => (r0.getString(0), r0.getLong(1))).toList
-    // a: 4 arrivals, quota 3; b: 2 arrivals, all pass
-    assert(counts === List(("a", 3L), ("b", 2L)))
-    // payload JSON restores the original doc fields
-    val v = spark.sql("SELECT payload FROM thr WHERE key='b'").collect()
-      .map(r0 => r0.getString(0))
-    assert(v.forall(_.contains("\"k\":\"b\"")))
-  }
-
   test("stream registry lifecycle") {
     val reg = new StreamRegistry
     val out = BloblangProc("root.event_id = this.event_id")(eventsStream)
@@ -274,9 +139,9 @@ class StreamingSpec extends AnyFunSuite {
     val withTs = env.withColumn("doc",
       col("doc").withField("ets", col("doc.ts").cast(TimestampType)))
     // sliding: 2h window every 1h
-    val sliding = graft.streaming.Streaming.windowedAgg(withTs,
-      tsField = "ets", windowDur = "2 hours", slide = Some("1 hour"), delay = "1 hour",
-      keyFields = Nil, aggs = scala.Seq(count(lit(1)).as("n")))
+    val sliding = withTs.withColumn("_ts", col("doc.ets")).withWatermark("_ts", "1 hour")
+      .groupBy(window(col("_ts"), "2 hours", "1 hour"))
+      .agg(count(lit(1)).as("n"))
     val q1 = sliding.writeStream.format("memory").queryName("w_slide").outputMode("append").start()
     q1.processAllAvailable(); q1.stop()
     assert(spark.sql("SELECT count(*) FROM w_slide").head().getLong(0) > 0)
@@ -427,37 +292,6 @@ class StreamingSpec extends AnyFunSuite {
     val survivors = graft.ops.CachedDedupeProc(store, "this.k")(batch)
     assert(survivors.select(col("doc.k")).collect().map(_.getString(0)).toSeq
       == scala.Seq("fresh"))
-  }
-
-  test("streaming near-dup dedupe: micro-batches check against the accumulated corpus index") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val idx = Files.createTempDirectory("graft-nd-idx").toString + "/index"
-    val out = Files.createTempDirectory("graft-nd-out").toString + "/out"
-    val ckpt = Files.createTempDirectory("graft-nd-ck").toString
-    val base = "the quick brown fox jumps over the lazy dog again and again " * 8
-    val ms = MemoryStream[(Long, String)]
-    val env = Envelope.wrapUnordered(ms.toDF().toDF("id", "text"))
-    val q = Streaming.runNearDupDedupe(env, "id", "text", idx,
-      graft.sinks.Sinks.FileSink(out, "json", Nil, "append"), ckpt)
-    // batch 1: two distinct docs + an in-batch near-dup of the first
-    ms.addData((1L, base + "alpha ending"), (2L, "completely different content here"),
-      (3L, base + "alpha endinX"))
-    q.processAllAvailable()
-    // batch 2: a near-dup of doc 1 (cross-batch, via the index) + a fresh doc
-    ms.addData((4L, base + "alpha endingZ"), (5L, "another unrelated document"))
-    q.processAllAvailable()
-    q.stop()
-    val delivered = spark.read.json(out).select("id")
-      .collect().map(_.getLong(0)).sorted.toSeq
-    // 3 dropped in-batch (near-dup of 1); 4 dropped cross-batch
-    assert(delivered == scala.Seq(1L, 2L, 5L), s"delivered: $delivered")
-    // the corpus index accumulated exactly the survivors (id/text/sigs)
-    val indexed = spark.read.parquet(idx)
-    assert(indexed.select("id").collect().map(_.getLong(0)).sorted.toSeq
-      == scala.Seq(1L, 2L, 5L))
-    assert(indexed.columns.contains("text") && indexed.columns.count(_.startsWith("m")) >= 16)
   }
 
   test("count-min sketch maintains incrementally over a stream (update mode)") {

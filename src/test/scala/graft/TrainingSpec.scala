@@ -299,83 +299,6 @@ class TrainingSpec extends AnyFunSuite {
     assert(out.toSet == exp)
   }
 
-  test("mixtureRates solves target weights under an epoch cap") {
-    import graft.llmops.Training
-    val rates = Training.mixtureRates(
-      sourceTokens = Map("web" -> 1000000L, "code" -> 100000L, "wiki" -> 50000L),
-      weights = Map("web" -> 0.6, "code" -> 0.3, "wiki" -> 0.1),
-      budgetTokens = 500000L, maxEpochs = 1.0)
-    // web: wants 300k of 1M → 0.3; code: wants 150k of 100k → capped at 1 epoch
-    assert(math.abs(rates("web").rate - 0.3) < 1e-12 && !rates("web").capped)
-    assert(rates("code").rate === 1.0 && rates("code").capped)
-    assert(rates("code").tokens === 100000L)
-    // wiki: wants 50k of 50k → exactly 1 epoch, not capped
-    assert(rates("wiki").rate === 1.0 && !rates("wiki").capped)
-    // the realized plan feeds mixStrata directly
-    val df = (0 until 300).map(i =>
-      (i.toLong, if (i % 3 == 0) "web" else if (i % 3 == 1) "code" else "wiki"))
-      .toDF("id", "src")
-    val kept = Training.mixStrata(df, col("src"), col("id"),
-      rates.view.mapValues(_.rate).toMap)
-    val n = kept.groupBy("src").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(n("code") === 100L && n("wiki") === 100L) // rate 1.0 keeps all
-    assert(n("web") > 10 && n("web") < 60) // ~30% of 100
-  }
-
-  test("bpeTrain learns the textbook merge sequence (Sennrich et al. example)") {
-    import graft.llmops.Training
-    // vocabulary low:5, lower:2, newest:6, widest:3 — the classic demo
-    val corpus = (Seq.fill(5)("low") ++ Seq.fill(2)("lower") ++
-      Seq.fill(6)("newest") ++ Seq.fill(3)("widest")).mkString(" ")
-    val df = Seq(corpus).toDF("text")
-    val merges = Training.bpeTrain(df, "text", numMerges = 4)
-    // hand-computed: (e,s)@9 → (es,t)@9 → (est,</w>)@9 → (l,o)@7
-    assert(merges === Seq("e" -> "s", "es" -> "t", "est" -> "</w>", "l" -> "o"))
-    assert(Training.bpeTokenize("newest", merges) === Seq("n", "e", "w", "est</w>"))
-    assert(Training.bpeTokenize("low", merges) === Seq("lo", "w", "</w>"))
-    // merge application is left-to-right non-overlapping on symbol arrays
-    assert(Training.applyBpeMerge(Array("a", "a", "a"), ("a", "a")).toSeq ===
-      Seq("aa", "a"))
-  }
-
-  test("bpeTokens expression matches the in-order fold reference on real text") {
-    import graft.llmops.Training
-    val docs = Tables.t(spark, "/root/testdata/sf0.001", "documents").limit(50)
-    val merges = Training.bpeTrain(docs, "text", numMerges = 12)
-    assert(merges.size === 12)
-    val got = docs.select(col("text"),
-        Training.bpeTokens(col("text"), merges).as("toks"))
-      .collect()
-    assert(got.nonEmpty)
-    got.foreach { r =>
-      val text = r.getString(0)
-      val want = text.split(" ", -1).filter(_.nonEmpty).toSeq
-        .flatMap(w => Training.bpeTokenize(w, merges))
-      assert(r.getSeq[String](1) === want, s"text: $text")
-    }
-  }
-
-  test("BPE merges and k-means centroids round-trip through parquet") {
-    import graft.llmops.Training
-    val dir = java.nio.file.Files.createTempDirectory("graft-artifacts")
-    val docs = Tables.t(spark, "/root/testdata/sf0.001", "documents").limit(30)
-    val merges = Training.bpeTrain(docs, "text", numMerges = 6)
-    Training.saveMerges(spark, merges, s"$dir/merges")
-    assert(Training.loadMerges(spark, s"$dir/merges") === merges)
-
-    val emb = Tables.t(spark, "/root/testdata/sf0.001", "embeddings").limit(40)
-    val (_, cents) = Training.KMeans.fit(emb, "vec_id", "embedding", k = 4, iters = 1)
-    Training.saveCentroids(cents, s"$dir/cents")
-    val loaded = Training.loadCentroids(spark, s"$dir/cents")
-    // scoring a new batch with the loaded model reproduces the assignment
-    val a = Training.KMeans.assign(emb, "vec_id", "embedding", cents)
-      .select("vec_id", "cid").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val b = Training.KMeans.assign(emb, "vec_id", "embedding", loaded)
-      .select("vec_id", "cid").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(a === b && a.size === 40)
-  }
-
   test("centroidOutliers flags the farthest-from-centroid fraction per cluster") {
     // 9 vectors tight around axis 0 + 1 clear straggler leaning to axis 1;
     // 10 around axis 1 with a straggler leaning to axis 0.
