@@ -641,15 +641,6 @@ object Training {
           .otherwise(array().cast("array<bigint>"))).as("epoch"))
   }
 
-  /** Size-balanced shard assignment (the output-layout step: N files of
-    * roughly equal token mass, not row count): rows are totally ordered
-    * by (tokens DESC, id) and dealt to shards in boustrophedon ("snake")
-    * order — shard 0..N-1 then N-1..0 — the classic LPT-flavored greedy
-    * that keeps every shard within one max-document of the mean without
-    * any sequential bin state. Total order via the partitioned two-pass
-    * assignment ([[graft.model.Envelope.withGlobalSeq]]) — no global
-    * window at any scale.
-    * Output: (id, n_tokens, rank, shard). */
   /** Rendezvous (highest-random-weight) shard assignment: every row
     * goes to argmax over shards of md5(id ":" shard). The consistent-
     * sharding property incremental pipelines want: growing n → n+1
@@ -671,6 +662,15 @@ object Training {
     df.withColumn("shard", winner.getField("s"))
   }
 
+  /** Size-balanced shard assignment (the output-layout step: N files of
+    * roughly equal token mass, not row count): rows are totally ordered
+    * by (tokens DESC, id) and dealt to shards in boustrophedon ("snake")
+    * order — shard 0..N-1 then N-1..0 — the classic LPT-flavored greedy
+    * that keeps every shard within one max-document of the mean without
+    * any sequential bin state. Total order via the partitioned two-pass
+    * assignment ([[graft.model.Envelope.withGlobalSeq]]) — no global
+    * window at any scale.
+    * Output: (id, n_tokens, rank, shard). */
   def balancedShards(df: DataFrame, idCol: String, tokensCol: Column,
       nShards: Int): DataFrame = {
     require(nShards > 0, s"nShards must be positive, got $nShards")

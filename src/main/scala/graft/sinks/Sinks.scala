@@ -8,8 +8,9 @@ import graft.blobl.{Mapping => Blobl}
 /** Output components (reference registry `lib/output/constructor.go:158-221`).
   * A sink consumes an envelope DataFrame. Composition sinks (`switch`,
   * `fan_out`, `fallback`, `drop_on_error`) are predicate-routed writes —
-  * in streaming these run inside one `foreachBatch` so the source is read
-  * once per micro-batch (see graft.streaming.StreamRunner).
+  * in streaming they run inside the one `foreachBatch` of
+  * [[graft.streaming.Streaming.run]], so the source is read once per
+  * micro-batch.
   */
 trait Sink extends Serializable {
   def write(df: DataFrame): Unit
