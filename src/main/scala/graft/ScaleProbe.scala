@@ -32,17 +32,20 @@ import graft.obs.JobProfile
   *    nodes; per-key structure identical).
   *
   * Emits one `SCALE <op> mult=<m> rows=<n> t=<s> out=<n>` line per
-  * measurement and writes the aggregate as JSON to SCALE_r10.json (or
-  * `--out <path>`), which ScaleLinearitySpec gates: wall-clock growth
-  * per 4× step must stay ≤ 1.3× linear and pair outputs must not blow
-  * up super-linearly. Each row also carries the measured SHUFFLE and
+  * measurement and merges the rows as JSON into SCALE_r10.json (or
+  * `--out <path>`; see [[writeJson]]), which ScaleLinearitySpec gates:
+  * wall-clock growth per 4× step must stay ≤ 1.3× linear and pair
+  * outputs must not blow up super-linearly. Each row also carries the measured SHUFFLE and
   * SPILL bytes (task metrics, from [[graft.obs.JobProfile]]): byte
   * counters are immune to the shared-host wall-clock noise (±2× on
   * repeat runs of identical code),
   * so a wall-clock wobble with exactly-linear bytes is adjudicated as
   * machine noise, super-linear bytes as a real plan defect.
   *
-  * Usage: sbt "runMain graft.ScaleProbe [--out path] [mults...]".
+  * Usage: sbt "runMain graft.ScaleProbe [--out path] [--ops a,b] [--attr]
+  * [mults...]". A family's steps compare rows across the SCALE_r10*.json
+  * files, so re-probe a family whole (every mult those files hold for it)
+  * on one box, never a single row next to rows timed on another host.
   */
 object ScaleProbe {
   /** `cross` (pair emitters only, else -1): pairs whose endpoints fall in
@@ -551,27 +554,65 @@ object ScaleProbe {
     buf.toSeq
   }
 
+  /** One artifact row, rendered on one line (the merge in [[writeJson]]
+    * reads rows back line by line). */
+  private def rowJson(r: Result): String = {
+    val cross = if (r.cross >= 0) s""","cross_pairs":${r.cross}""" else ""
+    val bytes =
+      if (r.shuffleBytes >= 0)
+        s""","shuffle_bytes":${r.shuffleBytes},"spill_bytes":${r.spillBytes}""" +
+        s""","shuffle_read":${r.shuffleRead},"shuffle_write":${r.shuffleWrite}""" +
+        s""","retried_tasks":${r.retriedTasks},"shuffle_records":${r.shuffleRecords}""" +
+        (if (r.spillDisk >= 0) s""","spill_disk":${r.spillDisk}""" else "") +
+        (if (r.taskTimeMs >= 0)
+          s""","task_time_ms":${r.taskTimeMs},"cpu_time_ms":${r.cpuTimeMs}""" +
+          s""","gc_time_ms":${r.gcTimeMs}""" +
+          f""","load":${r.load}%.1f"""
+         else "")
+      else ""
+    f"""{"op":"${r.op}","mult":${r.mult},"rows_in":${r.rowsIn},""" +
+      f""""wall_s":${r.wallSec}%.3f,"rows_out":${r.rowsOut}$cross$bytes}"""
+  }
+
+  /** The header `mults` and the rows, each keyed by `(op, mult)` with its
+    * text exactly as written, of an artifact [[writeJson]] made; empty
+    * when `path` does not exist. */
+  private def readRows(path: String): (scala.Seq[Int], scala.Seq[((String, Int), String)]) = {
+    val f = new java.io.File(path)
+    if (!f.exists) return (Nil, Nil)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val root = mapper.readTree(f)
+    val src = scala.io.Source.fromFile(f, "UTF-8")
+    val rows = try src.getLines().map(_.trim).filter(_.startsWith("{\"op\"")).map { l =>
+      val raw = l.stripSuffix(",")
+      val n = mapper.readTree(raw)
+      (n.get("op").asText, n.get("mult").asInt) -> raw
+    }.toList finally src.close()
+    require(rows.size == root.get("results").size,
+      s"$path: results are not one row per line; refusing to merge into it")
+    val ms = root.get("mults")
+    ((0 until ms.size).map(ms.get(_).asInt), rows)
+  }
+
+  /** Writes `results` to `path`, merging into the artifact already there:
+    * a row whose `(op, mult)` this run measured replaces the old row in
+    * place, every other row is kept byte for byte, rows new to the file
+    * follow them, and the header's `mults` becomes the union. A family's
+    * wall steps compare rows across the SCALE_r10*.json files, so a
+    * targeted `--ops <op> 64` run must not drop the other families' 64×
+    * rows. */
   def writeJson(path: String, mults: scala.Seq[Int],
       results: scala.Seq[Result]): Unit = {
-    val items = results.map { r =>
-      val cross = if (r.cross >= 0) s""","cross_pairs":${r.cross}""" else ""
-      val bytes =
-        if (r.shuffleBytes >= 0)
-          s""","shuffle_bytes":${r.shuffleBytes},"spill_bytes":${r.spillBytes}""" +
-          s""","shuffle_read":${r.shuffleRead},"shuffle_write":${r.shuffleWrite}""" +
-          s""","retried_tasks":${r.retriedTasks},"shuffle_records":${r.shuffleRecords}""" +
-          (if (r.spillDisk >= 0) s""","spill_disk":${r.spillDisk}""" else "") +
-          (if (r.taskTimeMs >= 0)
-            s""","task_time_ms":${r.taskTimeMs},"cpu_time_ms":${r.cpuTimeMs}""" +
-            s""","gc_time_ms":${r.gcTimeMs}""" +
-            f""","load":${r.load}%.1f"""
-           else "")
-        else ""
-      f"""{"op":"${r.op}","mult":${r.mult},"rows_in":${r.rowsIn},""" +
-        f""""wall_s":${r.wallSec}%.3f,"rows_out":${r.rowsOut}$cross$bytes}"""
-    }.mkString(",\n  ")
+    val fresh = results.map(r => (r.op, r.mult) -> rowJson(r))
+    val (oldMults, oldRows) = readRows(path)
+    val byKey = fresh.toMap
+    val oldKeys = oldRows.map(_._1).toSet
+    val rows = oldRows.map { case (k, raw) => byKey.getOrElse(k, raw) } ++
+      fresh.filterNot { case (k, _) => oldKeys(k) }.map(_._2)
+    val allMults = (oldMults ++ mults).distinct.sorted
     val body =
-      s"""{"sf":"sf0.1","mults":[${mults.mkString(",")}],"results":[\n  $items\n]}\n"""
+      s"""{"sf":"sf0.1","mults":[${allMults.mkString(",")}],"results":[\n  """ +
+        rows.mkString(",\n  ") + "\n]}\n"
     val w = new java.io.PrintWriter(path)
     try w.print(body) finally w.close()
     println(s"SCALE_JSON written to $path")

@@ -2,12 +2,14 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Gates the committed scale-probe artifact (SCALE_r10.json, produced by
-  * [[ScaleProbe]] on an idle box at sf0.1 × {1,4,16}): wall-clock per 4×
-  * data step must stay within LINEAR_SLACK of linear for every probed
-  * operator family, the fitted log-log wall-vs-mult slope must stay ≤
-  * SLOPE_MAX (the trend gate — stepwise slack compounds to 1.69× over
-  * two steps, a regression fit catches the same drift a round earlier),
+/** Gates the committed scale-probe artifacts (SCALE_r10.json at sf0.1 ×
+  * {1,4,16}, plus SCALE_r10_64x.json and SCALE_r10_256x.json for the
+  * families probed deeper, all produced by [[ScaleProbe]] on an idle
+  * box): wall-clock per 4× data step must stay within LINEAR_SLACK of
+  * linear for every probed operator family, the fitted log-log
+  * wall-vs-mult slope must stay ≤ SLOPE_MAX (the trend gate — stepwise
+  * slack compounds to 1.69× over two steps, a regression fit catches the
+  * same drift a round earlier),
   * pair-emitting operators must not blow up their output super-linearly,
   * and measured SHUFFLE BYTES must grow near-linearly (the noise-free
   * signal: wall-clock on this shared host wobbles ±2× between identical
@@ -17,10 +19,16 @@ import org.scalatest.funsuite.AnyFunSuite
   * run caught exactly that (36M candidates for 1k true pairs in
   * MinHash-LSH).
   *
-  * The artifact is committed rather than re-measured per test run: the
+  * The artifacts are committed rather than re-measured per test run: the
   * probe takes minutes at 16× and timing under sbt-test co-scheduling
   * is meaningless. Re-generate with
   * `sbt "runMain graft.ScaleProbe"` after touching any probed operator.
+  * A family's steps compare rows across the three files, so regenerate a
+  * family WHOLE, every mult the files hold for it, on one box: e.g.
+  * `--ops <op> --out SCALE_r10.json 1 4 16`, then `--ops <op> --out
+  * SCALE_r10_64x.json 64` (and 256× likewise) — the probe merges its rows
+  * into each file and keeps every other family's. A 4-core row next to a
+  * 32-core row makes the step between them meaningless.
   */
 class ScaleLinearitySpec extends AnyFunSuite {
   private val LinearSlack = 1.3 // per 4× step: ≤ 1.3 × linear growth
@@ -178,9 +186,10 @@ class ScaleLinearitySpec extends AnyFunSuite {
   }
 
   test("wall-clock growth per 4x step stays near-linear for every operator") {
-    points.groupBy(_.op).foreach { case (op, ps) =>
-      val byMult = ps.sortBy(_.mult)
-      byMult.sliding(2).foreach {
+    // every violating step of every family, in family order, in one
+    // failure message (an assert per step stops at the first one)
+    val violations = points.groupBy(_.op).toSeq.sortBy(_._1).flatMap { case (op, ps) =>
+      ps.sortBy(_.mult).sliding(2).flatMap {
         case Seq(lo, hi) =>
           val factor = hi.mult.toDouble / lo.mult
           val ratio = hi.wall / math.max(lo.wall, 0.01)
@@ -192,14 +201,15 @@ class ScaleLinearitySpec extends AnyFunSuite {
           // are noise-free
           val slack = if (hi.mult >= 64) 2.5 else LinearSlack
           val allowed = factor * slack
-          assert(lo.wall < FloorSec || lo.spillBound || hi.spillBound ||
-            ratio <= allowed,
-            f"$op ${lo.mult}x->${hi.mult}x wall grew $ratio%.2fx " +
-              f"(allowed ${allowed}%.2fx for ${factor}%.0fx data): " +
-              f"${lo.wall}%.2fs -> ${hi.wall}%.2fs — hidden super-linearity")
-        case _ => ()
+          if (lo.wall < FloorSec || lo.spillBound || hi.spillBound ||
+              ratio <= allowed) None
+          else Some(f"$op ${lo.mult}x->${hi.mult}x wall grew $ratio%.2fx " +
+            f"(allowed ${allowed}%.2fx for ${factor}%.0fx data): " +
+            f"${lo.wall}%.2fs -> ${hi.wall}%.2fs")
+        case _ => None
       }
     }
+    assert(violations.isEmpty, "— hidden super-linearity")
   }
 
   test("log-log wall-vs-mult slope stays <= 1.15 (trend gate)") {
