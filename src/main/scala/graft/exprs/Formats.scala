@@ -18,8 +18,7 @@ object Formats {
   /** YAML document → canonical JSON string. */
   val yamlToJson: Column => Column = {
     val f = udf((s: String) => if (s == null) null else {
-      val yaml = new org.yaml.snakeyaml.Yaml()
-      val parsed = yaml.load[Any](s)
+      val parsed = graft.runtime.Config.safeYaml.load[Any](s)
       jsonMapper.writeValueAsString(parsed)
     })
     c => f(c)

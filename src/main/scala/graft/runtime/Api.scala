@@ -5,20 +5,19 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.SparkSession
 import graft.streaming.StreamRegistry
 
-/** Metric registry: named `df.observe` observations, rendered as
-  * prometheus text (`lib/metrics/constructor.go:74-84` prometheus sink).
-  * Batch observations publish after their action completes; streaming
-  * metrics surface through query progress (`/streams/{id}/stats`). */
+/** Metric registry: named `df.observe` observations. Batch observations
+  * publish after their action completes; streaming metrics surface
+  * through query progress (`/streams/{id}/stats`). Every sink —
+  * prometheus (`/metrics`), statsd, influxdb and cloudwatch EMF
+  * (`lib/metrics/constructor.go:74-84`) — renders [[snapshot]], so the
+  * path wrappers apply to whichever sink is configured. */
 object Metrics {
-  private[runtime] val observations =
+  private val observations =
     scala.collection.concurrent.TrieMap[String, org.apache.spark.sql.Observation]()
-
-  def observation(name: String): org.apache.spark.sql.Observation =
-    observations.getOrElseUpdate(name, org.apache.spark.sql.Observation(name))
 
   /** A NEW Observation registered under `name` (replacing any prior) —
     * an Observation instance can only attach to one DataFrame, so every
-    * pipeline compile needs a fresh one; /metrics always renders the
+    * pipeline compile needs a fresh one; the sinks always render the
     * latest. */
   def freshObservation(name: String): org.apache.spark.sql.Observation = {
     val o = org.apache.spark.sql.Observation(
@@ -27,53 +26,49 @@ object Metrics {
     o
   }
 
-  def clear(): Unit = { observations.clear(); pathMap = defaultPathMap }
+  // The process's one telemetry slot: the path mapping and the exporters
+  // of the last config with a `metrics:` section.
+  @volatile private var pathMap: String => Option[String] = Some(_)
+  private var exporters: scala.Seq[PeriodicExporter] = Nil
+
+  /** Replace the running telemetry: stop the installed exporters (threads
+    * and sockets), then map paths with `map` and start `next`. */
+  private[runtime] def install(map: String => Option[String],
+      next: scala.Seq[PeriodicExporter]): Unit = synchronized {
+    exporters.foreach(_.stop())
+    pathMap = map
+    exporters = next.map(_.start())
+  }
+
+  def clear(): Unit = { observations.clear(); install(Some(_), Nil) }
+
+  /** Every completed observation's numeric values as (dotted
+    * `obs.metric` path after the path mapping, value), sorted by
+    * observation then metric; a path mapped to None is dropped. */
+  def snapshot: scala.Seq[(String, java.lang.Number)] =
+    observations.toSeq.sortBy(_._1).flatMap { case (n, o) =>
+      org.apache.spark.sql.GraftBridge.observationValues(o)
+        .toSeq.sortBy(_._1).flatMap {
+          case (k, v: java.lang.Number) => pathMap(s"$n.$k").map(_ -> v)
+          case _ => None
+        }
+    }
 
   private def sanitize(s: String): String =
     s.replaceAll("[^A-Za-z0-9_]", "_")
 
-  /** Metric-path mapper (`lib/metrics` whitelist / blacklist / rename /
-    * path_mapping wrappers): applied to the dotted `obs.metric` path
-    * before rendering; None drops the metric. Composed by Config when a
-    * metrics wrapper section is present. */
-  private val defaultPathMap: String => Option[String] = s => Some(s)
-  @volatile var pathMap: String => Option[String] = defaultPathMap
+  /** Prometheus exposition text: one gauge per snapshot value. */
+  def prometheus: String =
+    snapshot.map { case (path, v) =>
+      val metric = s"graft_${sanitize(path)}"
+      s"# TYPE $metric gauge\n$metric ${v.doubleValue}"
+    }.mkString("", "\n", "\n")
 
-  /** Prometheus exposition text of all completed observations. */
-  def prometheus: String = {
-    val lines = observations.toSeq.sortBy(_._1).flatMap { case (n, o) =>
-      org.apache.spark.sql.GraftBridge.observationValues(o)
-        .toSeq.sortBy(_._1).flatMap { case (k, v) =>
-        val num = v match {
-          case x: java.lang.Number => Some(x.doubleValue)
-          case _ => None
-        }
-        for {
-          d <- num
-          path <- pathMap(s"$n.$k")
-        } yield {
-          val metric = s"graft_${sanitize(path)}"
-          s"# TYPE $metric gauge\n$metric $d"
-        }
-      }
-    }
-    lines.mkString("", "\n", "\n")
-  }
-
-  /** statsd line protocol rendering of the same registry
-    * (`lib/metrics/statsd.go`): one `<prefix>.<obs>.<metric>:<v>|g`
-    * gauge line per value. */
+  /** statsd line protocol (`lib/metrics/statsd.go`): one
+    * `<prefix>.<obs>.<metric>:<v>|g` gauge line per snapshot value. */
   def statsdLines(prefix: String = "graft"): scala.Seq[String] =
-    observations.toSeq.sortBy(_._1).flatMap { case (n, o) =>
-      org.apache.spark.sql.GraftBridge.observationValues(o)
-        .toSeq.sortBy(_._1).flatMap { case (k, v) =>
-        v match {
-          case x: java.lang.Number =>
-            pathMap(s"$n.$k").map(p =>
-              s"$prefix.${p.split('.').map(sanitize).mkString(".")}:${x.doubleValue}|g")
-          case _ => None
-        }
-      }
+    snapshot.map { case (p, v) =>
+      s"$prefix.${p.split('.').map(sanitize).mkString(".")}:${v.doubleValue}|g"
     }
 }
 
@@ -106,34 +101,6 @@ final class BloblPathMapper(mapping: String) extends (String => Option[String]) 
       if (r.isNullAt(0)) None else Some(r.getString(0))
     }
   })
-}
-
-/** `metrics: statsd` export (`lib/metrics/statsd.go`): flush the
-  * registry as statsd gauge datagrams on a period. UDP to the
-  * configured address — the standard statsd transport; cloudwatch and
-  * friends deploy by pointing an agent at this (the reference's own
-  * recommended relay shape for sinks without a direct client). */
-final class StatsdExporter(host: String, port: Int,
-    periodMs: Long = 1000, prefix: String = "graft") {
-  @volatile private var running = true
-  private val sock = new java.net.DatagramSocket()
-  private val addr = java.net.InetAddress.getByName(host)
-  private val thread = new Thread(() => {
-    while (running) {
-      flush()
-      try Thread.sleep(periodMs) catch { case _: InterruptedException => }
-    }
-  }, "graft-statsd")
-  thread.setDaemon(true)
-
-  def flush(): Unit =
-    Metrics.statsdLines(prefix).foreach { line =>
-      val b = line.getBytes("UTF-8")
-      sock.send(new java.net.DatagramPacket(b, b.length, addr, port))
-    }
-
-  def start(): StatsdExporter = { thread.start(); this }
-  def stop(): Unit = { running = false; thread.interrupt(); sock.close() }
 }
 
 /** Library build identity, served at GET /version (`lib/api` version
@@ -180,13 +147,7 @@ final class ControlPlane(spark: SparkSession,
     ex.close()
   }
 
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+  private def jsonStr(s: String): String = graft.ops.JsonProc.quote(s)
 
   private def streamStatus(id: String): Option[String] =
     started.get(id).map { case (t0, streaming) =>
@@ -316,7 +277,7 @@ final class ControlPlane(spark: SparkSession,
         // bulk replace (api.go HandleStreamsCRUD POST): body = map of
         // id -> stream config; the whole running set is swapped
         val body = new String(ex.getRequestBody.readAllBytes(), "UTF-8")
-        val yaml = new org.yaml.snakeyaml.Yaml()
+        val yaml = Config.safeYaml
         val set = yaml.load[Any](body).asInstanceOf[java.util.Map[String, Any]]
         started.keys.toSeq.foreach(stopStream)
         import scala.jdk.CollectionConverters._

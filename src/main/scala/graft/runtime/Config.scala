@@ -16,10 +16,11 @@ import graft.sources.Sources
   */
 object Config {
 
-  /** All YAML text — config files AND REST-supplied bodies — parses
-    * through SafeConstructor: a default-constructed Yaml() instantiates
-    * arbitrary global-tagged classes, an unsafe-deserialization surface
-    * on the /streams and /resources endpoints. A fresh instance per call
+  /** The one YAML loader: config files, REST-supplied bodies and the
+    * `parse_yaml` family all parse through SafeConstructor, so every YAML
+    * input shares one policy (standard tags only). SnakeYAML 2.x's default
+    * loader already rejects global tags; this keeps the policy in one
+    * place rather than closing a hole. A fresh instance per call
     * (snakeyaml parsers are not thread-safe). */
   def safeYaml: Yaml = new Yaml(
     new org.yaml.snakeyaml.constructor.SafeConstructor(
@@ -81,59 +82,49 @@ object Config {
       scala.util.matching.Regex.quoteReplacement(
         sys.env.getOrElse(m.group(1), Option(m.group(2)).getOrElse(""))))
     val root = asMap(safeYaml.load[Any](interpolated))
+    // Telemetry is one slot per process: a `tracer:` or `metrics:` section
+    // replaces what an earlier load installed; a load without one keeps it.
     // tracer section (`lib/tracer/constructor.go`): `none` disables; any
     // configured tracer (jaeger, …) turns on the in-process collector —
-    // spans serve from the control plane's /traces (no agent in image).
+    // spans serve from the control plane's /traces. A jaeger
+    // agent_address also streams finished spans to the agent over the
+    // thrift-compact UDP wire format (`lib/tracer/jaeger.go` agent mode).
     root.get("tracer").map(asMap).foreach { t =>
       if (t.contains("none")) Tracing.disable() else Tracing.enable()
-      // jaeger with an agent_address additionally streams finished spans
-      // to the agent over the REAL thrift-compact UDP wire format
-      // (`lib/tracer/jaeger.go` agent mode); without one, spans stay on
-      // the in-proc /traces surface only.
-      t.get("jaeger").map(asMap).foreach { j =>
-        j.get("agent_address").map(_.toString).foreach { a =>
-          val hp = a.split(":", 2)
+      Tracing.setReporter(t.get("jaeger").map(asMap).flatMap { j =>
+        j.get("agent_address").map { a =>
+          val hp = a.toString.split(":", 2)
           require(hp.length == 2, "tracer jaeger: agent_address must be host:port")
-          val rep = new JaegerUdpReporter(hp(0), hp(1).toInt,
+          new JaegerUdpReporter(hp(0), hp(1).toInt,
             j.get("service_name").map(_.toString).getOrElse("graft"))
-          Tracing.onFlush(spans => { rep.report(spans); () })
         }
-      }
+      })
     }
     // metrics section (`lib/metrics/constructor.go:74-84`): prometheus is
-    // always-on via the control plane's /metrics; statsd starts a UDP
-    // gauge flusher. Other sinks (cloudwatch/influx) deploy by pointing
-    // an agent at the statsd/prometheus surface (documented boundary).
-    root.get("metrics").map(asMap).map(unwrapMetrics).foreach { mm =>
-      mm.get("statsd").map(asMap).foreach { sd =>
-        val addr = str(sd, "address").split(":", 2)
-        require(addr.length == 2, "metrics statsd: address must be host:port")
-        val periodMs = sd.get("flush_period").map(p =>
-          graft.exprs.GoDurationParse.parse(
-            org.apache.spark.unsafe.types.UTF8String.fromString(p.toString))
-            match { case null => 1000L; case n => n / 1000000L })
-          .getOrElse(1000L)
-        new StatsdExporter(addr(0), addr(1).toInt, periodMs,
-          sd.get("prefix").map(_.toString).getOrElse("graft")).start()
-        ()
+    // always on via the control plane's /metrics; statsd and influxdb
+    // (`lib/metrics/influxdb.go` UDP listener shape) flush UDP datagrams,
+    // cloudwatch prints EMF JSON to stdout — the egress-free CloudWatch
+    // ingestion path (agent/Lambda log scraping), no SDK client needed.
+    root.get("metrics").map(asMap).foreach { m =>
+      val (pathMap, mm) = unwrapMetrics(m, Some(_))
+      val exporters = mm.toSeq.collect {
+        case ("statsd", c) =>
+          val sd = asMap(c)
+          val prefix = sd.get("prefix").map(_.toString).getOrElse("graft")
+          PeriodicExporter.udp("statsd", str(sd, "address"),
+            sd.get("flush_period").map(durationMs).getOrElse(1000L))(
+            Metrics.statsdLines(prefix))
+        case ("influxdb", c) =>
+          val in = asMap(c)
+          val measurement = in.get("measurement").map(_.toString).getOrElse("graft")
+          PeriodicExporter.udp("influxdb", str(in, "address"), 1000L)(
+            InfluxMetrics.lines(measurement, System.currentTimeMillis() * 1000000L))
+        case ("cloudwatch", c) =>
+          val ns = asMap(c).get("namespace").map(_.toString).getOrElse("graft")
+          new PeriodicExporter("graft-emf", 1000L, () =>
+            InfluxMetrics.emfJson(ns, System.currentTimeMillis()).foreach(System.out.println))
       }
-      // influxdb: line protocol over UDP (`lib/metrics/influxdb.go` UDP
-      // listener shape) — same periodic-flush contract as statsd
-      mm.get("influxdb").map(asMap).foreach { in =>
-        val addr = str(in, "address").split(":", 2)
-        require(addr.length == 2, "metrics influxdb: address must be host:port")
-        new InfluxExporter(addr(0), addr(1).toInt,
-          measurement = in.get("measurement").map(_.toString).getOrElse("graft"))
-          .start()
-        ()
-      }
-      // cloudwatch: EMF JSON to stdout — the egress-free CloudWatch
-      // ingestion path (agent/Lambda log scraping); no SDK client needed
-      mm.get("cloudwatch").map(asMap).foreach { cw =>
-        val ns = cw.get("namespace").map(_.toString).getOrElse("graft")
-        new EmfExporter(ns).start()
-        ()
-      }
+      Metrics.install(pathMap, exporters)
     }
     // cache_resources first: the cache processor resolves labels at compile
     root.get("cache_resources").map(asList).getOrElse(Nil).foreach { c =>
@@ -172,6 +163,7 @@ object Config {
       .map(compileProcessors).getOrElse(Nil)
     val streaming = root.get("input").map(asMap).exists(m =>
       m.contains("file_stream") || m.contains("generate_stream") ||
+        m.keys.exists(graft.sources.Brokers.inputKinds) ||
         (m.contains("kafka") &&
           !asMap(m("kafka")).get("batch").exists(_.toString.toBoolean)) ||
         (m.contains("spark_format") &&
@@ -196,12 +188,7 @@ object Config {
         s"config: unknown buffer kind ${b.keys.mkString(",")}")
       b.get("memory").map(asMap)
         .flatMap(_.get("batch_policy").map(asMap))
-        .flatMap(_.get("period").map(_.toString))
-        .map(p => graft.exprs.GoDurationParse.parse(
-          org.apache.spark.unsafe.types.UTF8String.fromString(p)) match {
-          case null => 1000L
-          case n => n / 1000000L
-        })
+        .flatMap(_.get("period")).map(durationMs)
     }
     StreamSpec(input, procs, output, streaming, pushPath, bufferPeriod)
   }
@@ -277,6 +264,14 @@ object Config {
       new graft.ops.CacheOps.MemoryCache(
         cm.get("memory").map(asMap).flatMap(_.get("ttl"))
           .map(_.toString.toLong).getOrElse(0L))
+
+  /** A Go duration string (`100ms`, `1s`) in ms; 1 s if it does not parse. */
+  private def durationMs(p: Any): Long =
+    graft.exprs.GoDurationParse.parse(
+      org.apache.spark.unsafe.types.UTF8String.fromString(p.toString)) match {
+      case null => 1000L
+      case n => n / 1000000L
+    }
 
   /** tokens/sec of a local rate-limit resource config. */
   private def rateLimitPerSec(cm: Map[String, Any]): Double = {
@@ -446,11 +441,7 @@ object Config {
         val path = objectStorePath(k, conf)
         val codec = conf.get("codec").map(_.toString).getOrElse("lines")
         s => Sources.file(s, path, codec)
-      case k @ ("aws_kinesis" | "kinesis" | "kinesis_balanced" | "aws_sqs" |
-          "sqs" | "gcp_pubsub" | "nats" | "nats_stream" | "nats_jetstream" |
-          "mqtt" | "amqp_0_9" | "amqp" | "amqp_1" | "nsq" | "pulsar" |
-          "redis_streams" | "redis_pubsub" | "zmq4" | "nanomsg" |
-          "scalability_protocols" | "azure_queue_storage") =>
+      case k if graft.sources.Brokers.inputKinds(k) =>
         // broker breadth (lib/input/constructor.go registry): binding is
         // compiled (and linted) NOW; the transport format resolves at
         // call time from the deploy-provided connector jar
@@ -1075,41 +1066,40 @@ object Config {
 
   /** Metrics wrapper peeling (`lib/metrics` whitelist / blacklist /
     * rename chains + the per-sink `path_mapping` Bloblang field): each
-    * wrapper composes onto `Metrics.pathMap`, and the innermost sink
-    * config is returned for the exporter dispatch. */
-  private def unwrapMetrics(mm: Map[String, Any]): Map[String, Any] = {
+    * wrapper composes onto `map`, outermost first. Returns the composed
+    * path mapping and the innermost sink config. */
+  private def unwrapMetrics(mm: Map[String, Any], map: String => Option[String])
+      : (String => Option[String], Map[String, Any]) = {
+    def child(c: Map[String, Any], next: String => Option[String]) =
+      c.get("child").map(ch => unwrapMetrics(asMap(ch), next))
+        .getOrElse((next, Map.empty[String, Any]))
     if (mm.contains("whitelist") || mm.contains("blacklist")) {
       val allow = mm.contains("whitelist")
       val c = asMap(mm(if (allow) "whitelist" else "blacklist"))
       val paths = strings(c, "paths")
       val pats = strings(c, "patterns").map(_.r)
-      val prev = Metrics.pathMap
-      Metrics.pathMap = n => prev(n).filter { p =>
+      child(c, n => map(n).filter { p =>
         (paths.exists(p.startsWith) ||
           pats.exists(_.findFirstIn(p).isDefined)) == allow
-      }
-      c.get("child").map(ch => unwrapMetrics(asMap(ch))).getOrElse(Map.empty)
+      })
     } else if (mm.contains("rename")) {
       val c = asMap(mm("rename"))
       val rules = c.get("by_regexp").map(asList).getOrElse(Nil).map(asMap)
         .map(r => (str(r, "pattern").r, str(r, "value")))
-      val prev = Metrics.pathMap
-      Metrics.pathMap = n => prev(n).map(p =>
-        rules.foldLeft(p) { case (acc, (re, v)) => re.replaceAllIn(acc, v) })
-      c.get("child").map(ch => unwrapMetrics(asMap(ch))).getOrElse(Map.empty)
+      child(c, n => map(n).map(p =>
+        rules.foldLeft(p) { case (acc, (re, v)) => re.replaceAllIn(acc, v) }))
     } else {
       // innermost sink: the common `path_mapping` Bloblang field (applies
       // to the dotted path, `deleted()` drops the metric)
-      mm.values.toSeq.flatMap {
+      val mapping = mm.values.toSeq.flatMap {
         case m: java.util.Map[_, _] => asMap(m).get("path_mapping").map(_.toString)
         case m: Map[_, _] => asMap(m).get("path_mapping").map(_.toString)
         case _ => None
-      }.headOption.filter(_.nonEmpty).foreach { mapping =>
-        val prev = Metrics.pathMap
-        val mapper = new BloblPathMapper(mapping)
-        Metrics.pathMap = n => prev(n).flatMap(mapper)
-      }
-      mm
+      }.headOption.filter(_.nonEmpty)
+      (mapping.fold(map) { m =>
+        val mapper = new BloblPathMapper(m)
+        n => map(n).flatMap(mapper)
+      }, mm)
     }
   }
 

@@ -20,101 +20,80 @@ object InfluxMetrics {
   private def esc(s: String) =
     s.replace("\\", "\\\\").replace(" ", "\\ ").replace(",", "\\,").replace("=", "\\=")
 
-  /** Influx line protocol rendering of the observation registry: one
-    * `<measurement>,obs=<name> <k>=<v>,... <ts_ns>` line per observation.
-    * Numeric values only (matching the statsd gauge surface). */
+  /** [[Metrics.snapshot]] grouped per observation: the mapped path up to
+    * its last `.` names the observation, the rest the field (a path with
+    * no `.` is one observation with a `value` field). */
+  private def byObservation: scala.Seq[(String, scala.Seq[(String, java.lang.Number)])] =
+    Metrics.snapshot.map { case (p, v) =>
+      val i = p.lastIndexOf('.')
+      if (i < 0) (p, ("value", v)) else (p.take(i), (p.drop(i + 1), v))
+    }.groupBy(_._1).toSeq.sortBy(_._1).map { case (n, fs) => n -> fs.map(_._2) }
+
+  /** Influx line protocol: one `<measurement>,obs=<name> <k>=<v>,...
+    * <ts_ns>` line per observation. */
   def lines(measurement: String = "graft", tsNanos: Long): scala.Seq[String] =
-    Metrics.observations.toSeq.sortBy(_._1).flatMap { case (n, o) =>
-      val fields = org.apache.spark.sql.GraftBridge.observationValues(o)
-        .toSeq.sortBy(_._1).flatMap { case (k, v) =>
-          v match {
-            case x: java.lang.Long    => Some(s"${esc(k)}=${x.longValue}i")
-            case x: java.lang.Integer => Some(s"${esc(k)}=${x.intValue}i")
-            case x: java.lang.Number  => Some(s"${esc(k)}=${x.doubleValue}")
-            case _ => None
-          }
-        }
-      if (fields.isEmpty) None
-      else Some(s"${esc(measurement)},obs=${esc(n)} ${fields.mkString(",")} $tsNanos")
+    byObservation.map { case (n, fields) =>
+      val kv = fields.map {
+        case (k, x @ (_: java.lang.Long | _: java.lang.Integer)) => s"${esc(k)}=${x.longValue}i"
+        case (k, x) => s"${esc(k)}=${x.doubleValue}"
+      }
+      s"${esc(measurement)},obs=${esc(n)} ${kv.mkString(",")} $tsNanos"
     }
 
   /** CloudWatch EMF: one JSON object per observation with the `_aws`
     * metadata block declaring namespace/dimensions/metrics. Written to a
     * log stream (stdout by default) — the agent-side ingestion contract. */
   def emfJson(namespace: String = "graft", tsMillis: Long): scala.Seq[String] = {
-    def jesc(s: String) = s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    }
-    Metrics.observations.toSeq.sortBy(_._1).flatMap { case (n, o) =>
-      val fields = org.apache.spark.sql.GraftBridge.observationValues(o)
-        .toSeq.sortBy(_._1).flatMap { case (k, v) =>
-          v match {
-            case x: java.lang.Number => Some(k -> x.doubleValue)
-            case _ => None
-          }
-        }
-      if (fields.isEmpty) None
-      else {
-        val metricDefs = fields.map { case (k, _) => s"""{"Name":"${jesc(k)}"}""" }
-          .mkString("[", ",", "]")
-        val values = fields.map { case (k, v) =>
-          val r = if (v == v.floor && math.abs(v) < 1e15) v.toLong.toString else v.toString
-          s""""${jesc(k)}":$r"""
-        }.mkString(",")
-        Some(s"""{"_aws":{"Timestamp":$tsMillis,"CloudWatchMetrics":[""" +
-          s"""{"Namespace":"${jesc(namespace)}","Dimensions":[["obs"]],""" +
-          s""""Metrics":$metricDefs}]},"obs":"${jesc(n)}",$values}""")
-      }
+    import graft.ops.JsonProc.quote
+    byObservation.map { case (n, fields) =>
+      val metricDefs = fields.map { case (k, _) => s"""{"Name":${quote(k)}}""" }
+        .mkString("[", ",", "]")
+      val values = fields.map { case (k, x) =>
+        val v = x.doubleValue
+        val r = if (v == v.floor && math.abs(v) < 1e15) v.toLong.toString else v.toString
+        s"${quote(k)}:$r"
+      }.mkString(",")
+      s"""{"_aws":{"Timestamp":$tsMillis,"CloudWatchMetrics":[""" +
+        s"""{"Namespace":${quote(namespace)},"Dimensions":[["obs"]],""" +
+        s""""Metrics":$metricDefs}]},"obs":${quote(n)},$values}"""
     }
   }
 }
 
-/** `metrics: influxdb` export: flush the registry as line-protocol UDP
-  * datagrams on a period (the influx UDP listener input shape). */
-final class InfluxExporter(host: String, port: Int,
-    periodMs: Long = 1000, measurement: String = "graft") {
+/** A daemon thread named `name` that runs `flush` every `periodMs` until
+  * [[stop]], which waits for the thread to end and then runs `close` —
+  * the one loop behind the statsd, influxdb and cloudwatch sinks. */
+final class PeriodicExporter(name: String, periodMs: Long,
+    val flush: () => Unit, close: () => Unit = () => ()) {
   @volatile private var running = true
-  private val sock = new java.net.DatagramSocket()
-  private val addr = java.net.InetAddress.getByName(host)
   private val thread = new Thread(() => {
     while (running) {
       flush()
       try Thread.sleep(periodMs) catch { case _: InterruptedException => }
     }
-  }, "graft-influx")
+  }, name)
   thread.setDaemon(true)
 
-  def flush(): Unit =
-    InfluxMetrics.lines(measurement, System.nanoTime()).foreach { line =>
-      val b = line.getBytes("UTF-8")
-      sock.send(new java.net.DatagramPacket(b, b.length, addr, port))
-    }
-
-  def start(): InfluxExporter = { thread.start(); this }
-  def stop(): Unit = { running = false; thread.interrupt(); sock.close() }
+  def start(): PeriodicExporter = { thread.start(); this }
+  def stop(): Unit = {
+    running = false; thread.interrupt(); thread.join(5000); close()
+  }
 }
 
-/** `metrics: cloudwatch` export via EMF: print one EMF JSON object per
-  * observation per period to the log stream (stdout default) — scraped
-  * by the CloudWatch agent, no SDK/egress required. */
-final class EmfExporter(namespace: String,
-    out: java.io.PrintStream = System.out, periodMs: Long = 1000) {
-  @volatile private var running = true
-  private val thread = new Thread(() => {
-    while (running) {
-      flush()
-      try Thread.sleep(periodMs) catch { case _: InterruptedException => }
-    }
-  }, "graft-emf")
-  thread.setDaemon(true)
-
-  def flush(): Unit =
-    InfluxMetrics.emfJson(namespace, System.currentTimeMillis())
-      .foreach(out.println)
-
-  def start(): EmfExporter = { thread.start(); this }
-  def stop(): Unit = { running = false; thread.interrupt() }
+object PeriodicExporter {
+  /** Send each of `lines` as one UDP datagram to `address` (`host:port`)
+    * — the statsd and influx UDP listener transport. */
+  def udp(name: String, address: String, periodMs: Long)(
+      lines: => scala.Seq[String]): PeriodicExporter = {
+    val hp = address.split(":", 2)
+    require(hp.length == 2, s"metrics $name: address must be host:port")
+    val (addr, port) = (java.net.InetAddress.getByName(hp(0)), hp(1).toInt)
+    val sock = new java.net.DatagramSocket()
+    new PeriodicExporter(s"graft-$name", periodMs, () => lines.foreach { line =>
+      val b = line.getBytes("UTF-8")
+      sock.send(new java.net.DatagramPacket(b, b.length, addr, port))
+    }, () => sock.close())
+  }
 }
 
 /** Thrift compact-protocol writer — the subset the jaeger agent wire

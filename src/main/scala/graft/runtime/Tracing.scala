@@ -17,10 +17,10 @@ import graft.obs.JobProfile
   *        (the actual data work, with real durations; read from
   *        [[graft.obs.JobProfile]] when the root span closes)
   *
-  * No jaeger agent exists in this image (and no egress), so spans are
-  * recorded in-process and served as jaeger-style JSON from the control
-  * plane's `GET /traces` — the collection surface is swappable for a
-  * UDP/HTTP reporter without touching instrumentation call sites. */
+  * Spans are recorded in-process and served as jaeger-style JSON from the
+  * control plane's `GET /traces`; with a `tracer: jaeger: agent_address`
+  * config, each finished trace also goes to the agent through one
+  * [[JaegerUdpReporter]]. */
 object Tracing {
 
   final case class Span(id: Long, parentId: Option[Long], traceId: Long,
@@ -41,17 +41,20 @@ object Tracing {
 
   def clear(): Unit = finished.clear()
 
-  // external reporters (e.g. the jaeger UDP agent wire): invoked with a
-  // completed trace's spans whenever a ROOT span finishes
-  private val flushHooks =
-    new java.util.concurrent.CopyOnWriteArrayList[scala.Seq[Span] => Unit]()
-  def onFlush(cb: scala.Seq[Span] => Unit): Unit = flushHooks.add(cb)
-  def clearFlushHooks(): Unit = flushHooks.clear()
-  private def fireFlush(traceId: Long): Unit =
-    if (!flushHooks.isEmpty) {
-      val trace = spans.filter(_.traceId == traceId)
-      flushHooks.forEach(cb => cb(trace))
-    }
+  // the jaeger agent reporter of the last config with a `tracer:`
+  // section: sent each completed trace's spans when its ROOT span finishes
+  @volatile private var reporter: Option[JaegerUdpReporter] = None
+
+  /** Replace the trace reporter (None: spans stay in-process), closing
+    * the old one's socket. */
+  private[runtime] def setReporter(r: Option[JaegerUdpReporter]): Unit =
+    synchronized { reporter.foreach(_.close()); reporter = r }
+
+  private def report(traceId: Long): Unit = reporter.foreach { r =>
+    // a reporter replaced mid-send has a closed socket: drop that trace
+    try r.report(spans.filter(_.traceId == traceId))
+    catch { case _: java.io.IOException => () }
+  }
 
   private def nowUs: Long = System.nanoTime() / 1000L
 
@@ -77,7 +80,7 @@ object Tracing {
             try p.drain() catch { case _: java.util.concurrent.TimeoutException => () }
             jobSpans(s, p.take())
           }
-          fireFlush(s.traceId)
+          report(s.traceId)
         }
       }
     }
@@ -117,13 +120,7 @@ object Tracing {
 
   /** Jaeger-style JSON (`{"data":[{"traceID","spans":[...]}]}`). */
   def tracesJson: String = {
-    def esc(s: String) =
-      s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      }
+    import graft.ops.JsonProc.quote
     val byTrace = spans.groupBy(_.traceId).toSeq.sortBy(_._1)
     val traces = byTrace.map { case (tid, ss) =>
       val spanJson = ss.map { s =>
@@ -131,9 +128,9 @@ object Tracing {
           .map(p => s"""[{"refType":"CHILD_OF","spanID":"$p"}]""")
           .getOrElse("[]")
         val tags = s.tags.toSeq.sortBy(_._1).map { case (k, v) =>
-          s"""{"key":"${esc(k)}","type":"string","value":"${esc(v)}"}"""
+          s"""{"key":${quote(k)},"type":"string","value":${quote(v)}}"""
         }.mkString("[", ",", "]")
-        s"""{"spanID":"${s.id}","operationName":"${esc(s.operation)}",""" +
+        s"""{"spanID":"${s.id}","operationName":${quote(s.operation)},""" +
           s""""references":$refs,"startTime":${s.startUs},""" +
           s""""duration":${s.durationUs},"tags":$tags}"""
       }.mkString("[", ",", "]")

@@ -29,6 +29,14 @@ object Brokers {
   final case class Binding(kind: String, format: String,
       options: Map[String, String])
 
+  /** The input kinds [[input]] binds: each compiles to a [[readStream]]
+    * source, so a config with one of them as its input is a stream. */
+  val inputKinds: Set[String] = Set("aws_kinesis", "kinesis",
+    "kinesis_balanced", "aws_sqs", "sqs", "gcp_pubsub", "nats", "nats_stream",
+    "nats_jetstream", "mqtt", "amqp_0_9", "amqp", "amqp_1", "nsq", "pulsar",
+    "redis_streams", "redis_pubsub", "zmq4", "nanomsg",
+    "scalability_protocols", "azure_queue_storage")
+
   // ---------- config → binding (the lint surface) ----------
 
   private def s(conf: Map[String, Any], k: String): Option[String] =

@@ -179,7 +179,7 @@ class ApiSpec extends AnyFunSuite {
 
   test("prometheus rendering of df.observe metrics") {
     Metrics.clear()
-    val obs = Metrics.observation("events_seen")
+    val obs = Metrics.freshObservation("events_seen")
     val df = spark.range(100).observe(obs,
       count(lit(1)).as("rows"), sum(col("id")).as("id_sum"))
     df.collect()
@@ -196,13 +196,11 @@ class ApiSpec extends AnyFunSuite {
 
   test("metrics wrappers: whitelist / blacklist / rename / path_mapping") {
     Metrics.clear()
-    val obs = Metrics.observation("events_seen")
+    val obs = Metrics.freshObservation("events_seen")
     spark.range(10).observe(obs, count(lit(1)).as("rows"),
       sum(col("id")).as("id_sum")).collect()
     try {
       // whitelist by prefix keeps only matching dotted paths
-      Metrics.pathMap = _ => None
-      Metrics.pathMap = s => Some(s)
       val yamlW =
         """whitelist:
           |  paths: [events_seen.rows]
@@ -216,7 +214,6 @@ class ApiSpec extends AnyFunSuite {
       assert(prom1.contains("graft_events_seen_rows"), prom1)
       assert(!prom1.contains("id_sum"), prom1)
       // rename by_regexp rewrites the dotted path
-      Metrics.pathMap = s => Some(s)
       graft.runtime.Config.load(
         """input:
           |  generate: {count: 1, mapping: 'root = {}'}
@@ -233,7 +230,6 @@ class ApiSpec extends AnyFunSuite {
       val prom2 = Metrics.prometheus
       assert(prom2.contains("graft_evt_rows"), prom2)
       // path_mapping bloblang: delete id_sum, prefix the rest
-      Metrics.pathMap = s => Some(s)
       graft.runtime.Config.load(
         """input:
           |  generate: {count: 1, mapping: 'root = {}'}
@@ -247,7 +243,33 @@ class ApiSpec extends AnyFunSuite {
       val prom3 = Metrics.prometheus
       assert(prom3.contains("graft_app_events_seen_rows"), prom3)
       assert(!prom3.contains("id_sum"), prom3)
-    } finally { Metrics.pathMap = s => Some(s) }
+    } finally Metrics.clear()
+  }
+
+  test("a metrics load builds its path mapping from scratch: rename, then whitelist") {
+    Metrics.clear()
+    val obs = Metrics.freshObservation("events_seen")
+    spark.range(10).observe(obs, count(lit(1)).as("rows"),
+      sum(col("id")).as("id_sum")).collect()
+    def load(metrics: String): Unit = Config.load(
+      "input:\n  generate: {count: 1, mapping: 'root = {}'}\nmetrics:\n" + metrics)
+    try {
+      load("""  rename:
+             |    by_regexp:
+             |      - pattern: "^events_seen\\.(.*)$"
+             |        value: "evt.$1"
+             |    child:
+             |      prometheus: {}
+             |""".stripMargin)
+      assert(Metrics.prometheus.contains("graft_evt_rows"))
+      load("""  whitelist:
+             |    paths: [events_seen.rows]
+             |    child:
+             |      prometheus: {}
+             |""".stripMargin)
+      assert(Metrics.prometheus ==
+        "# TYPE graft_events_seen_rows gauge\ngraft_events_seen_rows 10.0\n")
+    } finally Metrics.clear()
   }
 
   test("http_server input: push a batch through a pipeline; sync_response answers") {

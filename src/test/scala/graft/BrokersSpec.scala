@@ -121,6 +121,14 @@ class BrokersSpec extends AnyFunSuite {
     assert(out.output.isInstanceOf[graft.sinks.Sinks.BrokerSink])
   }
 
+  test("a broker input config is a stream: its file output appends") {
+    val spec = graft.runtime.Config.load(
+      "input:\n  nats:\n    urls: [nats://h:4222]\n    subject: subj\n" +
+        "output:\n  file:\n    path: /tmp/graft-nats-out\n")
+    assert(spec.streaming)
+    assert(spec.output == graft.sinks.Sinks.FileSink("/tmp/graft-nats-out", "lines", "append"))
+  }
+
   test("kinesis wire frame → envelope projection (recorded fixture rows)") {
     // recorded DSv2-connector-shaped wire rows: two shards of one
     // stream, sequence numbers in real 128-bit-decimal form

@@ -85,7 +85,7 @@ class ExportersSpec extends AnyFunSuite {
   }
 
   test("jaeger reporter sends over loopback UDP; tracer config wires the hook") {
-    Tracing.clear(); Tracing.clearFlushHooks()
+    Tracing.clear()
     val recv = new java.net.DatagramSocket(0)
     recv.setSoTimeout(5000)
     try {
@@ -113,20 +113,50 @@ class ExportersSpec extends AnyFunSuite {
         .map(_.asInstanceOf[Map[Int, Any]](5))
       assert(ops == List("root-op"))
     } finally {
-      recv.close(); Tracing.clearFlushHooks(); Tracing.disable(); Tracing.clear()
+      recv.close(); noTracer(); Tracing.clear()
+    }
+  }
+
+  // a `tracer: none` load disables tracing and drops the jaeger reporter
+  private def noTracer(): Unit = runtime.Config.load(
+    "tracer:\n  none: {}\ninput:\n  generate: {count: 1, mapping: 'root = {}'}\n")
+
+  test("a second jaeger tracer load replaces the reporter: each trace is sent once") {
+    Tracing.clear()
+    val recv = new java.net.DatagramSocket(0)
+    try {
+      val yaml = s"""tracer:
+           |  jaeger:
+           |    agent_address: 127.0.0.1:${recv.getLocalPort}
+           |input:
+           |  generate: {count: 1, mapping: 'root = {}'}
+           |""".stripMargin
+      runtime.Config.load(yaml)
+      runtime.Config.load(yaml)
+      Tracing.span("once") { () }
+      val buf = new Array[Byte](65536)
+      recv.setSoTimeout(5000)
+      recv.receive(new java.net.DatagramPacket(buf, buf.length))
+      recv.setSoTimeout(1000)
+      intercept[java.net.SocketTimeoutException] {
+        recv.receive(new java.net.DatagramPacket(buf, buf.length))
+      }
+    } finally {
+      recv.close(); noTracer(); Tracing.clear()
     }
   }
 
   test("influx line protocol renders observation gauges; UDP flush delivers") {
     Metrics.clear()
-    val obs = Metrics.observation("influx_seen")
+    val obs = Metrics.freshObservation("influx_seen")
     spark.range(25).observe(obs, count(lit(1)).as("rows")).collect()
     val lines = InfluxMetrics.lines("graft", tsNanos = 123L)
     assert(lines == scala.Seq("graft,obs=influx_seen rows=25i 123"))
 
     val recv = new java.net.DatagramSocket(0)
     recv.setSoTimeout(3000)
-    val exp = new InfluxExporter("127.0.0.1", recv.getLocalPort)
+    val exp = PeriodicExporter.udp("influxdb", s"127.0.0.1:${recv.getLocalPort}", 1000L)(
+      InfluxMetrics.lines("graft", System.currentTimeMillis() * 1000000L))
     try {
       exp.flush()
       val buf = new Array[Byte](2048)
@@ -139,7 +169,7 @@ class ExportersSpec extends AnyFunSuite {
 
   test("cloudwatch EMF objects carry the _aws metadata block") {
     Metrics.clear()
-    val obs = Metrics.observation("emf_seen")
+    val obs = Metrics.freshObservation("emf_seen")
     spark.range(9).observe(obs, count(lit(1)).as("rows")).collect()
     val out = InfluxMetrics.emfJson("graftns", tsMillis = 555L)
     assert(out == scala.Seq(
@@ -150,5 +180,33 @@ class ExportersSpec extends AnyFunSuite {
       get_json_object(lit(out.head), "$._aws.Timestamp").as("ts"),
       get_json_object(lit(out.head), "$.rows").as("rows")).head()
     assert(parsed.getString(0) == "555" && parsed.getString(1) == "9")
+  }
+
+  test("whitelist and rename wrappers reach influx lines and EMF JSON") {
+    Metrics.clear()
+    val obs = Metrics.freshObservation("wrapped")
+    spark.range(4).observe(obs, count(lit(1)).as("rows"),
+      sum(col("id")).as("id_sum")).collect()
+    try {
+      runtime.Config.load(
+        """metrics:
+          |  whitelist:
+          |    paths: [wrapped.rows]
+          |    child:
+          |      rename:
+          |        by_regexp:
+          |          - pattern: "^wrapped\\."
+          |            value: "kept."
+          |        child:
+          |          prometheus: {}
+          |input:
+          |  generate: {count: 1, mapping: 'root = {}'}
+          |""".stripMargin)
+      assert(InfluxMetrics.lines("graft", tsNanos = 7L) ==
+        scala.Seq("graft,obs=kept rows=4i 7"))
+      assert(InfluxMetrics.emfJson("ns", tsMillis = 8L) == scala.Seq(
+        """{"_aws":{"Timestamp":8,"CloudWatchMetrics":[{"Namespace":"ns",""" +
+          """"Dimensions":[["obs"]],"Metrics":[{"Name":"rows"}]}]},"obs":"kept","rows":4}"""))
+    } finally Metrics.clear()
   }
 }

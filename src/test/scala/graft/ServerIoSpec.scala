@@ -6,7 +6,7 @@ import graft.model.Envelope
 import graft.ops._
 import graft.sinks.Sinks
 import graft.sources.Sources
-import graft.runtime.{Config, Metrics, StatsdExporter}
+import graft.runtime.{Config, Metrics, PeriodicExporter}
 
 /** Server-push inputs (tcp_server/udp_server), socket/udp outputs,
   * writer codecs, redis_list roundtrip, cache/sql/mongodb outputs, and
@@ -147,13 +147,13 @@ class ServerIoSpec extends AnyFunSuite {
 
   test("statsd exporter flushes observation gauges over UDP") {
     Metrics.clear()
-    val obs = Metrics.observation("statsd_seen")
+    val obs = Metrics.freshObservation("statsd_seen")
     spark.range(50).observe(obs, count(lit(1)).as("rows")).collect()
 
     val recv = new java.net.DatagramSocket(0)
     recv.setSoTimeout(3000)
-    val exporter = new StatsdExporter("127.0.0.1", recv.getLocalPort,
-      periodMs = 100, prefix = "graft")
+    val exporter = PeriodicExporter.udp("statsd", s"127.0.0.1:${recv.getLocalPort}",
+      100L)(Metrics.statsdLines("graft"))
     try {
       exporter.flush()
       val buf = new Array[Byte](2048)
@@ -162,6 +162,53 @@ class ServerIoSpec extends AnyFunSuite {
       val line = new String(pkt.getData, 0, pkt.getLength, "UTF-8")
       assert(line == "graft.statsd_seen.rows:50.0|g")
     } finally { exporter.stop(); recv.close() }
+  }
+
+  private def statsdThreads: Set[Thread] = {
+    import scala.jdk.CollectionConverters._
+    Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.getName == "graft-statsd" && t.isAlive).toSet
+  }
+
+  private def statsdConfig(metrics: String): String =
+    s"""metrics:
+       |$metrics
+       |input:
+       |  generate: {count: 1, mapping: 'root = {}'}
+       |""".stripMargin
+
+  test("two metrics loads leave one statsd exporter thread") {
+    Metrics.clear()
+    val yaml = statsdConfig(
+      "  statsd:\n    address: 127.0.0.1:18126\n    flush_period: 100ms")
+    try {
+      Config.load(yaml)
+      Config.load(yaml)
+      assert(statsdThreads.size == 1)
+    } finally Metrics.clear()
+    assert(statsdThreads.isEmpty)
+  }
+
+  test("a load without metrics keeps the exporter and mapping; clear stops it") {
+    Metrics.clear()
+    val obs = Metrics.freshObservation("kept_seen")
+    spark.range(3).observe(obs, count(lit(1)).as("rows")).collect()
+    try {
+      Config.load(statsdConfig(
+        """  rename:
+          |    by_regexp:
+          |      - pattern: "^kept_seen"
+          |        value: "renamed"
+          |    child:
+          |      statsd:
+          |        address: 127.0.0.1:18126""".stripMargin))
+      val running = statsdThreads
+      assert(running.size == 1)
+      Config.load("input:\n  generate: {count: 1, mapping: 'root = {}'}\n")
+      assert(statsdThreads == running)
+      assert(Metrics.statsdLines() == scala.Seq("graft.renamed.rows:3.0|g"))
+    } finally Metrics.clear()
+    assert(statsdThreads.isEmpty)
   }
 
   test("config lint: server inputs, writer codecs, statsd, new outputs") {
@@ -198,6 +245,7 @@ class ServerIoSpec extends AnyFunSuite {
         |    name: cat
         |""".stripMargin)
     assert(spec3.output.isInstanceOf[Sinks.SubprocessSink])
+    Metrics.clear() // stop the statsd exporter the first config started
   }
 
   test("inproc handoff + named input/output resources") {
