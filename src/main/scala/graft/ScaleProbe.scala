@@ -73,7 +73,7 @@ object ScaleProbe {
     *    `shuffleBytes` (read+write) is kept for the standing byte gates.
     *  - retried: non-first task attempts — nonzero means wall and read
     *    numbers carry retry inflation.
-    *  - TASK-TIME (r11, VERDICT r10 #1): wall-clock on a shared host
+    *  - TASK-TIME: wall-clock on a shared host
     *    wobbles ±2×, and byte counters can't see CPU growth — summed
     *    executorRunTime is the noise-immune WORK signal that splits "the
     *    plan computes more at this mult" (runTime super-linear) from "the
@@ -94,7 +94,7 @@ object ScaleProbe {
     *    turning exactly-linear records into a 1.76×-of-linear byte
     *    curve).
     *
-    * Per-STAGE attribution (r9, VERDICT r8 #1; `--attr`): the operators
+    * Per-STAGE attribution (`--attr`): the operators
     * under probe run INTERNAL actions (localCheckpoint materializations,
     * sizing counts) whose query plans are gone by the final action, so
     * plan-walking alone can't attribute their bytes — the stage records
@@ -117,7 +117,7 @@ object ScaleProbe {
         s"name=${s.name}")
   }
 
-  /** Per-node SQL-metric attribution (r9, VERDICT r8 #1): walk the
+  /** Per-node SQL-metric attribution: walk the
     * EXECUTED adaptive plan of a just-run action and print one line per
     * exchange/sort/join/aggregate node with its byte- and row-valued
     * metrics, so a super-linear aggregate byte curve can be pinned to
@@ -155,24 +155,37 @@ object ScaleProbe {
     walk(df.queryExecution.executedPlan, 0)
   }
 
+  /** A probe main's usage error: the message and usage line, exit 2. */
+  private[graft] def usage(prog: String, msg: String): Nothing = {
+    System.err.println(s"$msg\nusage: graft.$prog [--out <path>] [mult ...]")
+    sys.exit(2)
+  }
+
+  /** A probe main's `--out <path>` (else `dflt`) and its other args. */
+  private[graft] def outArg(prog: String, args: scala.Seq[String],
+      dflt: String): (String, scala.Seq[String]) = {
+    val i = args.indexOf("--out")
+    if (i < 0) (dflt, args)
+    else {
+      if (i + 1 >= args.length) usage(prog, "--out requires a path argument")
+      (args(i + 1), args.patch(i, Nil, 2))
+    }
+  }
+
+  /** A probe main's multipliers, 1 4 16 when none are given. */
+  private[graft] def multArgs(prog: String, args: scala.Seq[String]): scala.Seq[Int] =
+    if (args.isEmpty) scala.Seq(1, 4, 16)
+    else args.map(a => try a.toInt catch { case _: NumberFormatException =>
+      usage(prog, s"multiplier '$a' is not an integer") })
+
   def main(args: Array[String]): Unit = {
-    def usage(msg: String): Nothing = {
-      System.err.println(s"$msg\nusage: graft.ScaleProbe [--out <path>] [mult ...]")
-      sys.exit(2)
-    }
-    val (outPath, rest0) = {
-      val i = args.indexOf("--out")
-      if (i >= 0) {
-        if (i + 1 >= args.length) usage("--out requires a path argument")
-        (args(i + 1), args.patch(i, Nil, 2).toSeq)
-      } else ("SCALE_r10.json", args.toSeq)
-    }
+    val (outPath, rest0) = outArg("ScaleProbe", args.toSeq, "SCALE_r10.json")
     // --ops a,b,c limits the run to named families (corpora build lazily,
     // so a targeted 64x point doesn't pay the full-suite 64x cost)
     val (ops, rest1) = {
       val i = rest0.indexOf("--ops")
       if (i >= 0) {
-        if (i + 1 >= rest0.length) usage("--ops requires a comma list")
+        if (i + 1 >= rest0.length) usage("ScaleProbe", "--ops requires a comma list")
         (rest0(i + 1).split(',').map(_.trim).filter(_.nonEmpty).toSet,
           rest0.patch(i, Nil, 2))
       } else (Set.empty[String], rest0)
@@ -183,10 +196,7 @@ object ScaleProbe {
       val i = rest1.indexOf("--attr")
       if (i >= 0) (true, rest1.patch(i, Nil, 1)) else (false, rest1)
     }
-    val mults = rest.map(a =>
-      try a.toInt catch { case _: NumberFormatException =>
-        usage(s"multiplier '$a' is not an integer") })
-    val ms = if (mults.nonEmpty) mults else scala.Seq(1, 4, 16)
+    val ms = multArgs("ScaleProbe", rest)
     val spark = Sessions.get()
     val results = run(spark, ms, ops, attr)
     writeJson(outPath, ms, results)
@@ -554,7 +564,7 @@ object ScaleProbe {
     buf.toSeq
   }
 
-  /** One artifact row, rendered on one line (the merge in [[writeJson]]
+  /** One artifact row, rendered on one line (the merge in [[mergeJson]]
     * reads rows back line by line). */
   private def rowJson(r: Result): String = {
     val cross = if (r.cross >= 0) s""","cross_pairs":${r.cross}""" else ""
@@ -575,7 +585,7 @@ object ScaleProbe {
   }
 
   /** The header `mults` and the rows, each keyed by `(op, mult)` with its
-    * text exactly as written, of an artifact [[writeJson]] made; empty
+    * text exactly as written, of an artifact [[mergeJson]] made; empty
     * when `path` does not exist. */
   private def readRows(path: String): (scala.Seq[Int], scala.Seq[((String, Int), String)]) = {
     val f = new java.io.File(path)
@@ -594,16 +604,22 @@ object ScaleProbe {
     ((0 until ms.size).map(ms.get(_).asInt), rows)
   }
 
-  /** Writes `results` to `path`, merging into the artifact already there:
-    * a row whose `(op, mult)` this run measured replaces the old row in
-    * place, every other row is kept byte for byte, rows new to the file
-    * follow them, and the header's `mults` becomes the union. A family's
-    * wall steps compare rows across the SCALE_r10*.json files, so a
-    * targeted `--ops <op> 64` run must not drop the other families' 64×
-    * rows. */
+  /** Writes `results` to `path`, merged by [[mergeJson]]. */
   def writeJson(path: String, mults: scala.Seq[Int],
       results: scala.Seq[Result]): Unit = {
-    val fresh = results.map(r => (r.op, r.mult) -> rowJson(r))
+    mergeJson(path, mults, results.map(r => (r.op, r.mult) -> rowJson(r)))
+    println(s"SCALE_JSON written to $path")
+  }
+
+  /** Writes one-line `(op, mult)`-keyed rows to `path`, merging into the
+    * artifact already there: a row whose `(op, mult)` this run measured
+    * replaces the old row in place, every other row is kept byte for
+    * byte, rows new to the file follow them, and the header's `mults`
+    * becomes the union. A family's steps compare rows across mults (and,
+    * for ScaleProbe, across the SCALE_r10*.json files), so a targeted
+    * `--ops <op> 64` or StreamProbe `64` run must not drop the other rows. */
+  private[graft] def mergeJson(path: String, mults: scala.Seq[Int],
+      fresh: scala.Seq[((String, Int), String)]): Unit = {
     val (oldMults, oldRows) = readRows(path)
     val byKey = fresh.toMap
     val oldKeys = oldRows.map(_._1).toSet
@@ -615,6 +631,5 @@ object ScaleProbe {
         rows.mkString(",\n  ") + "\n]}\n"
     val w = new java.io.PrintWriter(path)
     try w.print(body) finally w.close()
-    println(s"SCALE_JSON written to $path")
   }
 }

@@ -35,7 +35,9 @@ import org.apache.spark.sql.functions._
   * mults and the shared box wobbles ±2×).
   *
   * Usage: sbt "runMain graft.StreamProbe [--out path] [mult ...]"
-  * (defaults: STREAMSCALE_r10.json, mults 1 4 16).
+  * (defaults: STREAMSCALE_r10.json, mults 1 4 16). Rows merge into the
+  * `--out` file like ScaleProbe's: the measured `(op, mult)` rows are
+  * replaced, every other row is kept.
   */
 object StreamProbe {
   final case class Result(op: String, mult: Int, rowsIn: Long,
@@ -179,29 +181,24 @@ object StreamProbe {
     }
   }
 
-  private def writeJson(path: String, mults: scala.Seq[Int],
+  /** Writes `rs` to `path`, merging into the artifact already there
+    * ([[ScaleProbe.mergeJson]]): a targeted `64` run keeps the other
+    * mults' rows StreamScaleSpec gates. */
+  def writeJson(path: String, mults: scala.Seq[Int],
       rs: scala.Seq[Result]): Unit = {
-    val rows = rs.map { r =>
-      s"""  {"op":"${r.op}","mult":${r.mult},"rows_in":${r.rowsIn},""" +
+    ScaleProbe.mergeJson(path, mults, rs.map { r =>
+      (r.op, r.mult) -> (s"""{"op":"${r.op}","mult":${r.mult},"rows_in":${r.rowsIn},""" +
         f""""wall_s":${r.wallSec}%.3f,"rows_out":${r.rowsOut},""" +
         s""""batches":${r.batches},"max_state_rows":${r.maxStateRows},""" +
-        s""""dropped_by_watermark":${r.droppedByWatermark}}"""
-    }
-    val json = s"""{"sf":"sf0.1","mults":[${mults.mkString(",")}],""" +
-      "\"results\":[\n" + rows.mkString(",\n") + "\n]}\n"
-    java.nio.file.Files.write(java.nio.file.Paths.get(path),
-      json.getBytes("UTF-8"))
+        s""""dropped_by_watermark":${r.droppedByWatermark}}""")
+    })
     println(s"wrote $path")
   }
 
   def main(args: Array[String]): Unit = {
-    val (outPath, rest) = {
-      val i = args.indexOf("--out")
-      if (i >= 0) (args(i + 1), args.patch(i, Nil, 2).toSeq)
-      else ("STREAMSCALE_r10.json", args.toSeq)
-    }
-    val mults =
-      if (rest.nonEmpty) rest.map(_.toInt) else scala.Seq(1, 4, 16)
+    val (outPath, rest) = ScaleProbe.outArg("StreamProbe", args.toSeq,
+      "STREAMSCALE_r10.json")
+    val mults = ScaleProbe.multArgs("StreamProbe", rest)
     val spark = Sessions.get()
     val results = run(spark, "/root/testdata/sf0.1", mults)
     writeJson(outPath, mults, results)

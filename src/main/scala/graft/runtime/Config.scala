@@ -161,19 +161,10 @@ object Config {
       throw new IllegalArgumentException("config: missing input"))))
     val procs = root.get("pipeline").map(asMap).flatMap(_.get("processors"))
       .map(compileProcessors).getOrElse(Nil)
-    val streaming = root.get("input").map(asMap).exists(m =>
-      m.contains("file_stream") || m.contains("generate_stream") ||
-        m.keys.exists(graft.sources.Brokers.inputKinds) ||
-        (m.contains("kafka") &&
-          !asMap(m("kafka")).get("batch").exists(_.toString.toBoolean)) ||
-        (m.contains("spark_format") &&
-          asMap(m("spark_format")).get("streaming").forall(_.toString.toBoolean)) ||
-        (m.contains("socket") &&
-          asMap(m("socket")).get("stream").exists(_.toString.toBoolean)))
-    // a stream writes its output once per micro-batch: a file output
-    // with no `mode` appends there, or each batch would replace the last
+    // a stream writes its output once per micro-batch: a file-shaped
+    // output appends there, or each batch would replace the last
     val output = root.get("output").map(asMap)
-      .map(compileOutput(_, if (streaming) "append" else "overwrite"))
+      .map(compileOutput(_, if (input.streaming) "append" else "overwrite"))
       .getOrElse(Sinks.ConsoleSink())
     val pushPath = root.get("input").map(asMap)
       .flatMap(_.get("http_server")).map(c =>
@@ -190,7 +181,7 @@ object Config {
         .flatMap(_.get("batch_policy").map(asMap))
         .flatMap(_.get("period")).map(durationMs)
     }
-    StreamSpec(input, procs, output, streaming, pushPath, bufferPeriod)
+    StreamSpec(input.read, procs, output, input.streaming, pushPath, bufferPeriod)
   }
 
   // ---------- components ----------
@@ -300,21 +291,27 @@ object Config {
         s"resource type must be cache|input|output|processor|rate_limit, got $o")
     }
 
-  private def compileInputBase(m: Map[String, Any]): SparkSession => DataFrame = {
+  /** A compiled input: its reader, and whether that reader is a stream
+    * (decided here, per kind, so `load` and the wrappers never re-derive
+    * it). */
+  final case class Input(read: SparkSession => DataFrame,
+      streaming: Boolean = false)
+
+  private def compileInputBase(m: Map[String, Any]): Input = {
     val (kind, conf) = one(m, "input")
     kind match {
       case "file" | "files" =>
         val paths = conf.get("paths").map(asList(_).map(_.toString))
           .getOrElse(scala.Seq(str(conf, "path")))
         val codec = conf.get("codec").map(_.toString).getOrElse("lines")
-        s => paths.map(p => Sources.file(s, p, codec)).reduce(_.unionByName(_))
+        Input(s => paths.map(p => Sources.file(s, p, codec)).reduce(_.unionByName(_)))
       case "generate" | "bloblang" =>
         // `bloblang` is the deprecated v3 spelling of generate —
         // lib/input/generate.go registers BOTH constructors on the same
         // reader (Constructors[TypeBloblang] wraps newBloblang too)
         val mapping = str(conf, "mapping")
         val count = conf.get("count").map(_.toString.toLong).getOrElse(100L)
-        s => Sources.generate(s, mapping, count)
+        Input(s => Sources.generate(s, mapping, count))
       case "csv" =>
         // lib/input/csv.go (RFC 4180 structured records): paths (globs),
         // parse_header_row, delimiter — Spark's native CSV scan through
@@ -324,23 +321,24 @@ object Config {
         val header =
           conf.get("parse_header_row").forall(_.toString.toBoolean)
         val delim = optStr(conf, "delimiter", ",")
-        s => paths.map(p => Sources.file(s, p, s"csv:$delim",
-          header = header)).reduce(_.unionByName(_))
+        Input(s => paths.map(p => Sources.file(s, p, s"csv:$delim",
+          header = header)).reduce(_.unionByName(_)))
       case "subprocess" =>
         // lib/input/subprocess.go: run a command, consume stdout lines
         val cmd = str(conf, "name") +: conf.get("args")
           .map(asList(_).map(_.toString)).getOrElse(Nil)
-        s => Sources.subprocess(s, cmd)
+        Input(s => Sources.subprocess(s, cmd))
+      // wrappers are streams when any input they wrap is
       case "broker" =>
         val inputs = asList(conf("inputs")).map(i => compileInput(asMap(i)))
-        s => Sources.broker(inputs.map(_(s)))
+        Input(s => Sources.broker(inputs.map(_.read(s))), inputs.exists(_.streaming))
       case "sequence" =>
         val inputs = asList(conf("inputs")).map(i => compileInput(asMap(i)))
-        s => Sources.sequence(inputs.map(_(s)))
+        Input(s => Sources.sequence(inputs.map(_.read(s))), inputs.exists(_.streaming))
       case "file_stream" =>
         val path = str(conf, "path")
         val format = conf.get("format").map(_.toString).getOrElse("parquet")
-        s => {
+        Input(s => {
           // streaming sources need an explicit schema: infer from the
           // existing files (standard bootstrap for file streams)
           val schema = (format match {
@@ -349,50 +347,53 @@ object Config {
             case "csv" => s.read.option("header", true).csv(path)
           }).schema
           graft.streaming.Streaming.fileStream(s, path, format, schema)
-        }
+        }, streaming = true)
       case "generate_stream" =>
         val mapping = str(conf, "mapping")
         val rps = conf.get("rows_per_second").map(_.toString.toInt).getOrElse(10)
-        s => graft.streaming.Streaming.rateGenerate(s, mapping, rps)
+        Input(s => graft.streaming.Streaming.rateGenerate(s, mapping, rps),
+          streaming = true)
       case "read_until" =>
         val inner = compileInput(asMap(conf("input")))
         val check = condString(conf("check"))
-        s => Sources.readUntil(inner(s), check)
+        Input(s => Sources.readUntil(inner.read(s), check), inner.streaming)
       case "http_client" =>
         val url = str(conf, "url")
         val verb = optStr(conf, "verb", "GET")
         val codec = optStr(conf, "codec", "lines")
         val hdrs = conf.get("headers").map(asMap).getOrElse(Map.empty)
           .map { case (k, v) => k -> v.toString }
-        s => Sources.httpClient(s, url, verb, hdrs, codec)
-      case "stdin" => s => Sources.stdin(s)
+        Input(s => Sources.httpClient(s, url, verb, hdrs, codec))
+      case "stdin" => Input(s => Sources.stdin(s))
       case "tcp_server" | "socket_server" =>
         val addr = str(conf, "address").split(":", 2)
         require(addr.length == 2, s"$kind input: address must be host:port")
         val maxConns = conf.get("max_connections").map(_.toString.toInt).getOrElse(1)
-        s => Sources.tcpServer(s, addr(0), addr(1).toInt, maxConns)
+        Input(s => Sources.tcpServer(s, addr(0), addr(1).toInt, maxConns))
       case "udp_server" =>
         val addr = str(conf, "address").split(":", 2)
         require(addr.length == 2, "udp_server input: address must be host:port")
         val idle = conf.get("idle_timeout_ms").map(_.toString.toInt).getOrElse(1000)
-        s => Sources.udpServer(s, addr(0), addr(1).toInt, idle)
+        Input(s => Sources.udpServer(s, addr(0), addr(1).toInt, idle))
       case "websocket" =>
         val url = str(conf, "url")
         val count = conf.get("count").map(_.toString.toInt).getOrElse(Int.MaxValue)
-        s => Sources.websocket(s, url, count)
+        Input(s => Sources.websocket(s, url, count))
       case "redis_list" =>
-        s => Sources.redisList(s,
-          graft.ops.FakeRedisFactory(str(conf, "url")), str(conf, "key"))
+        Input(s => Sources.redisList(s,
+          graft.ops.FakeRedisFactory(str(conf, "url")), str(conf, "key")))
       case "http_server" =>
         // push input: bodies staged by the control plane per request
         // (lib/input/http_server.go); path handled via StreamSpec.pushPath
-        s => Sources.httpServer(s)
+        Input(s => Sources.httpServer(s))
       case "inproc" =>
         val name = m(kind).toString
-        _ => Sinks.Inproc.get(name)
+        Input(_ => Sinks.Inproc.get(name))
       case "resource" =>
+        // the reader resolves at run time (the resource may be replaced
+        // after this config loads); stream-ness is the one registered now
         val name = m(kind).toString
-        s => InputResources(name)(s)
+        Input(s => InputResources(name).read(s), InputResources.streaming(name))
       case "socket" | "tcp" =>
         // address "host:port" (lib/input/socket.go; `tcp` is the
         // deprecated v3 spelling, lib/input/tcp.go — same line-reader
@@ -402,8 +403,8 @@ object Config {
         require(addr.length == 2, s"$kind input: address must be host:port")
         val (host, port) = (addr(0), addr(1).toInt)
         val stream = conf.get("stream").exists(_.toString.toBoolean)
-        s => if (stream) Sources.socketStream(s, host, port)
-             else Sources.socket(s, host, port)
+        Input(s => if (stream) Sources.socketStream(s, host, port)
+             else Sources.socket(s, host, port), stream)
       case "kafka" | "kafka_balanced" | "kafka_cg" | "kafka_parts" =>
         // kafka_balanced (lib/input/kafka_balanced.go) / kafka_cg are
         // v3's consumer-group variants and kafka_parts pins explicit
@@ -412,23 +413,24 @@ object Config {
         // all four map onto the same connector config
         val c = kafkaInputConfig(conf)
         val batch = conf.get("batch").exists(_.toString.toBoolean)
-        s => if (batch) graft.sources.Kafka.read(s, c)
-             else graft.sources.Kafka.readStream(s, c)
+        Input(s => if (batch) graft.sources.Kafka.read(s, c)
+             else graft.sources.Kafka.readStream(s, c), !batch)
       case "dynamic" =>
         // dynamic (lib/input/dynamic.go): REST-managed named input set —
         // union whatever is registered at plan time. The static `inputs`
         // map registers members at load time; `prefix` namespaces the
-        // CRUD endpoints (like the output twin, it never filters members)
+        // CRUD endpoints (like the output twin, it never filters members).
+        // REST-added members are unknown at load: the input stays batch.
         conf.get("inputs").map(asMap).getOrElse(Map.empty).foreach {
-          case (id, in) => DynamicInputs.set(id.toString, compileInput(asMap(in)))
+          case (id, in) => DynamicInputs.set(id.toString, compileInput(asMap(in)).read)
         }
-        s => DynamicInputs.union(s)
+        Input(s => DynamicInputs.union(s))
       case "spark_format" =>
         val format = str(conf, "format")
         val opts = conf.get("options").map(asMap).getOrElse(Map.empty)
           .map { case (k, v) => k -> v.toString }
         val stream = conf.get("streaming").forall(_.toString.toBoolean)
-        s => Sources.sparkFormat(s, format, opts, stream)
+        Input(s => Sources.sparkFormat(s, format, opts, stream), stream)
       case k @ ("aws_s3" | "s3" | "gcp_cloud_storage" | "azure_blob_storage" |
           "hdfs" | "sftp") =>
         // object-store inputs (lib/input/aws_s3.go, gcp_cloud_storage.go,
@@ -440,25 +442,25 @@ object Config {
         // the standard Hadoop conf, not this config.
         val path = objectStorePath(k, conf)
         val codec = conf.get("codec").map(_.toString).getOrElse("lines")
-        s => Sources.file(s, path, codec)
+        Input(s => Sources.file(s, path, codec))
       case k if graft.sources.Brokers.inputKinds(k) =>
         // broker breadth (lib/input/constructor.go registry): binding is
         // compiled (and linted) NOW; the transport format resolves at
         // call time from the deploy-provided connector jar
         val b = graft.sources.Brokers.input(k, conf)
-        s => graft.sources.Brokers.readStream(s, b)
+        Input(s => graft.sources.Brokers.readStream(s, b), streaming = true)
       case o => throw new IllegalArgumentException(s"config: unknown input kind $o")
     }
   }
 
-  private def compileInput(m: Map[String, Any]): SparkSession => DataFrame = {
+  private def compileInput(m: Map[String, Any]): Input = {
     val base = compileInputBase(m)
     // input-level `batching:` (the Batching field on broker/file inputs),
     // applied right after the source. Streaming inputs keep micro-batch
     // batching.
     one(m, "input")._2.get("batching").map(asMap).map(rebatcher) match {
-      case Some(p) if !(p eq Noop) =>
-        s => { val df = base(s); if (df.isStreaming) df else p(df) }
+      case Some(p) if !(p eq Noop) && !base.streaming =>
+        base.copy(read = s => p(base.read(s)))
       case _ => base
     }
   }
@@ -792,37 +794,30 @@ object Config {
     if (partsScope.isEmpty) compiled else B.PartsScoped(partsScope, compiled)
   }
 
-  /** `fileMode`: the write mode of a `file` output that sets no `mode`
-    * (this output's and those nested in it). */
+  /** A file-shaped output (`file`, `parquet`, the object stores) at
+    * `path`: an interpolated path (writer/files.go:51) splits into its
+    * static directory prefix and the compiled Bloblang rest; any other is
+    * one static-path sink. */
+  private def fileOutput(path: String, codec: String, mode: String): Sink =
+    if (path.contains("${!")) {
+      val cut = path.lastIndexOf('/', path.indexOf("${!"))
+      Sinks.DynamicPathSink(if (cut < 0) "." else path.substring(0, cut),
+        Conditions.interpToExpr(path.substring(cut + 1)), codec, mode)
+    } else Sinks.FileSink(path, codec, mode)
+
+  private def writerCodec(conf: Map[String, Any]): String =
+    conf.get("codec").orElse(conf.get("format")).map(_.toString).getOrElse("lines")
+
+  /** `fileMode`: the write mode of a file-shaped output that sets no
+    * `mode` (this output's and those nested in it). */
   private def compileOutput(m: Map[String, Any],
       fileMode: String = "overwrite"): Sink = {
     def child(o: Any): Sink = compileOutput(asMap(o), fileMode)
     val (kind, conf) = one(m, "output")
     val sink = kind match {
-      case "file" | "files" =>
-        val codec = conf.get("codec").orElse(conf.get("format"))
-          .map(_.toString).getOrElse("lines")
-        val rawPath = str(conf, "path")
-        val mode = conf.get("mode").map(_.toString).getOrElse(fileMode)
-        // writer codecs (internal/codec/writer.go): append / all-bytes /
-        // delim:x are byte-stream shapes, not table formats
-        if (rawPath.contains("${!")) {
-          // interpolated path (writer/files.go:51): static dir prefix +
-          // compiled Bloblang relative path
-          val cut = rawPath.lastIndexOf('/', rawPath.indexOf("${!"))
-          val base = if (cut < 0) "." else rawPath.substring(0, cut)
-          Sinks.DynamicPathSink(base,
-            Conditions.interpToExpr(rawPath.substring(cut + 1)), codec,
-            mode,
-            // above this many distinct resolved paths the sink switches
-            // to one partitionBy pass + metadata renames (same layout)
-            conf.get("auto_partition_threshold")
-              .map(_.toString.toInt).getOrElse(100))
-        } else if (codec == "append" || codec == "all-bytes" ||
-            codec.startsWith("delim:"))
-          Sinks.CodecFileSink(rawPath, codec, mode)
-        else Sinks.FileSink(rawPath, codec, mode = mode)
-      case "parquet" => Sinks.FileSink(str(conf, "path"), "parquet")
+      case "file" | "files" => fileOutput(str(conf, "path"), writerCodec(conf),
+        conf.get("mode").map(_.toString).getOrElse(fileMode))
+      case "parquet" => fileOutput(str(conf, "path"), "parquet", fileMode)
       case "stdout" => Sinks.ConsoleSink()
       case "drop" => Sinks.DropSink
       case "switch" =>
@@ -922,10 +917,9 @@ object Config {
         // — a per-task parallel file write, never a driver upload loop
         // (`blob_storage` is the deprecated alias of azure_blob_storage,
         // lib/output/constructor.go:170)
-        Sinks.FileSink(objectStorePath(
-            if (k == "blob_storage") "azure_blob_storage" else k, conf),
-          conf.get("codec").orElse(conf.get("format")).map(_.toString)
-            .getOrElse("lines"))
+        fileOutput(objectStorePath(
+          if (k == "blob_storage") "azure_blob_storage" else k, conf),
+          writerCodec(conf), fileMode)
       case k @ ("aws_kinesis" | "kinesis" | "aws_sqs" | "sqs" | "gcp_pubsub" |
           "nats" | "nats_stream" | "nats_jetstream" | "mqtt" | "amqp_0_9" |
           "amqp" | "amqp_1" | "nsq" | "pulsar" | "redis_streams" |
@@ -1056,12 +1050,12 @@ object Config {
 
   /** Named input resources (`input.resource` / `resources.inputs`). */
   object InputResources {
-    private val inputs =
-      scala.collection.concurrent.TrieMap[String, SparkSession => DataFrame]()
-    def register(name: String, in: SparkSession => DataFrame): Unit =
-      inputs.put(name, in)
-    def apply(name: String): SparkSession => DataFrame = inputs.getOrElse(name,
+    private val inputs = scala.collection.concurrent.TrieMap[String, Input]()
+    def register(name: String, in: Input): Unit = inputs.put(name, in)
+    def apply(name: String): Input = inputs.getOrElse(name,
       throw new IllegalArgumentException(s"unknown input resource $name"))
+    /** False for a name not registered (yet): it reads as batch. */
+    def streaming(name: String): Boolean = inputs.get(name).exists(_.streaming)
   }
 
   /** Metrics wrapper peeling (`lib/metrics` whitelist / blacklist /

@@ -1,6 +1,6 @@
 package graft.sinks
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row}
 import org.apache.spark.sql.functions._
 import graft.model.Envelope
 import graft.blobl.{Mapping => Blobl}
@@ -30,109 +30,69 @@ final case class BatchedSink(child: Sink,
 
 object Sinks {
 
-  /** Impossible-in-a-real-path value standing in for null in the
-    * partitionBy regime, so the null check rides the single write pass.
-    * \\u0001 is in Spark's partition-escape set (lands as %01 on disk);
-    * \\u0000 is NOT and would fail the write itself. A per-run UUID
-    * suffix makes collision with a legitimate data-derived path
-    * impossible (the marker value doesn't exist until this write
-    * starts). */
+  /** Impossible-in-a-real-path value standing in for null, so the null
+    * check rides the single write pass. \\u0001 is in Spark's
+    * partition-escape set (lands as %01 on disk); \\u0000 is NOT and
+    * would fail the write itself. A per-run UUID suffix makes collision
+    * with a legitimate data-derived path impossible (the marker value
+    * doesn't exist until this write starts). */
   private def newNullPathMarker(): String =
     s"\u0001null-${java.util.UUID.randomUUID().toString.take(8)}"
 
+  /** Writer codecs that write through java.nio on the tasks, not
+    * through a Spark writer: they need a local path. */
+  private def byteCodec(codec: String): Boolean =
+    codec == "append" || codec == "all-bytes"
+
+  /** `s3a://b/k`, `file:/tmp/x`: a path Hadoop resolves, not java.io. */
+  private def hasScheme(path: String): Boolean =
+    path.matches("[A-Za-z][A-Za-z0-9+.-]*:.*")
+
   /** Interpolated-path file output (`lib/output/writer/files.go:22,51`:
     * `path` is a Bloblang field expression — per-message dynamic paths).
-    * The relative path compiles to a Column. Two write regimes, chosen
-    * by the RESOLVED path cardinality (probed with a bounded
-    * `limit(threshold+1)` — never a data-sized collect):
-    *  - ≤ `autoPartitionThreshold` distinct paths (the config-shaped
-    *    case: topics/dates/severities): one write per distinct path,
-    *    preserving the exact per-path directory layout with cheap
-    *    pushdown-friendly filters.
-    *  - above it (a data-shaped key — user ids, sessions): ONE
-    *    partitionBy write (single pass, Spark's native layout for that
-    *    shape) into a temp dir, whose `_graft_path=<escaped>` partition
-    *    directories are then renamed to the same `base/<path>/` layout
-    *    the per-path regime produces — P filtered data passes become
-    *    1 data pass + P metadata renames. */
+    * The relative path compiles to a Column. ONE partitionBy write (a
+    * single data pass, whatever the number of resolved paths) lands in a
+    * temp dir under `base`; its `_graft_path=<escaped>` partition
+    * directories are then checked (no null, none escaping `base`) and
+    * renamed to `base/<resolved path>/`. Rows and writer are
+    * [[FileSink]]'s, so every Spark-writer codec applies; `append` and
+    * `all-bytes` are rejected here, at load. */
   final case class DynamicPathSink(base: String, pathExpr: String,
-      format: String = "lines", mode: String = "overwrite",
-      autoPartitionThreshold: Int = 100) extends Sink {
+      format: String = "lines", mode: String = "overwrite") extends Sink {
+    require(!byteCodec(format),
+      s"file output: codec $format cannot write an interpolated path")
+    require(!hasScheme(base),
+      s"file output: an interpolated path needs a local base directory, got $base")
+    private val file = FileSink(base, format, mode)
 
     def write(df: DataFrame): Unit = {
-      val withP = df.withColumn("_graft_path",
-        Blobl.envelopeExpr(df, pathExpr))
-      // a null-resolving expression would NPE inside File(base, null), and
-      // a data-derived `../` must never escape the base directory
-      val probe = withP.select(col("_graft_path")).distinct()
-        .limit(autoPartitionThreshold + 1)
-        .collect().map(r => if (r.isNullAt(0)) null else r.getString(0))
-      require(!probe.contains(null),
-        s"file output: path expression '$pathExpr' resolved to null")
-      if (probe.length <= autoPartitionThreshold) writePerPath(withP, probe)
-      else writePartitioned(withP)
-    }
-
-    private def baseCanon = new java.io.File(base).getCanonicalPath
-
-    private def checkInBase(p: String): java.io.File = {
-      val target = new java.io.File(base, p)
-      require(target.getCanonicalPath.startsWith(baseCanon + java.io.File.separator) ||
-          target.getCanonicalPath == baseCanon,
-        s"file output: resolved path '$p' escapes the base directory")
-      target
-    }
-
-    private def writePerPath(withP: DataFrame, paths: Array[String]): Unit =
-      paths.foreach { p =>
-        FileSink(checkInBase(p).getPath, format, mode)
-          .write(withP.filter(col("_graft_path") === p).drop("_graft_path"))
-      }
-
-    private def writePartitioned(withP0: DataFrame): Unit = {
-      // single data pass: nulls are tagged with an impossible marker value
-      // and detected from the driver-side partition listing AFTER the write
-      // (a distributed pre-check would cost a full extra pass over the
-      // input). The trade-off: a null produced by a row the bounded
-      // limit-probe didn't see fails LATE — after the full pass has been
-      // written to tmp — but it still fails atomically (tmp is discarded,
-      // nothing lands under base). Escape checking happens on the same
-      // (path-count-sized) listing, same as per-path.
+      // nulls are tagged with the marker and detected from the
+      // driver-side partition listing AFTER the write (a distributed
+      // pre-check would cost a full extra pass over the input); a
+      // rejected write still fails atomically: tmp is discarded, nothing
+      // lands under base
       val nullPathMarker = newNullPathMarker()
-      val withP = withP0.withColumn("_graft_path",
-        coalesce(col("_graft_path"), lit(nullPathMarker)))
+      val withP = df.withColumn("_graft_path",
+        coalesce(Blobl.envelopeExpr(df, pathExpr), lit(nullPathMarker)))
       val tmp = new java.io.File(base,
         s"_graft_tmp_${java.util.UUID.randomUUID().toString.take(8)}")
       try {
-        // FileSink's projections (contentOrDoc / unwrap) would drop the
-        // partition column — project inline, keeping `_graft_path`
-        val out = format match {
-          case "lines" => withP.select(
-            Envelope.contentOrDoc(withP).cast("string").as("value"),
-            col("_graft_path"))
-          case _ => withP.select(col(Envelope.Doc + ".*"), col("_graft_path"))
-        }
-        val w = out.write.mode("overwrite").partitionBy("_graft_path")
-        format match {
-          case "parquet" => w.parquet(tmp.getPath)
-          case "json" => w.json(tmp.getPath)
-          case "csv" => w.option("header", true).csv(tmp.getPath)
-          case "lines" => w.text(tmp.getPath)
-          case o => throw new IllegalArgumentException(s"unknown sink format $o")
-        }
+        file.save(file.project(withP, "_graft_path").write.mode("overwrite")
+          .partitionBy("_graft_path"), tmp.getPath)
         val parts = Option(tmp.listFiles()).getOrElse(Array.empty)
           .filter(f => f.isDirectory && f.getName.startsWith("_graft_path="))
         val values = parts.map(d =>
           unescapePartitionValue(d.getName.stripPrefix("_graft_path=")))
         require(!values.contains(nullPathMarker),
           s"file output: path expression '$pathExpr' resolved to null")
-        parts.zip(values).foreach { case (dir, raw) =>
-          // Spark stores an empty-string partition value as the Hive
-          // default-partition sentinel; the per-path regime writes "" into
-          // the base directory itself — match that layout (and never
-          // recursively delete base: tmp lives under it)
-          val p = if (raw == "__HIVE_DEFAULT_PARTITION__") "" else raw
-          val target = checkInBase(p)
+        // Spark stores an empty-string partition value as the Hive
+        // default-partition sentinel: "" is the base directory itself.
+        // Every target is checked before the first rename, so a rejected
+        // write leaves base as it was.
+        val targets = values.map(raw =>
+          checkInBase(if (raw == "__HIVE_DEFAULT_PARTITION__") "" else raw))
+        parts.zip(targets).foreach { case (dir, target) =>
+          // never recursively delete base: tmp lives under it
           val isBase = target.getCanonicalPath == baseCanon
           if (!isBase && target.exists() && mode == "overwrite")
             deleteRecursively(target)
@@ -147,6 +107,16 @@ object Sinks {
           }
         }
       } finally deleteRecursively(tmp)
+    }
+
+    private def baseCanon = new java.io.File(base).getCanonicalPath
+
+    private def checkInBase(p: String): java.io.File = {
+      val target = new java.io.File(base, p)
+      require(target.getCanonicalPath.startsWith(baseCanon + java.io.File.separator) ||
+          target.getCanonicalPath == baseCanon,
+        s"file output: resolved path '$p' escapes the base directory")
+      target
     }
 
     /** Inverse of the Hive/Spark partition-path escaping (`%XX` for
@@ -173,25 +143,71 @@ object Sinks {
     }
   }
 
-  /** `file`/`files`/object-store writer to one static path. format ∈
-    * parquet | json | csv | lines: `lines` writes each row's content (else
-    * its serialized doc) as one text line; the other formats write the
-    * unwrapped doc columns. */
+  /** The writer of every static-path file-shaped output (`file`,
+    * `parquet`, the object stores), one codec table after
+    * `internal/codec/writer.go`: parquet | json | csv write the unwrapped
+    * doc columns; `lines` writes each row's content (else its serialized
+    * doc) as one text line, `delim:x` the same with `x` between messages;
+    * `append` concatenates a partition's messages into one undelimited
+    * file per task and `all-bytes` writes one file per message — both
+    * through java.nio on the tasks (fully parallel, no driver funnel), so
+    * they need a local path. `mode` `append` keeps what earlier writes (a
+    * stream's earlier micro-batches) left in `path`. */
   final case class FileSink(path: String, format: String = "parquet",
       mode: String = "overwrite") extends Sink {
-    def write(df: DataFrame): Unit = {
-      val out = format match {
-        case "lines" =>
-          df.select(Envelope.contentOrDoc(df).cast("string").as("value"))
-        case _ => Envelope.unwrap(df)
-      }
-      val w = out.write.mode(mode)
+    require(!(byteCodec(format) && hasScheme(path)),
+      s"file output: codec $format writes local files, got $path")
+
+    def write(df: DataFrame): Unit =
+      if (byteCodec(format)) writeBytes(df)
+      else save(project(df).write.mode(mode), path)
+
+    /** The rows this sink writes, plus the `keep` columns. */
+    private[sinks] def project(df: DataFrame, keep: String*): DataFrame = {
+      val rows =
+        if (format == "lines" || format.startsWith("delim:"))
+          Envelope.contentOrDoc(df).cast("string").as("value")
+        else col(Envelope.Doc + ".*")
+      df.select(rows +: keep.map(col): _*)
+    }
+
+    private[sinks] def save(w: DataFrameWriter[Row], to: String): Unit =
       format match {
-        case "parquet" => w.parquet(path)
-        case "json" => w.json(path)
-        case "csv" => w.option("header", true).csv(path)
-        case "lines" => w.text(path)
+        case "parquet" => w.parquet(to)
+        case "json" => w.json(to)
+        case "csv" => w.option("header", true).csv(to)
+        case "lines" => w.text(to)
+        case d if d.startsWith("delim:") =>
+          w.option("lineSep", d.stripPrefix("delim:")).text(to)
         case o => throw new IllegalArgumentException(s"unknown sink format $o")
+      }
+
+    private def writeBytes(df: DataFrame): Unit = {
+      val perMessage = format == "all-bytes"
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path))
+      val pathStr = path
+      // file names are per task; an appending write tags its own
+      val tag =
+        if (mode == "append") java.util.UUID.randomUUID().toString.take(8) + "-"
+        else ""
+      df.select(Envelope.contentOrDoc(df).cast("binary")).foreachPartition {
+        (rows: Iterator[Row]) =>
+          val pid = org.apache.spark.TaskContext.getPartitionId()
+          if (perMessage) {
+            var i = 0
+            rows.foreach { r =>
+              java.nio.file.Files.write(
+                java.nio.file.Paths.get(pathStr, f"msg-$tag$pid%05d-$i%06d.bin"),
+                r.getAs[Array[Byte]](0))
+              i += 1
+            }
+          } else {
+            val out = new java.io.BufferedOutputStream(
+              java.nio.file.Files.newOutputStream(
+                java.nio.file.Paths.get(pathStr, f"part-$tag$pid%05d.bin")))
+            try rows.foreach(r => out.write(r.getAs[Array[Byte]](0)))
+            finally out.close()
+          }
       }
     }
   }
@@ -494,59 +510,6 @@ object Sinks {
     def write(df: DataFrame): Unit = {
       inner.write(df.filter(col(Envelope.Error).isNull))
       dlq.write(df.filter(col(Envelope.Error).isNotNull))
-    }
-  }
-
-  /** Writer codecs (`internal/codec/writer.go`): the sink-side symmetry
-    * of §2.7's reader codecs. `lines` and `delim:x` ride Spark's text
-    * writer (custom `lineSep`); `append` concatenates a partition's
-    * messages into one undelimited file per task; `all-bytes` writes one
-    * file per message. The task-side file writes keep every shape fully
-    * parallel — one file per task/message, no driver funnel. `mode`
-    * `append` keeps what earlier writes (a stream's earlier micro-batches)
-    * left in `path`. */
-  final case class CodecFileSink(path: String, codec: String,
-      mode: String = "overwrite") extends Sink {
-    def write(df: DataFrame): Unit = {
-      val content = df.select(
-        Envelope.contentOrDoc(df).cast("binary").as("b"))
-      codec match {
-        case "lines" =>
-          content.select(col("b").cast("string").as("value"))
-            .write.mode(mode).text(path)
-        case c if c.startsWith("delim:") =>
-          content.select(col("b").cast("string").as("value"))
-            .write.mode(mode).option("lineSep", c.substring(6)).text(path)
-        case "append" | "all-bytes" =>
-          val perMessage = codec == "all-bytes"
-          val dir = java.nio.file.Paths.get(path)
-          java.nio.file.Files.createDirectories(dir)
-          val pathStr = path
-          // file names are per task; an appending write tags its own
-          val tag =
-            if (mode == "append") java.util.UUID.randomUUID().toString.take(8) + "-"
-            else ""
-          content.foreachPartition {
-            (rows: Iterator[org.apache.spark.sql.Row]) =>
-              val pid = org.apache.spark.TaskContext.getPartitionId()
-              if (perMessage) {
-                var i = 0
-                rows.foreach { r =>
-                  java.nio.file.Files.write(
-                    java.nio.file.Paths.get(pathStr, f"msg-$tag$pid%05d-$i%06d.bin"),
-                    r.getAs[Array[Byte]](0))
-                  i += 1
-                }
-              } else {
-                val out = new java.io.BufferedOutputStream(
-                  java.nio.file.Files.newOutputStream(
-                    java.nio.file.Paths.get(pathStr, f"part-$tag$pid%05d.bin")))
-                try rows.foreach(r => out.write(r.getAs[Array[Byte]](0)))
-                finally out.close()
-              }
-          }
-        case o => throw new IllegalArgumentException(s"unknown writer codec $o")
-      }
     }
   }
 

@@ -34,7 +34,7 @@ class ConfigSpec extends AnyFunSuite {
     assert(lines == 25)
   }
 
-  test("interpolated file path: auto_partition_threshold switches to the partitionBy regime") {
+  test("interpolated file path: one partitionBy pass, renamed to the per-path layout") {
     val base = Files.createTempDirectory("graft-cfg-dyn").toString
     val spec = Config.load(
       s"""input:
@@ -47,11 +47,10 @@ class ConfigSpec extends AnyFunSuite {
          |  file:
          |    path: "$base/b$${! this.i % 8 }/part"
          |    codec: lines
-         |    auto_partition_threshold: 3
          |""".stripMargin)
     spec.run(spark)
-    // 8 distinct paths > threshold 3 -> one partitionBy pass, renamed to
-    // the identical per-path layout
+    // 8 distinct paths -> one partitionBy pass, renamed to one directory
+    // per resolved path
     (0 until 8).foreach { k =>
       val n = spark.read.text(s"$base/b$k/part").count()
       assert(n == 5, s"b$k/part: $n lines")
@@ -590,6 +589,23 @@ class ConfigSpec extends AnyFunSuite {
     spec.run(spark)
     val got = spark.read.textFile(out).collect().sorted
     assert(got.toSeq == scala.Seq("s3row1", "s3row2"))
+  }
+
+  test("hdfs output with a delim writer codec writes through the file sink") {
+    val dir = Files.createTempDirectory("graft-hdfs-out").toString + "/res"
+    Config.load(
+      s"""input:
+         |  generate:
+         |    count: 10
+         |    mapping: "root.i = this.i"
+         |output:
+         |  hdfs:
+         |    scheme: file
+         |    directory: $dir
+         |    codec: "delim:;"
+         |""".stripMargin).run(spark)
+    assert(spark.read.option("lineSep", ";").json(dir).select("i").collect()
+      .map(_.getLong(0)).sorted.toSeq == (0L until 10L))
   }
 
   test("try directly followed by catch: rows the try arm flags run the catch arm") {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.model.Envelope
 
-/** JMESPath compliance corpus (VERDICT r10 #6): the upstream spec's
+/** JMESPath compliance corpus: the upstream spec's
   * compliance suite re-expressed as vectors — one group per feature area
   * of the public spec (jmespath.org/specification.html; the same areas the
   * jmespath.test repo files cover: basic, identifiers, indices, slice,

@@ -78,26 +78,19 @@ class MethodCoverageSpec extends AnyFunSuite {
     """{"id":3,"lang":"en","s":"three"}""")
 
   /** Writes `langRows` through a YAML `file` output with the interpolated
-    * path `<base>/${! this.lang }`, compiled by `Config.loadOutput`, once
-    * per `DynamicPathSink` write regime: the default threshold (two paths:
-    * one write per path) and `auto_partition_threshold: 1` (one
-    * partitioned write, renamed to the same layout). Returns the base
-    * directory of each write. */
-  private def writeByLang(codec: String): scala.Seq[String] =
-    scala.Seq(None -> 100, Some(1) -> 1).map { case (threshold, expected) =>
-      val base = java.nio.file.Files.createTempDirectory("graft-dyn").toString
-      val sink = graft.runtime.Config.loadOutput(
-        (scala.Seq("file:", s"  path: '$base/$${! this.lang }'", s"  codec: $codec") ++
-          threshold.map(t => s"  auto_partition_threshold: $t")).mkString("\n"))
-      sink match {
-        case d: graft.sinks.Sinks.DynamicPathSink =>
-          assert(d.autoPartitionThreshold == expected)
-        case o => fail(s"interpolated path compiled to $o")
-      }
-      sink.write(Envelope.wrap(jdf(langRows: _*), scala.Seq(col("id"))))
-      assert(new java.io.File(base).list().sorted.toSeq == scala.Seq("de", "en"))
-      base
-    }
+    * path `<base>/${! this.lang }`, compiled by `Config.loadOutput` to a
+    * `DynamicPathSink` (one partitioned write, renamed to one directory
+    * per resolved path). Returns the base directory of the write. */
+  private def writeByLang(codec: String): scala.Seq[String] = {
+    val base = java.nio.file.Files.createTempDirectory("graft-dyn").toString
+    val sink = graft.runtime.Config.loadOutput(scala.Seq("file:",
+      s"  path: '$base/$${! this.lang }'", s"  codec: $codec").mkString("\n"))
+    assert(sink.isInstanceOf[graft.sinks.Sinks.DynamicPathSink],
+      s"interpolated path compiled to $sink")
+    sink.write(Envelope.wrap(jdf(langRows: _*), scala.Seq(col("id"))))
+    assert(new java.io.File(base).list().sorted.toSeq == scala.Seq("de", "en"))
+    scala.Seq(base)
+  }
 
   private def rows(df: org.apache.spark.sql.DataFrame): scala.Seq[scala.Seq[Any]] =
     df.select("id", "lang", "s").orderBy("id").collect().map(_.toSeq).toSeq

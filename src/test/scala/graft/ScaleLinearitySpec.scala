@@ -126,7 +126,7 @@ class ScaleLinearitySpec extends AnyFunSuite {
   }
 
   test("log-log byte and record slopes stay bounded (byte-trend gate)") {
-    // Mirrors the wall slope gate (VERDICT r8 #1): per-step slack
+    // Mirrors the wall slope gate: per-step slack
     // compounds, a regression fit bounds the TREND. Records get the
     // wall's 1.15 cap (they are exact row counts); compressed bytes get
     // 1.3 — partition-count codec-adjacency effects legitimately bend

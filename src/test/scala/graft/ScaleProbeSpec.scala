@@ -33,4 +33,37 @@ class ScaleProbeSpec extends AnyFunSuite {
       assert(root.get("results").size == 5)
     } finally Files.deleteIfExists(f)
   }
+
+  test("StreamProbe merges into its --out artifact the same way") {
+    // STREAMSCALE rows as StreamProbe writes them, one per line
+    def row(op: String, mult: Int, wall: String, state: Int) =
+      s"""{"op":"$op","mult":$mult,"rows_in":${mult * 100000},"wall_s":$wall,""" +
+        s""""rows_out":${mult * 7},"batches":${mult * 4 + 1},"max_state_rows":$state,""" +
+        """"dropped_by_watermark":0}"""
+    val s1 = row("session_agg", 1, "7.878", 15092)
+    val j1 = row("interval_join", 1, "8.427", 10106)
+    val s4 = row("session_agg", 4, "9.181", 15170)
+    val j4 = row("interval_join", 4, "9.900", 10200)
+    val f = Files.createTempFile("streamscale", ".json")
+    try {
+      Files.write(f, ("""{"sf":"sf0.1","mults":[1,4],"results":[""" +
+        s"\n  $s1,\n  $j1,\n  $s4,\n  $j4\n]}\n").getBytes(UTF_8))
+      StreamProbe.writeJson(f.toString, Seq(4, 64), Seq(
+        StreamProbe.Result("session_agg", 4, 400000L, 9.5, 28L, 17L, 15171L, 0L),
+        StreamProbe.Result("session_agg", 64, 6400000L, 90.25, 448L, 257L, 15200L, 0L)))
+      val lines = new String(Files.readAllBytes(f), UTF_8).split("\n").toSeq
+      assert(lines.head == """{"sf":"sf0.1","mults":[1,4,64],"results":[""")
+      assert(lines.last == "]}")
+      assert(lines.slice(1, lines.size - 1) == Seq(
+        s"  $s1,",
+        s"  $j1,",
+        """  {"op":"session_agg","mult":4,"rows_in":400000,"wall_s":9.500,"rows_out":28,""" +
+          """"batches":17,"max_state_rows":15171,"dropped_by_watermark":0},""",
+        s"  $j4,",
+        """  {"op":"session_agg","mult":64,"rows_in":6400000,"wall_s":90.250,"rows_out":448,""" +
+          """"batches":257,"max_state_rows":15200,"dropped_by_watermark":0}"""))
+      val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(f.toFile)
+      assert(root.get("results").size == 5)
+    } finally Files.deleteIfExists(f)
+  }
 }

@@ -85,7 +85,7 @@ class ServerIoSpec extends AnyFunSuite {
     val e = env(1L -> "aa", 2L -> "bb").coalesce(1)
       .withColumn(Envelope.Content, col("doc.s").cast("binary"))
 
-    Sinks.CodecFileSink(s"$base/append", "append").write(e)
+    Sinks.FileSink(s"$base/append", "append").write(e)
     val appended = java.nio.file.Files.list(
         java.nio.file.Paths.get(s"$base/append")).toArray.map(_.toString)
       .filter(_.endsWith(".bin"))
@@ -94,12 +94,12 @@ class ServerIoSpec extends AnyFunSuite {
       .mkString
     assert(appended.sorted == "aabb".sorted)
 
-    Sinks.CodecFileSink(s"$base/ab", "all-bytes").write(e)
+    Sinks.FileSink(s"$base/ab", "all-bytes").write(e)
     val files = java.nio.file.Files.list(java.nio.file.Paths.get(s"$base/ab"))
       .toArray.map(_.toString).filter(_.endsWith(".bin")).sorted
     assert(files.length == 2)
 
-    Sinks.CodecFileSink(s"$base/delim", "delim:|").write(e)
+    Sinks.FileSink(s"$base/delim", "delim:|").write(e)
     val joined = spark.read.option("lineSep", "|").text(s"$base/delim")
       .as[String].collect().filter(_.nonEmpty).sorted.toSeq
     assert(joined == scala.Seq("aa", "bb"))
@@ -225,7 +225,7 @@ class ServerIoSpec extends AnyFunSuite {
         |    path: /tmp/graft-wc-out
         |    codec: append
         |""".stripMargin)
-    assert(spec.output.isInstanceOf[Sinks.CodecFileSink])
+    assert(spec.output.isInstanceOf[Sinks.FileSink])
     val spec2 = Config.load(
       """input:
         |  redis_list:

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Regenerate BASELINE.md's side-by-side section from close-out artifacts.
 
-VERDICT r10 "What's wrong" #1: the published round-10 headline ratio was
+The published round-10 headline ratio was once
 computed from a MID-ROUND medians snapshot (graft 129.7 s) while the final
 close-out medians said 156.3 s — a stale number survived into the committed
 BASELINE.md. This script makes the section a pure function of the committed
@@ -12,7 +12,7 @@ artifacts so a hand-typed snapshot can never be published again:
            ORACLE_SIDEBYSIDE_sf0.1_r{N}.json  (oracle side: highest N found)
   output : BASELINE.md, the block between SIDEBYSIDE:BEGIN/END markers
 
-Decomposition mirrors the judge's own (VERDICT r10 "Performance"):
+Decomposition:
   - full common-query totals + ratio
   - structural oracle outliers: oracle-side > OUTLIER_SEC (the recursive-CTE
     dedup closures, the range join, the LSH all-pairs — queries whose
