@@ -38,54 +38,37 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // optional args = query-name filter (dev loop); a full-suite run passes none
+    val names = Probe.orExit(Probe.select(args.toSeq), "usage: graft.Bench [query ...]")
+    val sfDir = Probe.sfDir
     val spark = Sessions.get()
 
-    // A bench co-scheduled with other work produces 1.5-3x inflated
-    // timings: the 1-min load average at start goes into the protocol
-    // line so readers can discount a contended run.
-    val hostCores = Runtime.getRuntime.availableProcessors
     // "cores" is the SESSION's parallelism (SPARK_GRAFT_CPUS drives
     // local[N] + shuffle.partitions in Sessions), not the host's core
     // count: a scaling run sets CPUS=8 on a 32-core host and reads this
     // field to confirm the env was honored.
     val cores = sys.env.get("SPARK_GRAFT_CPUS")
       .flatMap(s => scala.util.Try(s.toInt).toOption).getOrElse(Sessions.DefaultCpus)
+    // A bench co-scheduled with other work produces 1.5-3x inflated
+    // timings: the 1-min load average at start goes into the protocol
+    // line so readers can discount a loaded run.
     val loadAtStart = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage // -1 if unsupported
-    val contended = loadAtStart > hostCores
 
-    def time(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
     def median(xs: scala.Seq[Double]): Double = {
       val s = xs.sorted; s(s.length / 2)
     }
-    def runOnce(name: String): Double = {
-      val t = time(SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save())
-      // free checkpointed/cached RDDs so block-manager pressure from one
-      // query never skews the next (localCheckpoint has no auto-unpersist)
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      t
-    }
-
-    // optional args = query-name filter (dev loop); driver passes none
-    val names =
-      if (args.nonEmpty) SparkEntry.queries.keys.toSeq.filter(args.contains).sorted
-      else SparkEntry.queries.keys.toSeq.sorted
     val fps = scala.collection.mutable.Map[String, PlanFp]()
     val results = names.map { name =>
       try {
-        // build once outside time() for the fingerprint, then warm up on
-        // the built frame — warmup wall is discarded either way, and for
-        // the streaming gates (whose BUILDER runs the stream) this avoids
-        // one extra full stream execution per query
+        // build once for the fingerprint, then warm up on the built frame
+        // — warmup wall is discarded either way, and for the streaming
+        // gates (whose BUILDER runs the stream) this avoids one extra
+        // full stream execution per query
         val df = SparkEntry.queries(name)(spark, sfDir)
         try fps(name) = planFingerprint(df) catch { case _: Throwable => () }
-        time(df.write.format("noop").mode("overwrite").save()) // warmup
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-        name -> median((1 to 3).map(_ => runOnce(name)))
+        Probe.execute(df) // warmup
+        name -> median((1 to 3).map(_ => Probe.execute(SparkEntry.queries(name)(spark, sfDir))))
       } catch { case _: Throwable => name -> -1.0 }
     }
 
@@ -94,7 +77,7 @@ object Bench {
     // The stdout protocol line stays compact, so it survives a 2,000-char
     // log tail; the per-query map goes only to BENCH_RESULT_<sf>.json.
     val resultLine =
-      f"""{"metric":"total","value":$total%.4f,"unit":"sec","n":${results.size},"sf":"$sfDir","cores":$cores,"load":$loadAtStart%.2f,"contended":$contended,"failed":${failed.size}}"""
+      f"""{"metric":"total","value":$total%.4f,"unit":"sec","n":${results.size},"sf":"$sfDir","cores":$cores,"load":$loadAtStart%.2f,"failed":${failed.size}}"""
     // Full-suite runs only, so a filtered dev loop never clobbers it with a
     // partial total. Non-default core counts (scaling runs) get
     // their own file so the default-core snapshot is never overwritten.

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, FloatType}
-import graft.obs.JobProfile
 
 /** Scale-up probe: replicates the sf0.1 corpora at 1×/4×/16× with
   * per-copy decorrelating transforms and times the scale-sensitive
@@ -31,92 +30,20 @@ import graft.obs.JobProfile
   *  - events / graph edges: id-space offset per copy (disjoint users /
   *    nodes; per-key structure identical).
   *
-  * Emits one `SCALE <op> mult=<m> rows=<n> t=<s> out=<n>` line per
-  * measurement and merges the rows as JSON into SCALE_r10.json (or
-  * `--out <path>`; see [[writeJson]]), which ScaleLinearitySpec gates:
-  * wall-clock growth per 4× step must stay ≤ 1.3× linear and pair
-  * outputs must not blow up super-linearly. Each row also carries the measured SHUFFLE and
-  * SPILL bytes (task metrics, from [[graft.obs.JobProfile]]): byte
-  * counters are immune to the shared-host wall-clock noise (±2× on
-  * repeat runs of identical code),
-  * so a wall-clock wobble with exactly-linear bytes is adjudicated as
-  * machine noise, super-linear bytes as a real plan defect.
-  *
-  * Usage: sbt "runMain graft.ScaleProbe [--out path] [--ops a,b] [--attr]
-  * [mults...]". A family's steps compare rows across the SCALE_r10*.json
-  * files, so re-probe a family whole (every mult those files hold for it)
-  * on one box, never a single row next to rows timed on another host.
+  * Emits one `SCALE <row>` line per measurement ([[Probe.Row]]) and, run
+  * as `graft.Probe scale`, merges the rows into SCALE_r10.json (or
+  * `--out <path>`), which ScaleLinearitySpec gates: wall-clock growth per
+  * 4× step must stay ≤ 1.3× linear and pair outputs must not blow up
+  * super-linearly. Each row also carries the probe's [[Probe.Counters]]
+  * (task metrics, from [[graft.obs.JobProfile]]): byte counters are
+  * immune to the shared-host wall-clock noise (±2× on repeat runs of
+  * identical code), so a wall-clock wobble with exactly-linear bytes is
+  * adjudicated as machine noise, super-linear bytes as a real plan
+  * defect. A family's steps compare rows across the SCALE_r10*.json
+  * files, so re-probe a family whole (every mult those files hold for
+  * it) on one box, never a single row next to rows timed on another host.
   */
 object ScaleProbe {
-  /** `cross` (pair emitters only, else -1): pairs whose endpoints fall in
-    * DIFFERENT replica copies. Copies are mutually unrelated by
-    * construction, so cross-copy pairs are false collisions — the direct
-    * signature of candidate/metric blowup at scale. Quadratic blowup
-    * would put (m-1)/2 × the within-copy mass in `cross` at m copies;
-    * a healthy emitter keeps it ≈ 0. */
-  final case class Result(op: String, mult: Int, rowsIn: Long,
-      wallSec: Double, rowsOut: Long, cross: Long = -1L,
-      shuffleBytes: Long = -1L, spillBytes: Long = -1L,
-      shuffleRead: Long = -1L, shuffleWrite: Long = -1L,
-      retriedTasks: Long = -1L, shuffleRecords: Long = -1L,
-      spillDisk: Long = -1L, taskTimeMs: Long = -1L,
-      cpuTimeMs: Long = -1L, gcTimeMs: Long = -1L, load: Double = -1.0)
-
-  /** The counters of one probe's work, from [[graft.obs.JobProfile]]
-    * (what each field is for):
-    *  - READ and WRITE shuffle bytes separately (r9): write bytes are what
-    *    the plan PRODUCES (one copy per exchange — the honest data-growth
-    *    signal); read bytes additionally count every RE-read — AQE
-    *    skew-split replication of the non-skewed side, retry re-reads
-    *    under spill pressure — so a linear write curve with a super-linear
-    *    read curve localizes the growth to re-reads, not plan shape.
-    *    `shuffleBytes` (read+write) is kept for the standing byte gates.
-    *  - retried: non-first task attempts — nonzero means wall and read
-    *    numbers carry retry inflation.
-    *  - TASK-TIME: wall-clock on a shared host
-    *    wobbles ±2×, and byte counters can't see CPU growth — summed
-    *    executorRunTime is the noise-immune WORK signal that splits "the
-    *    plan computes more at this mult" (runTime super-linear) from "the
-    *    box was busy" (runTime linear, wall inflated). cpu vs run
-    *    separates compute from blocked-on-I/O/GC; gc names
-    *    memory-pressure inflation.
-    *  - spill vs spill_disk: memoryBytesSpilled is an ACCOUNTING metric —
-    *    the estimated in-memory size of data at the moment it spills,
-    *    counted per spill pass — so the legacy memory+disk sum wildly
-    *    overstates disk pressure whenever an exchange targets >200
-    *    partitions (r9 measured 94.6 GB "spill" on a stage that WROTE
-    *    2.47 GB). spill_disk is the serialized bytes that actually hit
-    *    disk — the honest memory-thrash signal the wall-exclusion rule
-    *    keys on.
-    *  - WRITTEN shuffle records: the compression-free data-growth signal
-    *    — compressed bytes conflate codec adjacency (r9: jaccard's verify
-    *    exchange compressed 20× at 32 partitions but only 9× at 205,
-    *    turning exactly-linear records into a 1.76×-of-linear byte
-    *    curve).
-    *
-    * Per-STAGE attribution (`--attr`): the operators
-    * under probe run INTERNAL actions (localCheckpoint materializations,
-    * sizing counts) whose query plans are gone by the final action, so
-    * plan-walking alone can't attribute their bytes — the stage records
-    * can: every stage's name carries the action's callsite ("count at
-    * Dedup.scala:920"). One ATTRSTAGE line per stage with nonzero
-    * shuffle/spill or over 1 s of task time, with the max-vs-median task
-    * run time (r11: max ≫ p50 = one straggling partition, i.e. key skew or
-    * a hot bucket chain; max ≈ p50 with super-linear sum = the whole stage
-    * genuinely computes more per row at this mult). */
-  private def attrStage(tag: String, s: JobProfile.Stage): Unit = {
-    val c = s.counts
-    val (mx, p50) =
-      if (s.taskRunMs.isEmpty) (0L, 0L)
-      else { val a = s.taskRunMs.sorted; (a.last, a(a.length / 2)) }
-    if (c.shuffleReadBytes > 0 || c.shuffleWriteBytes > 0 || c.spillBytes > 0 || c.runMs > 1000)
-      println(s"ATTRSTAGE $tag stage=${s.id} tasks=${c.tasks} " +
-        s"read=${c.shuffleReadBytes} write=${c.shuffleWriteBytes} spill=${c.spillBytes} " +
-        s"spill_disk=${c.spillDiskBytes} records=${c.records} " +
-        s"run_ms=${c.runMs} cpu_ms=${c.cpuMs} gc_ms=${c.gcMs} task_max_ms=$mx task_p50_ms=$p50 " +
-        s"name=${s.name}")
-  }
-
   /** Per-node SQL-metric attribution: walk the
     * EXECUTED adaptive plan of a just-run action and print one line per
     * exchange/sort/join/aggregate node with its byte- and row-valued
@@ -155,56 +82,8 @@ object ScaleProbe {
     walk(df.queryExecution.executedPlan, 0)
   }
 
-  /** A probe main's usage error: the message and usage line, exit 2. */
-  private[graft] def usage(prog: String, msg: String): Nothing = {
-    System.err.println(s"$msg\nusage: graft.$prog [--out <path>] [mult ...]")
-    sys.exit(2)
-  }
-
-  /** A probe main's `--out <path>` (else `dflt`) and its other args. */
-  private[graft] def outArg(prog: String, args: scala.Seq[String],
-      dflt: String): (String, scala.Seq[String]) = {
-    val i = args.indexOf("--out")
-    if (i < 0) (dflt, args)
-    else {
-      if (i + 1 >= args.length) usage(prog, "--out requires a path argument")
-      (args(i + 1), args.patch(i, Nil, 2))
-    }
-  }
-
-  /** A probe main's multipliers, 1 4 16 when none are given. */
-  private[graft] def multArgs(prog: String, args: scala.Seq[String]): scala.Seq[Int] =
-    if (args.isEmpty) scala.Seq(1, 4, 16)
-    else args.map(a => try a.toInt catch { case _: NumberFormatException =>
-      usage(prog, s"multiplier '$a' is not an integer") })
-
-  def main(args: Array[String]): Unit = {
-    val (outPath, rest0) = outArg("ScaleProbe", args.toSeq, "SCALE_r10.json")
-    // --ops a,b,c limits the run to named families (corpora build lazily,
-    // so a targeted 64x point doesn't pay the full-suite 64x cost)
-    val (ops, rest1) = {
-      val i = rest0.indexOf("--ops")
-      if (i >= 0) {
-        if (i + 1 >= rest0.length) usage("ScaleProbe", "--ops requires a comma list")
-        (rest0(i + 1).split(',').map(_.trim).filter(_.nonEmpty).toSet,
-          rest0.patch(i, Nil, 2))
-      } else (Set.empty[String], rest0)
-    }
-    // --attr: after each pair probe, dump per-node SQL metrics of the
-    // executed plan (exchange-level byte attribution)
-    val (attr, rest) = {
-      val i = rest1.indexOf("--attr")
-      if (i >= 0) (true, rest1.patch(i, Nil, 1)) else (false, rest1)
-    }
-    val ms = multArgs("ScaleProbe", rest)
-    val spark = Sessions.get()
-    val results = run(spark, ms, ops, attr)
-    writeJson(outPath, ms, results)
-    spark.stop()
-  }
-
   def run(spark: SparkSession, mults: scala.Seq[Int],
-      ops: Set[String] = Set.empty, attr: Boolean = false): scala.Seq[Result] = {
+      ops: Set[String] = Set.empty, attr: Boolean = false): scala.Seq[Probe.Row] = {
     // Measure the SCALE plan at every mult: with auto-broadcast on, AQE
     // broadcasts corpus-sized relations that happen to fit at small
     // mults (e.g. the jaccard verify's per-doc gid sets at ≤4× — 8 MB)
@@ -216,7 +95,7 @@ object ScaleProbe {
     // size) are unaffected by these thresholds.
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    val sf = "/root/testdata/sf0.1"
+    val sf = Probe.SfDir
     val docsBase = spark.read.parquet(s"$sf/documents.parquet")
     val embBase = spark.read.parquet(s"$sf/embeddings.parquet")
     val evBase = spark.read.parquet(s"$sf/events.parquet")
@@ -314,47 +193,16 @@ object ScaleProbe {
         (col("dst") + lit(k.toLong * 100000000L)).as("dst"))
     }.reduce(_.unionByName(_))
 
-    def time(f: => Long): (Double, Long) = {
-      val t0 = System.nanoTime(); val n = f
-      ((System.nanoTime() - t0) / 1e9, n)
-    }
-
-    // 1-min load average at measurement time, recorded per row (r11):
-    // co-tenant contention on this shared host inflates wall AND cpu
-    // counters up to 4× on identical code (minhash adjudication — four
-    // 64× runs measured 11.3/14.5/23.3/47.9 s with byte-identical
-    // plans); a row with load ≫ the probe's own 32 tasks is untrusted
-    // for wall/task-time purposes, records/bytes stay exact.
-    def loadNow: Double = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean.getSystemLoadAverage
-
-    val profile = JobProfile.attach(spark.sparkContext)
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Result]
-    // runs `f` and hands back what its jobs counted; nothing before it
-    // (corpus materialization, the previous probe) is included
-    def measured[A](op: String, mult: Int)(f: => A): (A, JobProfile.Counts) = {
-      profile.drain().take()
-      val a = f
-      val prof = profile.drain().take()
-      if (attr) prof.stages.foreach(attrStage(s"$op mult=$mult", _))
-      (a, prof.total)
-    }
-    def record(op: String, mult: Int, rowsIn: Long, t: Double, n: Long,
-        cross: Long, c: JobProfile.Counts): Unit = {
-      val (rd, wr) = (c.shuffleReadBytes, c.shuffleWriteBytes)
-      println(f"SCALE $op mult=$mult rows=$rowsIn t=$t%.2f s out=$n" +
-        (if (cross >= 0) s" cross=$cross" else "") + " " +
-        f"shuffle=${rd + wr} spill=${c.spillBytes} read=$rd write=$wr " +
-        f"retried=${c.retried} records=${c.records} spill_disk=${c.spillDiskBytes} " +
-        f"run_ms=${c.runMs} cpu_ms=${c.cpuMs} gc_ms=${c.gcMs}")
-      buf += Result(op, mult, rowsIn, t, n, cross, rd + wr, c.spillBytes,
-        rd, wr, c.retried, c.records, c.spillDiskBytes,
-        c.runMs, c.cpuMs, c.gcMs, loadNow)
-    }
-    def probe(op: String, mult: Int, rowsIn: Long)(f: => Long): Unit = {
+    val buf = scala.collection.mutable.ArrayBuffer.empty[Probe.Row]
+    // measures family `op`'s probe `f`, which returns its output rows and,
+    // for a pair emitter, its cross-copy pairs
+    def record(op: String, mult: Int, rowsIn: Long)(f: => (Long, Option[Long])): Unit = {
       if (ops.nonEmpty && !ops(op)) return
-      val ((t, n), c) = measured(op, mult)(time(f))
-      record(op, mult, rowsIn, t, n, -1L, c)
+      val ((n, cross), wall, prof) = Probe.measured(spark)(f)
+      if (attr) Probe.printProfile(s"$op mult=$mult", wall, prof)
+      val row = Probe.Row(op, mult, rowsIn, wall, n, cross, Some(Probe.Counters.of(prof)))
+      println(s"SCALE ${row.json}")
+      buf += row
       // leaked localCheckpoint blocks from one family otherwise inflate
       // the NEXT family's wall via block-manager memory pressure (the
       // same effect Bench guards per-query); metrics are taken above,
@@ -364,15 +212,16 @@ object ScaleProbe {
       // residue of twelve prior corpora.
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
     }
+    def probe(op: String, mult: Int, rowsIn: Long)(f: => Long): Unit =
+      record(op, mult, rowsIn)((f, None))
     // pair emitters: one aggregation job returns (total, cross-copy)
     // together — replica ids are base_id + copy*1e6, so the copy is
     // recoverable from the pair endpoints
     def probePairs(op: String, mult: Int, rowsIn: Long)
         (f: => DataFrame): Unit = {
-      if (ops.nonEmpty && !ops(op)) return
-      val ((t, aggDf, row), c) = measured(op, mult) {
-        val t0 = System.nanoTime()
-        val aggDf = f.agg(
+      var aggDf: DataFrame = null
+      record(op, mult, rowsIn) {
+        aggDf = f.agg(
           count(lit(1)).as("n"),
           coalesce(sum(when(floor(col("id_a") / 1000000L) =!=
             floor(col("id_b") / 1000000L), 1L).otherwise(0L)), lit(0L))
@@ -381,11 +230,9 @@ object ScaleProbe {
         // SEPARATE execution, so dumpPlanMetrics below would walk a plan
         // whose metrics never populated (r10: silent empty ATTR dump)
         val row = aggDf.collect()(0)
-        ((System.nanoTime() - t0) / 1e9, aggDf, row)
+        (row.getLong(0), Some(row.getLong(1)))
       }
-      record(op, mult, rowsIn, t, row.getLong(0), row.getLong(1), c)
-      if (attr) dumpPlanMetrics(op, mult, aggDf)
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      if (attr && aggDf != null) dumpPlanMetrics(op, mult, aggDf)
     }
 
     mults.foreach { mult =>
@@ -562,74 +409,5 @@ object ScaleProbe {
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
     }
     buf.toSeq
-  }
-
-  /** One artifact row, rendered on one line (the merge in [[mergeJson]]
-    * reads rows back line by line). */
-  private def rowJson(r: Result): String = {
-    val cross = if (r.cross >= 0) s""","cross_pairs":${r.cross}""" else ""
-    val bytes =
-      if (r.shuffleBytes >= 0)
-        s""","shuffle_bytes":${r.shuffleBytes},"spill_bytes":${r.spillBytes}""" +
-        s""","shuffle_read":${r.shuffleRead},"shuffle_write":${r.shuffleWrite}""" +
-        s""","retried_tasks":${r.retriedTasks},"shuffle_records":${r.shuffleRecords}""" +
-        (if (r.spillDisk >= 0) s""","spill_disk":${r.spillDisk}""" else "") +
-        (if (r.taskTimeMs >= 0)
-          s""","task_time_ms":${r.taskTimeMs},"cpu_time_ms":${r.cpuTimeMs}""" +
-          s""","gc_time_ms":${r.gcTimeMs}""" +
-          f""","load":${r.load}%.1f"""
-         else "")
-      else ""
-    f"""{"op":"${r.op}","mult":${r.mult},"rows_in":${r.rowsIn},""" +
-      f""""wall_s":${r.wallSec}%.3f,"rows_out":${r.rowsOut}$cross$bytes}"""
-  }
-
-  /** The header `mults` and the rows, each keyed by `(op, mult)` with its
-    * text exactly as written, of an artifact [[mergeJson]] made; empty
-    * when `path` does not exist. */
-  private def readRows(path: String): (scala.Seq[Int], scala.Seq[((String, Int), String)]) = {
-    val f = new java.io.File(path)
-    if (!f.exists) return (Nil, Nil)
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.readTree(f)
-    val src = scala.io.Source.fromFile(f, "UTF-8")
-    val rows = try src.getLines().map(_.trim).filter(_.startsWith("{\"op\"")).map { l =>
-      val raw = l.stripSuffix(",")
-      val n = mapper.readTree(raw)
-      (n.get("op").asText, n.get("mult").asInt) -> raw
-    }.toList finally src.close()
-    require(rows.size == root.get("results").size,
-      s"$path: results are not one row per line; refusing to merge into it")
-    val ms = root.get("mults")
-    ((0 until ms.size).map(ms.get(_).asInt), rows)
-  }
-
-  /** Writes `results` to `path`, merged by [[mergeJson]]. */
-  def writeJson(path: String, mults: scala.Seq[Int],
-      results: scala.Seq[Result]): Unit = {
-    mergeJson(path, mults, results.map(r => (r.op, r.mult) -> rowJson(r)))
-    println(s"SCALE_JSON written to $path")
-  }
-
-  /** Writes one-line `(op, mult)`-keyed rows to `path`, merging into the
-    * artifact already there: a row whose `(op, mult)` this run measured
-    * replaces the old row in place, every other row is kept byte for
-    * byte, rows new to the file follow them, and the header's `mults`
-    * becomes the union. A family's steps compare rows across mults (and,
-    * for ScaleProbe, across the SCALE_r10*.json files), so a targeted
-    * `--ops <op> 64` or StreamProbe `64` run must not drop the other rows. */
-  private[graft] def mergeJson(path: String, mults: scala.Seq[Int],
-      fresh: scala.Seq[((String, Int), String)]): Unit = {
-    val (oldMults, oldRows) = readRows(path)
-    val byKey = fresh.toMap
-    val oldKeys = oldRows.map(_._1).toSet
-    val rows = oldRows.map { case (k, raw) => byKey.getOrElse(k, raw) } ++
-      fresh.filterNot { case (k, _) => oldKeys(k) }.map(_._2)
-    val allMults = (oldMults ++ mults).distinct.sorted
-    val body =
-      s"""{"sf":"sf0.1","mults":[${allMults.mkString(",")}],"results":[\n  """ +
-        rows.mkString(",\n  ") + "\n]}\n"
-    val w = new java.io.PrintWriter(path)
-    try w.print(body) finally w.close()
   }
 }

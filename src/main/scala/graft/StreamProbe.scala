@@ -25,24 +25,18 @@ import org.apache.spark.sql.functions._
   *  - `interval_join`: watermarked click→purchase stream-stream join
   *    within 1 h
   *
-  * Per point it records wall, rows in/out, BATCHES, and the PEAK
-  * state-store row count across all micro-batches
-  * (StreamingQueryProgress.stateOperators.numRowsTotal — the scale
-  * verdict signal: peak state must track the instantaneous open-state
-  * horizon, NOT the stream length). StreamScaleSpec gates peak-state
-  * flatness and rows-out linearity; walls are recorded for the
-  * protocol but not gated (micro-batch overhead dominates at small
-  * mults and the shared box wobbles ±2×).
-  *
-  * Usage: sbt "runMain graft.StreamProbe [--out path] [mult ...]"
-  * (defaults: STREAMSCALE_r10.json, mults 1 4 16). Rows merge into the
-  * `--out` file like ScaleProbe's: the measured `(op, mult)` rows are
-  * replaced, every other row is kept.
+  * Per point it records one [[Probe.Row]]: wall and the [[Probe.Counters]]
+  * of the streaming query alone (not staging, not the output count),
+  * rows in/out, BATCHES, and the PEAK state-store row count across all
+  * micro-batches (StreamingQueryProgress.stateOperators.numRowsTotal —
+  * the scale verdict signal: peak state must track the instantaneous
+  * open-state horizon, NOT the stream length). StreamScaleSpec gates
+  * peak-state flatness and rows-out linearity; walls are recorded for
+  * the protocol but not gated (micro-batch overhead dominates at small
+  * mults and the shared box wobbles ±2×). Run as `graft.Probe stream`,
+  * which merges the rows into STREAMSCALE_r10.json (or `--out <path>`).
   */
 object StreamProbe {
-  final case class Result(op: String, mult: Int, rowsIn: Long,
-      wallSec: Double, rowsOut: Long, batches: Long, maxStateRows: Long,
-      droppedByWatermark: Long)
 
   /** Stage `mult` time-shifted copies of events as 4 chronological
     * files each, mod times ascending across the whole sequence. */
@@ -94,7 +88,7 @@ object StreamProbe {
 
   private def runShape(s: SparkSession, src: String, op: String,
       mult: Int, rowsIn: Long)(
-      build: (SparkSession, DataFrame) => DataFrame): Result = {
+      build: (SparkSession, DataFrame) => DataFrame): Probe.Row = {
     val ss = s.newSession()
     ss.conf.set("spark.sql.shuffle.partitions", "8")
     val sink = java.nio.file.Files
@@ -105,14 +99,15 @@ object StreamProbe {
     val stream = ss.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(src)
     val out = build(ss, stream)
-    val t0 = System.nanoTime()
-    val q = out.writeStream.format("parquet")
-      .option("path", sink).option("checkpointLocation", ckpt)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val wall = (System.nanoTime() - t0) / 1e9
+    val (q, wall, prof) = Probe.measured(ss) {
+      val q = out.writeStream.format("parquet")
+        .option("path", sink).option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      q
+    }
     // recentProgress retains only the last ~100 entries, so peak state
     // is a lower bound past ~100 batches (state is monotone-bounded
     // here, so the tail window still witnesses the plateau); the batch
@@ -126,21 +121,19 @@ object StreamProbe {
     val batches = Option(q.lastProgress).map(_.batchId + 1)
       .getOrElse(progs.length.toLong)
     val rowsOut = s.read.parquet(sink).count()
-    val r = Result(op, mult, rowsIn, wall, rowsOut, batches,
-      maxState, dropped)
-    println(f"STREAMSCALE ${r.op} mult=${r.mult} rows=${r.rowsIn} " +
-      f"t=${r.wallSec}%.2f out=${r.rowsOut} batches=${r.batches} " +
-      f"max_state=${r.maxStateRows} dropped=${r.droppedByWatermark}")
-    r
+    val row = Probe.Row(op, mult, rowsIn, wall, rowsOut,
+      counters = Some(Probe.Counters.of(prof)),
+      stream = Some(Probe.StreamStats(batches, maxState, dropped)))
+    println(s"STREAMSCALE ${row.json}")
+    row
   }
 
-  def run(spark: SparkSession, dir: String,
-      mults: scala.Seq[Int]): scala.Seq[Result] = {
+  def run(spark: SparkSession, mults: scala.Seq[Int]): scala.Seq[Probe.Row] = {
     val base = new java.io.File(
       sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_streamprobe")
     base.mkdirs()
     mults.flatMap { m =>
-      val src = stageEvents(spark, dir, m, base)
+      val src = stageEvents(spark, Probe.SfDir, m, base)
       val rowsIn = 100000L * m
       val sess = runShape(spark, src, "session_agg", m, rowsIn) { (ss, st) =>
         st.withWatermark("ts", "30 minutes")
@@ -179,29 +172,5 @@ object StreamProbe {
       }
       scala.Seq(sess, join, ttl)
     }
-  }
-
-  /** Writes `rs` to `path`, merging into the artifact already there
-    * ([[ScaleProbe.mergeJson]]): a targeted `64` run keeps the other
-    * mults' rows StreamScaleSpec gates. */
-  def writeJson(path: String, mults: scala.Seq[Int],
-      rs: scala.Seq[Result]): Unit = {
-    ScaleProbe.mergeJson(path, mults, rs.map { r =>
-      (r.op, r.mult) -> (s"""{"op":"${r.op}","mult":${r.mult},"rows_in":${r.rowsIn},""" +
-        f""""wall_s":${r.wallSec}%.3f,"rows_out":${r.rowsOut},""" +
-        s""""batches":${r.batches},"max_state_rows":${r.maxStateRows},""" +
-        s""""dropped_by_watermark":${r.droppedByWatermark}}""")
-    })
-    println(s"wrote $path")
-  }
-
-  def main(args: Array[String]): Unit = {
-    val (outPath, rest) = ScaleProbe.outArg("StreamProbe", args.toSeq,
-      "STREAMSCALE_r10.json")
-    val mults = ScaleProbe.multArgs("StreamProbe", rest)
-    val spark = Sessions.get()
-    val results = run(spark, "/root/testdata/sf0.1", mults)
-    writeJson(outPath, mults, results)
-    spark.stop()
   }
 }

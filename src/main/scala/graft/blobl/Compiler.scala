@@ -208,14 +208,16 @@ object Compiler {
     case LitArray(items) =>
       val cs = items.map(compile(_, ctx))
       val et = cs.map(_.tpe).reduceOption(unify).flatten
+      // an element's error is the literal's: `[., error("x")]` errors
+      val err = cs.map(_.err).reduceOption(TC.mergeErr).flatten
       if (et.isEmpty && cs.nonEmpty && cs.map(_.tpe).distinct.sizeIs > 1)
         // heterogeneous literal array (`[foo, 5]`): the dynamic engines
         // keep per-element types — element-wise variant instead of the
         // lowest-common-denominator string coercion array() would apply
         TC(array(cs.map(c => asVariant(c.col, c.tpe.getOrElse(StringType))): _*),
-          Some(ArrayType(VariantType)))
+          Some(ArrayType(VariantType)), err)
       else
-        TC(array(cs.map(_.col): _*), Some(ArrayType(et.getOrElse(StringType))))
+        TC(array(cs.map(_.col): _*), Some(ArrayType(et.getOrElse(StringType))), err)
     case LitObject(fields) =>
       val named = fields.map {
         case (LitString(k), v) => (k, compile(v, ctx))
@@ -224,7 +226,7 @@ object Compiler {
       TC(struct(named.map { case (k, v) => v.col.as(k) }: _*),
         Some(StructType(named.map { case (k, v) =>
           StructField(k, v.tpe.getOrElse(StringType))
-        })))
+        })), named.map(_._2.err).reduceOption(TC.mergeErr).flatten)
     case This => ctx.thisTC
     case VarRef(n) =>
       ctx.vars.getOrElse(n, throw CompileError(s"unknown variable $$$n"))

@@ -5,10 +5,10 @@ import org.apache.spark.scheduler._
 import scala.collection.mutable
 
 /** The engine's one `SparkListener`: what every Spark job and stage did,
-  * counted from task-end events. QProf (per-job table), ScaleProbe
-  * (per-probe totals and per-stage attribution) and `runtime.Tracing`
-  * (job spans under the pipeline root) all read it; none keeps a listener
-  * of its own.
+  * counted from task-end events. `graft.Probe` (per-job and per-stage
+  * tables, per-probe totals, through `Probe.measured`) and
+  * `runtime.Tracing` (job spans under the pipeline root) read it; neither
+  * keeps a listener of its own.
   *
   * Events reach listeners asynchronously. [[drain]] blocks until every
   * event posted so far has been delivered, so a reader that calls it

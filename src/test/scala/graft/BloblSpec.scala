@@ -264,4 +264,10 @@ class BloblSpec extends AnyFunSuite {
       """{"s":"abcdef"}""")
       == List("""{"r":[0,2,4],"l":6}"""))
   }
+
+  test("an array literal carries its elements' errors") {
+    val env = graft.model.Envelope.wrapUnordered(jdf("""{"n":1}"""))
+    val out = graft.ops.BloblangProc("""root.a = [this.n, throw("x")]""")(env)
+    assert(out.select(col(graft.model.Envelope.Error)).head().getString(0) == "x")
+  }
 }

@@ -757,6 +757,23 @@ class JqSpec extends AnyFunSuite {
       == "caught")
   }
 
+  /** The document and `_error` of `query` on one row. */
+  def outErr(query: String, row: String): (String, String) = {
+    val out = JqProc(query)(Envelope.wrapUnordered(jdf(row)))
+    val r = out.select(to_json(col(Envelope.Doc)), col(Envelope.Error)).head()
+    (r.getString(0), r.getString(1))
+  }
+
+  test("an array literal carries its elements' errors (gojq raises)") {
+    assert(outErr(""".n | [., error("x")]""", """{"n":1}""")._2 == "x")
+    // (both try branches must share a type: the catch value is an array too)
+    assert(run(""".s | try [., error("x")] catch ["fell"]""", """{"s":"a"}""") == """["fell"]""")
+  }
+
+  test("an object literal carries its fields' errors (gojq raises)") {
+    assert(outErr("""{a: error("x")}""", """{"n":1}""")._2 == "x")
+  }
+
   test("del with a trailing array index removes that position") {
     // (spark.read.json field order is alphabetical: k before xs)
     assert(run("""del(.xs[1])""", """{"xs":[1,2,3],"k":9}""")

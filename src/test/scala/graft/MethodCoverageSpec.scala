@@ -113,4 +113,23 @@ class MethodCoverageSpec extends AnyFunSuite {
       assert(rows(spark.read.parquet(s"$base/de")) == scala.Seq(scala.Seq(2L, "de", "zwei")))
     }
   }
+
+  test("COVERAGE.md names only registered queries and existing specs") {
+    val doc = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("COVERAGE.md")), "UTF-8")
+    // a query key is `q<N>_<name>`; the document cites `qN` and `qN-qM`
+    val registered = SparkEntry.queries.keySet.map(_.takeWhile(_ != '_'))
+    val cited = """\bq(\d+)(?:\s*-\s*q(\d+))?\b""".r.findAllMatchIn(doc).flatMap { m =>
+      val lo = m.group(1).toInt
+      (lo to Option(m.group(2)).fold(lo)(_.toInt)).map(n => s"q$n")
+    }.toSet
+    assert(cited.size > 50)
+    assert(cited -- registered == Set.empty, "gates that name no registered query")
+    val specs = """\b[A-Z]\w*Spec\b""".r.findAllIn(doc).toSet
+    assert(specs.size > 20)
+    assert(specs.filterNot(s => new java.io.File(s"src/test/scala/graft/$s.scala").exists)
+      == Set.empty, "specs that are no test file")
+    // ops/CacheOps.scala cites this section for the awk json codec
+    assert(doc.contains("## Documented divergences") && doc.contains("- awk json codec:"))
+  }
 }

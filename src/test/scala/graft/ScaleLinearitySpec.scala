@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Gates the committed scale-probe artifacts (SCALE_r10.json at sf0.1 ×
   * {1,4,16}, plus SCALE_r10_64x.json and SCALE_r10_256x.json for the
-  * families probed deeper, all produced by [[ScaleProbe]] on an idle
+  * families probed deeper, all produced by `graft.Probe scale` on an idle
   * box): wall-clock per 4× data step must stay within LINEAR_SLACK of
   * linear for every probed operator family, the fitted log-log
   * wall-vs-mult slope must stay ≤ SLOPE_MAX (the trend gate — stepwise
@@ -22,7 +22,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * The artifacts are committed rather than re-measured per test run: the
   * probe takes minutes at 16× and timing under sbt-test co-scheduling
   * is meaningless. Re-generate with
-  * `sbt "runMain graft.ScaleProbe"` after touching any probed operator.
+  * `sbt "runMain graft.Probe scale"` after touching any probed operator.
   * A family's steps compare rows across the three files, so regenerate a
   * family WHOLE, every mult the files hold for it, on one box: e.g.
   * `--ops <op> --out SCALE_r10.json 1 4 16`, then `--ops <op> --out
@@ -78,7 +78,7 @@ class ScaleLinearitySpec extends AnyFunSuite {
 
   private lazy val points: Seq[P] = {
     val f = new java.io.File("SCALE_r10.json")
-    assert(f.exists, "SCALE_r10.json missing — run `sbt \"runMain graft.ScaleProbe\"`")
+    assert(f.exists, "SCALE_r10.json missing — run `sbt \"runMain graft.Probe scale\"`")
     // the worst-growing families carry an extra 64× point (probed with
     // --ops so the full suite doesn't pay 64× corpus cost); merging it
     // here puts the deeper tail under the same step + slope gates

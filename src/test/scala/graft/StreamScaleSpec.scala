@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Gates the committed STREAMING scale artifact (STREAMSCALE_r10.json,
-  * produced by [[StreamProbe]]: the sf0.1 events corpus time-shifted to
+  * produced by `graft.Probe stream`: the sf0.1 events corpus time-shifted to
   * 1×/4×/16× its length — per-hour density constant, stream LONGER,
   * the unbounded-stream deployment shape). The scale verdict signal is
   * PEAK STATE-STORE ROWS across all micro-batches
@@ -16,15 +16,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * small mults and the shared box wobbles ±2× (measured 109 s vs 36 s
   * for identical 16× runs under load).
   *
-  * Re-generate with `sbt "runMain graft.StreamProbe"` after touching
+  * Re-generate with `sbt "runMain graft.Probe stream"` after touching
   * the streaming operators.
   */
-class StreamScaleSpec extends AnyFunSuite {
-
-  private case class P(op: String, mult: Int, rowsIn: Long, wall: Double,
+object StreamScaleSpec {
+  case class P(op: String, mult: Int, rowsIn: Long, wall: Double,
       out: Long, batches: Long, maxState: Long, dropped: Long)
 
-  private def readPoints(f: java.io.File): Seq[P] = {
+  /** The artifact's rows, read by field name. */
+  def readPoints(f: java.io.File): Seq[P] = {
     val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
     val rs = root.get("results")
     (0 until rs.size).map { i =>
@@ -35,6 +35,10 @@ class StreamScaleSpec extends AnyFunSuite {
         r.get("dropped_by_watermark").asLong)
     }
   }
+}
+
+class StreamScaleSpec extends AnyFunSuite {
+  import StreamScaleSpec._
 
   private lazy val points = {
     val f = new java.io.File("STREAMSCALE_r10.json")
